@@ -72,31 +72,26 @@ HEADLINE = [
 # top-N cut. Checked against the catalog at startup — a stale name
 # here fails loudly instead of silently guarding nothing.
 CHANGED_THIS_ROUND = [
-    # round 18 OPTIMIZATION (see OPTIMIZATION_r18.md) — reset per the
-    # r17 verdict ask #9 (only entries whose code paths changed THIS
-    # round; the headline set itself is unchanged):
-    # HNSW walk family — compact edge-artifact checkpoint, shared
-    # query-batch collect, ring-distinct removal + struct-min argmin,
-    # deliberate hop-join build sides (edges_size_hint gate), layer-1
-    # probe checkpoint removal
-    "hnsw_knn",
-    "hnsw_adc_knn",
-    "graph_greedy_search",
-    # connected components — first block is one confirmation round
-    # (no pointer doubling) so the common already-converged case pays
-    # one O(E) join pass instead of three
-    "dedup_groups",
-    "dedup_keep_canonical",
-    # ADC serving family — driver-routing budget guard (nq x NC x D
-    # term cap with distributed route_queries fallback); at bench
-    # scale the path is bit-identical driver routing, pinned here per
-    # the guard-change precedent
+    # one IVF/PQ/BQ serving seam: one per-cell scan (flat gemm / ADC
+    # scorer x top-k / radius cut), one ADC lookup-table routine, one
+    # exact re-score, one rotation, one opener and routed join
+    "ivf_knn",
+    "ivf_filtered_knn",
+    "ivf_range",
+    "knn_range",
     "ivf_adc_knn",
     "ivf_adc_range",
     "ivf_adc_knn_refined",
     "ivf_adc_range_refined",
     "ivf_adc_margin_check",
     "adc_refine_curve",
+    "pq_adc_knn",
+    "pq_sdc_pairs",
+    "pq_refine_knn",
+    "opq_adc_knn",
+    "bq_hamming_knn",
+    "bq_rotated_knn",
+    "hnsw_adc_knn",
 ]
 
 TOP_N = 20

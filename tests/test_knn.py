@@ -410,21 +410,25 @@ def test_bq_rotated_identity_equals_plain_and_recall(spark):
 def test_bq_rotate_excludes_null_vectors(spark):
     """rotate() must apply the multimodal NULL-exclusion policy: NULL
     embeddings are dropped up front instead of np.vstack exploding
-    with an opaque error inside the Arrow batch."""
-    from vector_search_spark.operators import bq
+    with an opaque error inside the Arrow batch. pq.rotate wraps the
+    same kernel and inherits the policy."""
+    from vector_search_spark.operators import bq, pq
 
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, None), (3, [0.0, 2.0])],
         "vec_id long, embedding array<double>",
     )
     R = bq.random_rotation(2, seed=3)
-    out = bq.rotate(df, R).orderBy("vec_id").collect()
-    assert [r.vec_id for r in out] == [1, 3]
     import numpy as np
 
-    got = np.array([r.rot for r in out])
     want = np.array([[1.0, 0.0], [0.0, 2.0]]) @ R.T
-    assert np.allclose(got, want)
+    for out, col in (
+        (bq.rotate(df, R), "rot"),
+        (pq.rotate(df, R), "rotated"),
+    ):
+        rows = out.orderBy("vec_id").collect()
+        assert [r.vec_id for r in rows] == [1, 3]
+        assert np.allclose(np.array([r[col] for r in rows]), want)
 
 
 # --- semi-hard negative mining (operators/knn.py) -------------------------

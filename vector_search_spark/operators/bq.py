@@ -26,10 +26,13 @@ XOR+popcount per 64 dims — noise next to the scan savings.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-from vector_search_spark.functions.distance import as_double_array, l2_sqr
+from vector_search_spark.functions.distance import as_double_array
+from vector_search_spark.operators.knn import topk_per_query
 
 __all__ = [
     "encode_bits",
@@ -137,44 +140,32 @@ def bq_refine_topk(
     pq.refine_topk). Returns (query_id, vec_id, hamming, dist, rank)
     with rank <= k by exact distance.
 
-    The exact stage joins ``nq * shortlist`` shortlist rows back to the
-    base vectors — independent of N, so the full-fidelity data is
-    touched only where it matters.
+    The exact stage is :func:`ivf._exact_rescore`: it joins the
+    ``nq * shortlist`` shortlist rows back to the base vectors —
+    independent of N, so the full-fidelity data is touched only where
+    it matters.
     """
-    from pyspark.sql import Window
+    from vector_search_spark.operators.ivf import _exact_rescore
 
-    n_words = dim // WORD_BITS
-    qb = encode_bits(
-        queries.select(
-            F.col(query_id), F.col(vec_col).alias("_qv")
-        ),
-        dim,
-        vec_col="_qv",
-    )
+    qb = encode_bits(queries.select(query_id, vec_col), dim, vec_col=vec_col)
     bb = encode_bits(base.select(base_id, vec_col), dim, vec_col=vec_col)
     short = hamming_topk(
-        qb, bb, n_words, shortlist, query_id=query_id, base_id=base_id
-    ).select(query_id, base_id, "hamming")
-    rescored = (
-        short.join(base.select(base_id, vec_col), base_id)
-        .join(
-            F.broadcast(
-                qb.select(query_id, as_double_array("_qv").alias("_qv"))
-            ),
-            query_id,
-        )
-        .select(
-            query_id,
-            base_id,
-            "hamming",
-            l2_sqr(F.col("_qv"), as_double_array(vec_col)).alias("dist"),
-        )
+        qb, bb, dim // WORD_BITS, shortlist, query_id=query_id,
+        base_id=base_id,
+    ).select(
+        F.col(query_id).alias("query_id"),
+        F.col(base_id).alias("vec_id"),
+        "hamming",
     )
-    w = Window.partitionBy(query_id).orderBy("dist", base_id)
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    rescored = _exact_rescore(
+        short, queries, base, query_id, vec_col, base_id, vec_col
+    ).select(
+        F.col("query_id").alias(query_id),
+        F.col("vec_id").alias(base_id),
+        "hamming",
+        "dist",
     )
+    return topk_per_query(rescored, k, group_col=query_id, id_col=base_id)
 
 
 def random_rotation(dim: int, seed: int = 42):
@@ -188,10 +179,10 @@ def random_rotation(dim: int, seed: int = 42):
     orthogonal transform' step of RaBitQ, Gao & Long, SIGMOD 2024):
     raw sign bits waste capacity on low-variance coordinates; a random
     rotation spreads every vector's energy evenly across dimensions,
-    so each of the D bits carries ~equal information.
+    so each of the D bits carries ~equal information. The same matrix
+    balances variance across PQ subspaces (OPQ's random-rotation
+    mode), which is why ``pq.random_rotation`` re-exports it.
     """
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     A = rng.standard_normal((dim, dim))
     Q, R = np.linalg.qr(A)
@@ -206,17 +197,8 @@ def rotate(
 ) -> DataFrame:
     """Append ``out_col`` = x @ R^T: one broadcast D x D gemm per Arrow
     batch (the pca.project shape) — the rotation is model-sized, the
-    pass is embarrassingly parallel, and no other column moves."""
-    import numpy as np
-    import pandas as pd  # noqa: F401 — mapInPandas batch frames
-
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        StructField,
-        StructType,
-    )
-
+    pass is embarrassingly parallel, and no other column moves. The
+    repo's one rotate kernel: ``pq.rotate`` wraps it."""
     clash = {"_v", out_col} & set(points.columns) - {vec_col}
     if clash:
         raise ValueError(

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from vector_search_spark.functions.distance import as_double_array, l2_sqr
 from vector_search_spark.functions.fanout import coalesce_small
-from vector_search_spark.operators import knn
+from vector_search_spark.operators import knn, pq
 
 __all__ = [
     "route_to_cells",
@@ -815,18 +815,18 @@ def _broadcast_adc_scorer(
     candidates to their CODES and sums M LUT gathers per row — the
     walk never touches the raw vector table, which is the point: at
     100 TB the code table is ~D*8/M x smaller than the vectors, and
-    the LUT broadcast is nq x M x K doubles (model-sized). Distances
-    are in ADC space; compose with :func:`ivf._exact_rescore` /
-    ``pq.refine_topk`` for true-metric output, exactly as with every
-    other ADC path.
+    the LUT broadcast is nq x M x K doubles (model-sized), built by
+    ``pq._adc_lut`` like every other ADC path. Distances are in ADC
+    space; compose with :func:`ivf._exact_rescore` (which
+    ``pq.refine_topk`` re-scores through) for true-metric output.
 
     CONTRACT — codes ⊇ graph nodes: every node the walk can reach
     (entry point, seeds, every edge endpoint) must have a code. The
     default inner join silently DROPS an uncoded frontier node from
     the walk — and codes and the graph are INDEPENDENTLY maintained
     artifacts, so a partial code refresh shrinks the search instead of
-    failing (r16 advisor: the same silent-shrink class strict=True
-    made loud on the refined family). ``strict=True`` left-joins and
+    failing (the same silent-shrink class strict=True makes loud on
+    the refined family). ``strict=True`` left-joins and
     raises IN-PLAN on the first candidate with no code, mirroring
     :func:`ivf._exact_rescore`."""
     spark = codes.sparkSession
@@ -837,23 +837,9 @@ def _broadcast_adc_scorer(
     )
     if not len(qpdf):
         raise ValueError("empty query set")
-    m, kcent, dsub = model.codebooks.shape
     qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-    Q = (
-        np.vstack(qpdf["qv"].to_numpy())
-        .astype(np.float64)
-        .reshape(len(qpdf), m, dsub)
-    )
-    lut = np.empty((len(qids), m, kcent))
-    for mi in range(m):
-        Qm, Cm = Q[:, mi, :], model.codebooks[mi]
-        lut[:, mi, :] = (
-            (Qm * Qm).sum(axis=1)[:, None]
-            + (Cm * Cm).sum(axis=1)[None, :]
-            - 2.0 * (Qm @ Cm.T)
-        )
-    np.maximum(lut, 0.0, out=lut)  # cancellation clamp, as pq.adc_topk
-    bc = spark.sparkContext.broadcast((qids, lut))
+    Q = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
+    bc = spark.sparkContext.broadcast((qids, pq._adc_lut(model.codebooks, Q)))
     base = codes.select(
         F.col(id_col).alias("vec_id"), F.col(code_col).alias("_c")
     )
@@ -888,14 +874,12 @@ def _broadcast_adc_scorer(
             )
 
         def fn(batches):
-            from vector_search_spark.operators import pq as _pq
-
             b_qids, b_lut = bc.value
             pos = {int(q): i for i, q in enumerate(b_qids)}
             for pdf in batches:
                 if not len(pdf):
                     continue
-                cm = _pq._code_matrix(pdf["_c"])
+                cm = pq._code_matrix(pdf["_c"])
                 qi = np.array(
                     [pos[int(q)] for q in pdf["query_id"]], dtype=np.int64
                 )

@@ -8,19 +8,31 @@ with *data layout*: base vectors are assigned to a coarse k-means cell
 and stored partitioned by ``cluster_id``; a query is routed to its
 ``nprobe`` nearest cells and only those partitions are scanned.
 
-Scale shape (the part that matters at 100 TB):
+Every serving function here is one pipeline, written once:
 
-- the coarse centroid model is tiny (NC x D doubles) — broadcast;
-- routing is queries x centroids (broadcast) + window top-nprobe —
-  negligible;
-- the candidate scan is ``base.filter(cluster_id IN routed)``: over a
-  parquet layout partitioned by ``cluster_id`` this is *partition
-  pruning* — Catalyst never reads the other cells' files (see
-  tests/test_plans.py: PartitionFilters);
-- scoring within the routed cells is an equi-join on ``cluster_id``
-  (broadcast routes) + the Catalyst distance fold, or the BLAS
-  ``mapInPandas`` path for heavy workloads — either way the shuffle
-  only ever carries ~k rows per (query, probed cell).
+1. **route** — each query's ``nprobe`` nearest coarse centroids. The
+   centroid model is tiny (NC x D doubles): :func:`route_queries` is a
+   broadcast cross join + window rank; the ADC paths replay the same
+   fold on the driver while ``VSS_ADC_DRIVER_ROUTE_TERMS`` allows
+   (:func:`_route_batch`).
+2. **score** — only the routed cells: ``base.filter(cluster_id IN
+   routed)`` over a parquet layout partitioned by ``cluster_id`` is
+   *partition pruning* (Catalyst never reads the other cells' files;
+   tests/test_plans.py asserts PartitionFilters). Flat vectors are
+   scored either by the Catalyst distance fold over a broadcast routed
+   join (:func:`_routed_scores`) or by BLAS gemm; PQ codes by ADC
+   lookup-table gathers (``pq._adc_lut``). Both gemm and ADC run in
+   the one per-cell ``mapInPandas`` scan, :func:`_cell_scan`.
+3. **cut** — top-k (per-tile partial top-k, ``pq._topk_rows``, then
+   the exact ``topk_per_query`` window) or radius (a row-local
+   ``dist <= radius`` filter that streams out with no shuffle).
+4. **re-score** (optional) — the ``*_refined`` forms join the ADC
+   survivors back to the raw vectors and re-rank with exact L2
+   (:func:`_exact_rescore`, FAISS ``IndexIVFPQ`` + ``IndexRefine``).
+
+The persisted one-calls (:func:`search_index`, :func:`range_index`,
+:func:`adc_search_index`, :func:`adc_range_index`) open the written
+artifacts through :func:`_open_index` and run the same pipeline.
 
 Recall is governed by nprobe/NC exactly as in FAISS-style IVF-Flat;
 nprobe == NC degenerates to exact brute force (tests assert recall
@@ -30,6 +42,7 @@ bounds and the equivalence).
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -38,7 +51,8 @@ from pyspark.sql import functions as F
 
 from vector_search_spark.functions.distance import as_double_array, distance
 from vector_search_spark.operators import kmeans
-from vector_search_spark.operators.knn import topk_per_query
+from vector_search_spark.operators import pq as _pq
+from vector_search_spark.operators.knn import _gemm_batch_dists, topk_per_query
 
 
 def assign_clusters(
@@ -111,6 +125,191 @@ def route_queries(
     )
 
 
+def _routed_scores(
+    queries: DataFrame,
+    assigned_base: DataFrame,
+    centroids: np.ndarray,
+    nprobe: int,
+    metric: str,
+    query_id_col: str,
+    query_vec_col: str,
+    base_id_col: str,
+    base_vec_col: str,
+    cluster_col: str,
+    broadcast: bool = True,
+) -> DataFrame:
+    """The routed candidate join: ``(query_id, vec_id, dist)`` for every
+    base row in each query's routed cells, scored by the Catalyst
+    distance fold. Base rows equi-join the (query_id, cluster_id)
+    routes on the cell — Catalyst turns that into partition pruning on
+    a partitioned layout — then the query vectors on ``query_id``.
+    ``broadcast`` hints both the query side and the routes (nq x
+    nprobe rows, bounded exactly when the query batch is)."""
+    routes = route_queries(
+        queries, centroids, nprobe, query_id_col, query_vec_col
+    ).withColumnRenamed("cluster_id", "_cell")
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        as_double_array(query_vec_col).alias("_qv"),
+    )
+    if broadcast:
+        q, routes = F.broadcast(q), F.broadcast(routes)
+    return (
+        assigned_base.select(
+            F.col(base_id_col).alias("vec_id"),
+            as_double_array(base_vec_col).alias("_bv"),
+            F.col(cluster_col).alias("_cell"),
+        )
+        .join(routes, "_cell")
+        .join(q, "query_id")
+        .select(
+            "query_id",
+            "vec_id",
+            distance(metric, "_qv", "_bv").alias("dist"),
+        )
+    )
+
+
+def _route_batch(
+    queries: DataFrame,
+    centroids: np.ndarray,
+    nprobe: int,
+    query_id_col: str,
+    query_vec_col: str,
+    driver_routing: bool,
+):
+    """Collect the caller-bounded query batch and route it: ``(qids,
+    Q, cells)`` with ``cells = {cell: ascending positions (into qids)
+    of the queries routed there}``.
+
+    ``driver_routing`` replays :func:`route_queries` on the driver
+    while nq x NC x D <= ``VSS_ADC_DRIVER_ROUTE_TERMS`` (default 2e6
+    terms, about 0.6 s — below the ~1 s the distributed pass costs at
+    bench scale; <= 0 lifts the cap): the distance loop repeats the
+    Catalyst l2 fold's sequential index-order sum exactly (same IEEE
+    adds in the same order) and ties break by ascending cluster_id like
+    route_queries' window, so membership is bit-identical and the
+    distributed broadcast + window job is saved. The loop is
+    interpreted Python (~300 ns per term) and NC grows with the corpus,
+    so above the cap — and always without ``driver_routing`` — the
+    distributed :func:`route_queries` runs and only its nq x nprobe
+    (query_id, cluster_id) pairs are collected."""
+    qids, Q = _pq._collect_queries(queries, query_id_col, query_vec_col)
+    budget = int(
+        float(os.environ.get("VSS_ADC_DRIVER_ROUTE_TERMS", "2000000"))
+    )
+    n_terms = Q.size * len(centroids)
+    if driver_routing and (budget <= 0 or n_terms <= budget):
+        cents = np.ascontiguousarray(centroids, dtype=np.float64)
+
+        def _seq_l2(q, c) -> float:
+            acc = 0.0
+            for x, y in zip(q, c):
+                d = x - y
+                acc += d * d
+            return acc
+
+        pairs = [
+            (i, c)
+            for i in range(len(qids))
+            for _, c in sorted(
+                (_seq_l2(Q[i], cents[c]), c) for c in range(len(cents))
+            )[: int(nprobe)]
+        ]
+    else:
+        rpdf = route_queries(
+            queries, centroids, nprobe, query_id_col, query_vec_col
+        ).toPandas()
+        pos = {int(q): i for i, q in enumerate(qids)}
+        pairs = [
+            (pos[int(q)], int(c))
+            for q, c in zip(rpdf["query_id"], rpdf["cluster_id"])
+        ]
+    members: dict[int, list[int]] = {}
+    for i, c in sorted(pairs):
+        members.setdefault(int(c), []).append(i)
+    cells = {c: np.asarray(v, dtype=np.int64) for c, v in members.items()}
+    return qids, Q, cells
+
+
+def _cell_scan(
+    rel: DataFrame,
+    id_col: str,
+    payload,
+    cluster_col: str,
+    qids: np.ndarray,
+    cell_to_q: dict,
+    score,
+    cut,
+) -> DataFrame:
+    """THE per-cell scan of IVF serving: ``(query_id, vec_id, dist)``.
+
+    ``rel`` is filtered to the routed cells (partition pruning on a
+    cell-partitioned layout) and streamed through one ``mapInPandas``.
+    ``cell_to_q[cell] = (qidx, state)`` holds the positions (into
+    ``qids``) of the queries routed to the cell and the scorer's
+    per-cell query state. Each Arrow batch is grouped by cell;
+    ``score(state, payload_series)`` returns the dense (nq_cell x
+    rows) distance tile and ``cut(vids, D)`` the (row, col) pairs to
+    emit — ``pq._topk_rows`` for top-k, a radius mask for range.
+
+    EXECUTOR MEMORY BOUND: one tile per (cell, Arrow batch) —
+    ``nq_cell`` x ``cell_rows_in_batch`` float64, with ``nq_cell`` the
+    queries routed to the cell and ``cell_rows_in_batch`` <= min(cell
+    size, Arrow batch size, default 10k rows). It rests on (a) the
+    serving contract's caller-bounded query batch and (b) cell sizes
+    kept near the mean by :func:`rebalance_index` (its ``skew_factor``
+    cap is the invariant — asserted in tests/test_ivf.py). A 4x-skew
+    cell at 10k-row batches with 100 routed queries is an 8 MB tile;
+    without rebalancing a mega-cell grows it linearly."""
+    bc = rel.sparkSession.sparkContext.broadcast((qids, cell_to_q))
+    src = rel.select(
+        F.col(id_col).alias("vec_id"),
+        payload.alias("_x"),
+        F.col(cluster_col).alias("_cell"),
+    ).filter(F.col("_cell").isin(sorted(cell_to_q)))
+
+    def fn(batches):
+        b_qids, b_map = bc.value
+        for pdf in batches:
+            out = []
+            for cell, grp in pdf.groupby("_cell"):
+                hit = b_map.get(int(cell))
+                if hit is None:
+                    continue
+                qidx, state = hit
+                vids = grp["vec_id"].to_numpy(dtype=np.int64)
+                D = score(state, grp["_x"])
+                qi, vj = cut(vids, D)
+                out.append(
+                    pd.DataFrame(
+                        {
+                            "query_id": b_qids[qidx[qi]],
+                            "vec_id": vids[vj],
+                            "dist": D[qi, vj],
+                        }
+                    )
+                )
+            if out:
+                yield pd.concat(out, ignore_index=True)
+
+    return src.mapInPandas(fn, "query_id long, vec_id long, dist double")
+
+
+def _flat_scores(state, vecs) -> np.ndarray:
+    """gemm scorer for :func:`_cell_scan`: squared L2 of the cell's
+    queries (``state = (Q, ||Q||^2)``) against its raw vectors."""
+    Q, qn2 = state
+    B = np.vstack(vecs.to_numpy()).astype(np.float64)
+    return _gemm_batch_dists("l2_sqr", Q, qn2, B)
+
+
+def _radius_rows(vids, D, radius: float):
+    """Radius cut for :func:`_cell_scan`: every pair with
+    ``dist <= radius`` (INCLUSIVE, the whole radius family)."""
+    return np.nonzero(D <= radius)
+
+
 def ivf_topk(
     queries: DataFrame,
     assigned_base: DataFrame,
@@ -131,113 +330,37 @@ def ivf_topk(
     :func:`assign_clusters` or a partitioned read of
     :func:`write_index` output). Returns (query_id, vec_id, dist, rank).
 
-    ``impl='expr'``: broadcast the (query_id, cluster_id) routing pairs
-    and the query vectors, equi-join base on ``cluster_id`` — Catalyst
-    turns the IN-filter into partition pruning on a partitioned layout —
-    then the codegen distance fold + window top-k.
+    ``impl='expr'``: the broadcast routed join (:func:`_routed_scores`)
+    + the codegen distance fold + window top-k.
 
     ``impl='gemm'``: same routed filter, then one BLAS pass over the
-    surviving partitions; each Arrow batch is grouped by cell and scored
-    against just that cell's queries, emitting per-batch partial top-k.
-    Use when (routed candidates x queries) is compute-bound.
+    surviving partitions (:func:`_cell_scan`): each Arrow batch is
+    grouped by cell and scored against just that cell's queries,
+    emitting per-batch partial top-k. Use when (routed candidates x
+    queries) is compute-bound. It always scores ``l2_sqr``.
     """
-    routes = route_queries(
-        queries, centroids, nprobe, query_id_col, query_vec_col
-    )
-    b = assigned_base.select(
-        F.col(base_id_col).alias("vec_id"),
-        as_double_array(base_vec_col).alias("_bv"),
-        F.col(cluster_col).alias("_cell"),
-    )
-
     if impl == "expr":
-        q = F.broadcast(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                as_double_array(query_vec_col).alias("_qv"),
-            )
+        return topk_per_query(
+            _routed_scores(
+                queries, assigned_base, centroids, nprobe, metric,
+                query_id_col, query_vec_col, base_id_col, base_vec_col,
+                cluster_col,
+            ),
+            k,
         )
-        cand = b.join(
-            F.broadcast(routes.withColumnRenamed("cluster_id", "_cell")),
-            "_cell",
-        )
-        scored = cand.join(q, "query_id").select(
-            "query_id",
-            "vec_id",
-            distance(metric, "_qv", "_bv").alias("dist"),
-        )
-        return topk_per_query(scored, k)
-
     if impl != "gemm":
         raise ValueError(f"unknown impl {impl!r}")
-
-    # ---- gemm: routed filter + per-cell BLAS scoring ----
-    rpdf = routes.toPandas()
-    qpdf = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("qv"),
-    ).toPandas()
-    if not len(qpdf):
-        raise ValueError("empty query set")
-    qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-    Q = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-    qpos = {int(qid): i for i, qid in enumerate(qids)}
-    cell_to_q: dict[int, np.ndarray] = {
-        int(cell): np.fromiter(
-            (qpos[int(q_)] for q_ in grp["query_id"]), dtype=np.int64
-        )
-        for cell, grp in rpdf.groupby("cluster_id")
-    }
-    routed_cells = sorted(cell_to_q)
-    bc = queries.sparkSession.sparkContext.broadcast(
-        (qids, Q, (Q * Q).sum(axis=1), cell_to_q)
+    qids, Q, cells = _route_batch(
+        queries, centroids, nprobe, query_id_col, query_vec_col,
+        driver_routing=False,
     )
-
-    pruned = b.filter(F.col("_cell").isin(routed_cells))
-
-    def fn(batches):
-        b_qids, b_Q, b_qn2, b_map = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for cell, grp in pdf.groupby("_cell"):
-                qidx = b_map.get(int(cell))
-                if qidx is None or not len(grp):
-                    continue
-                vids = grp["vec_id"].to_numpy(dtype=np.int64)
-                B = np.vstack(grp["_bv"].to_numpy()).astype(np.float64)
-                D = (
-                    b_qn2[qidx][:, None]
-                    + (B * B).sum(axis=1)[None, :]
-                    - 2.0 * (b_Q[qidx] @ B.T)
-                )
-                np.maximum(D, 0.0, out=D)  # cancellation clamp
-                kk = min(k, D.shape[1])
-                cand = (
-                    np.argpartition(D, kk - 1, axis=1)[:, :kk]
-                    if kk < D.shape[1]
-                    else np.broadcast_to(
-                        np.arange(D.shape[1]), (len(qidx), D.shape[1])
-                    )
-                )
-                for i, qi in enumerate(qidx):
-                    cj = cand[i]
-                    dj = D[i, cj]
-                    order = np.lexsort((vids[cj], dj))[:k]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": b_qids[qi],
-                                "vec_id": vids[cj[order]],
-                                "dist": dj[order],
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scored = pruned.mapInPandas(fn, "query_id long, vec_id long, dist double")
+    qn2 = (Q * Q).sum(axis=1)
+    cell_to_q = {c: (qi, (Q[qi], qn2[qi])) for c, qi in cells.items()}
+    scored = _cell_scan(
+        assigned_base, base_id_col, as_double_array(base_vec_col),
+        cluster_col, qids, cell_to_q, _flat_scores,
+        partial(_pq._topk_rows, k=k),
+    )
     return topk_per_query(scored, k)
 
 
@@ -260,9 +383,10 @@ def ivf_range(
     every hit within ``radius`` (the metric's own ``dist`` space).
     Same recall contract as :func:`ivf_topk` (a neighbor in an
     unprobed cell is missed; ``nprobe == NC`` is exact — tested), same
-    partition-pruned scan; the tail is a FILTER instead of a window,
-    so the result streams out of the scan stage with no shuffle —
-    radius search is output-sensitive and needs no global reduction.
+    routed join (:func:`_routed_scores`); the tail is a FILTER instead
+    of a window, so the result streams out of the scan stage with no
+    shuffle — radius search is output-sensitive and needs no global
+    reduction.
 
     BOUNDARY SEMANTICS: hits satisfy ``dist <= radius`` (INCLUSIVE) —
     an intentional deviation from FAISS's strict ``<``, consistent
@@ -276,36 +400,11 @@ def ivf_range(
     governs the routes table's hint: routes is ``nq * nprobe`` rows,
     bounded exactly when the query batch is.
     """
-    routes = route_queries(
-        queries, centroids, nprobe, query_id_col, query_vec_col
-    )
-    b = assigned_base.select(
-        F.col(base_id_col).alias("vec_id"),
-        as_double_array(base_vec_col).alias("_bv"),
-        F.col(cluster_col).alias("_cell"),
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("_qv"),
-    )
-    if broadcast_queries:
-        q = F.broadcast(q)
-    # routes is nq * nprobe rows — bounded only when the query batch
-    # is; it inherits the same flag (a corpus-sized query side makes
-    # routes corpus-sized too, and the hint would collect it)
-    r = routes.withColumnRenamed("cluster_id", "_cell")
-    if broadcast_queries:
-        r = F.broadcast(r)
-    cand = b.join(r, "_cell")
-    return (
-        cand.join(q, "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            distance(metric, "_qv", "_bv").alias("dist"),
-        )
-        .filter(F.col("dist") <= F.lit(float(radius)))
-    )
+    return _routed_scores(
+        queries, assigned_base, centroids, nprobe, metric, query_id_col,
+        query_vec_col, base_id_col, base_vec_col, cluster_col,
+        broadcast=broadcast_queries,
+    ).filter(F.col("dist") <= F.lit(float(radius)))
 
 
 def residuals(
@@ -338,115 +437,49 @@ def residuals(
     )
 
 
-def _adc_lut_routes(
+def _adc_scan(
     queries: DataFrame,
+    codes: DataFrame,
     centroids: np.ndarray,
     model,
     nprobe: int,
     residual: bool,
+    cut,
     query_id_col: str,
     query_vec_col: str,
-):
-    """Shared IVFADC query-side prep (r14 — factored so the topk and
-    range paths build the SAME routed per-cell LUTs): route queries,
-    collect the (model-sized) query batch, and build per-cell ADC
-    lookup tables. Returns ``(qids, cell_to_q, routed_cells, m)``
-    where ``cell_to_q[cell] = (query positions, (nq_cell, M, K)
-    LUT)``. Driver state is routed-pairs x M x K doubles — bounded by
-    the caller's query batch, never the corpus.
+    id_col: str,
+    code_col: str,
+    cluster_col: str,
+) -> DataFrame:
+    """IVFADC query side + :func:`_cell_scan`: collect and route the
+    query batch (driver-side routing under its term cap — the batch is
+    collected for the tables anyway; see :func:`_route_batch`), build
+    each routed cell's lookup tables (``pq._adc_lut``) and scan the
+    routed cells' codes. Driver state is routed-pairs x M x K doubles —
+    bounded by the caller's query batch, never the corpus.
 
-    Routing happens DRIVER-side (r17 optimization): the query batch is
-    already collected here for the LUTs, so running
-    :func:`route_queries` as a distributed job was one extra scheduled
-    broadcast+window pass per serving call for zero new information.
-    The distance loop replays the Catalyst l2 fold's sequential
-    index-order sum EXACTLY (same IEEE adds in the same order), and
-    ties break by ascending cluster_id exactly like route_queries'
-    window — routing is bit-identical, value-checked by the routed
-    entries' oracles.
-
-    GUARD (r18, r17 judge "What's wrong #3"): the replay loop is
-    interpreted Python at a measured ~300 ns per (query, cell, dim)
-    term — caller-bounded in nq, but NC grows with the corpus, and at
-    index scale (NC ~ 10^5-10^6 cells) the loop is a multi-minute
-    driver stall. When nq x NC x D exceeds
-    ``VSS_ADC_DRIVER_ROUTE_TERMS`` (default 2e6 terms ≈ 0.6 s, below
-    the ~1 s the distributed pass costs at bench scale), routing falls
-    back to the distributed :func:`route_queries` — the pre-r17 path,
-    bit-identical by construction (only MEMBERSHIP of the (query,
-    cell) pairs feeds the LUT build; probe order never does).
-    """
-    qpdf = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("qv"),
-    ).toPandas()
-    if not len(qpdf):
-        raise ValueError("empty query set")
-    m, kcent, dsub = model.codebooks.shape
-    qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-    Qflat = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-
-    def _seq_l2(q, c) -> float:
-        # the Catalyst fold, replayed: (x-y)*(x-y) terms accumulated
-        # LEFT-TO-RIGHT from 0.0 — bit-identical to distance("l2_sqr")
-        acc = 0.0
-        for x, y in zip(q, c):
-            d = x - y
-            acc += d * d
-        return acc
-
-    cents = np.ascontiguousarray(centroids, dtype=np.float64)
-    route_budget = int(
-        float(os.environ.get("VSS_ADC_DRIVER_ROUTE_TERMS", "2000000"))
+    Non-residual codes share one global table sliced per cell;
+    ``residual=True`` builds each (query, cell) table from the query's
+    residual against that cell's centroid."""
+    qids, Q, cells = _route_batch(
+        queries, centroids, nprobe, query_id_col, query_vec_col,
+        driver_routing=True,
     )
-    n_terms = len(qids) * len(cents) * Qflat.shape[1]
-    if route_budget > 0 and n_terms > route_budget:
-        # distributed routing (corpus-scaled NC): collect only the
-        # nq x nprobe (query_id, cluster_id) membership pairs
-        rpdf = route_queries(
-            queries, centroids, nprobe, query_id_col, query_vec_col
-        ).toPandas()
-        pos = {int(q): i for i, q in enumerate(qids)}
-        per_query_cells: list[list[int]] = [[] for _ in qids]
-        for q, c in zip(rpdf["query_id"], rpdf["cluster_id"]):
-            per_query_cells[pos[int(q)]].append(int(c))
-    else:
-        per_query_cells = []
-        for i in range(len(qids)):
-            ds = sorted(
-                ((_seq_l2(Qflat[i], cents[c]), c) for c in range(len(cents))),
-            )
-            per_query_cells.append([c for _, c in ds[: int(nprobe)]])
-
-    def lut_for(Qsub: np.ndarray) -> np.ndarray:
-        Q3 = Qsub.reshape(len(Qsub), m, dsub)
-        out = np.empty((len(Qsub), m, kcent))
-        for mi in range(m):
-            Qm, Cm = Q3[:, mi, :], model.codebooks[mi]
-            out[:, mi, :] = (
-                (Qm * Qm).sum(axis=1)[:, None]
-                + (Cm * Cm).sum(axis=1)[None, :]
-                - 2.0 * (Qm @ Cm.T)
-            )
-        np.maximum(out, 0.0, out=out)  # cancellation clamp
-        return out
-
-    # cell -> (query positions, per-cell LUT). Non-residual: one global
-    # LUT sliced per cell; residual: LUT from (q - cell centroid).
-    glob = None if residual else lut_for(Qflat)
-    cell_members: dict[int, list[int]] = {}
-    for i, cells in enumerate(per_query_cells):
-        for c in cells:
-            cell_members.setdefault(int(c), []).append(i)
-    cell_to_q: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for cell, members in cell_members.items():
-        qidx = np.asarray(members, dtype=np.int64)
-        if residual:
-            lut_c = lut_for(Qflat[qidx] - cents[int(cell)][None, :])
-        else:
-            lut_c = glob[qidx]
-        cell_to_q[int(cell)] = (qidx, lut_c)
-    return qids, cell_to_q, sorted(cell_to_q), m
+    cents = np.asarray(centroids, dtype=np.float64)
+    glob = None if residual else _pq._adc_lut(model.codebooks, Q)
+    cell_to_q = {
+        c: (
+            qi,
+            _pq._adc_lut(model.codebooks, Q[qi] - cents[c][None, :])
+            if residual
+            else glob[qi],
+        )
+        for c, qi in cells.items()
+    }
+    return _cell_scan(
+        codes, id_col, F.col(code_col), cluster_col, qids, cell_to_q,
+        _pq._adc_scores, cut,
+    )
 
 
 def ivf_adc_topk(
@@ -476,74 +509,14 @@ def ivf_adc_topk(
     own LUT built from the query's residual against THAT cell's
     centroid — still driver-tiny (routed-pairs x M x K doubles).
 
-    EXECUTOR MEMORY BOUND (r15, judge ask): the scoring kernel
-    materializes a dense ``(nq_cell x cell_rows_in_batch)`` float64
-    tile per (cell, Arrow batch) — ``nq_cell`` = queries routed to the
-    cell, ``cell_rows_in_batch`` <= min(cell size, Arrow batch size,
-    default 10k rows). The bound therefore rests on (a) the serving
-    contract's CALLER-BOUNDED query batch and (b) cell sizes kept near
-    the mean by :func:`rebalance_index` (its ``skew_factor`` cap is
-    the invariant — asserted in tests/test_ivf.py). A 4x-skew cell at
-    10k-row batches with 100 routed queries is an 8 MB tile; without
-    rebalancing a mega-cell grows this linearly.
+    Executor memory is one (nq_cell x cell_rows_in_batch) tile per
+    (cell, Arrow batch) — see :func:`_cell_scan` for the bound.
     """
-    from vector_search_spark.operators import pq as _pq
-
-    qids, cell_to_q, routed_cells, m = _adc_lut_routes(
-        queries, centroids, model, nprobe, residual,
-        query_id_col, query_vec_col,
+    scored = _adc_scan(
+        queries, codes, centroids, model, nprobe, residual,
+        partial(_pq._topk_rows, k=k), query_id_col, query_vec_col,
+        id_col, code_col, cluster_col,
     )
-    bc = queries.sparkSession.sparkContext.broadcast((qids, cell_to_q))
-
-    src = codes.select(
-        F.col(id_col).alias("_id"),
-        F.col(code_col).alias("_c"),
-        F.col(cluster_col).alias("_cell"),
-    ).filter(F.col("_cell").isin(routed_cells))
-
-    def fn(batches):
-        b_qids, b_map = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for cell, grp in pdf.groupby("_cell"):
-                hit = b_map.get(int(cell))
-                if hit is None or not len(grp):
-                    continue
-                qidx, lut_c = hit
-                vids = grp["_id"].to_numpy(dtype=np.int64)
-                cm = _pq._code_matrix(grp["_c"])
-                D = np.zeros((len(qidx), len(vids)))
-                for mi in range(m):
-                    D += lut_c[:, mi, :][
-                        np.arange(len(qidx))[:, None], cm[:, mi][None, :]
-                    ]
-                kk = min(k, D.shape[1])
-                cand = (
-                    np.argpartition(D, kk - 1, axis=1)[:, :kk]
-                    if kk < D.shape[1]
-                    else np.broadcast_to(
-                        np.arange(D.shape[1]), (len(qidx), D.shape[1])
-                    )
-                )
-                for i, qi in enumerate(qidx):
-                    cj = cand[i]
-                    dj = D[i, cj]
-                    order = np.lexsort((vids[cj], dj))[:k]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": b_qids[qi],
-                                "vec_id": vids[cj[order]],
-                                "dist": dj[order],
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scored = src.mapInPandas(fn, "query_id long, vec_id long, dist double")
     return topk_per_query(scored, k)
 
 
@@ -570,79 +543,31 @@ def ivf_adc_range(
     error; callers calibrate or refine exactly as with ADC top-k)
     is within ``radius``, inside the ``nprobe`` routed cells only.
 
-    Same query-side prep as :func:`ivf_adc_topk` (shared
-    ``_adc_lut_routes`` — the two paths can never disagree on LUTs or
-    routing), same partition-prunable code scan; the tail is a
-    row-local numpy mask instead of partial-top-k + window, so the
-    result STREAMS out of the scan stage with zero shuffle — the
-    output-sensitive shape radius search wants at 100 TB. INCLUSIVE
-    ``dist <= radius`` boundary, consistent with the whole family.
-    ``residual=True`` is the Jégou IVFADC form (per-(query, cell)
-    residual LUTs).
+    Same query side and per-cell scan as :func:`ivf_adc_topk` (shared
+    :func:`_adc_scan` — the two paths can never disagree on tables or
+    routing); the cut is a row-local ``dist <= radius`` mask instead of
+    partial-top-k + window, so the result STREAMS out of the scan stage
+    with zero shuffle — the output-sensitive shape radius search wants
+    at 100 TB. INCLUSIVE ``dist <= radius`` boundary, consistent with
+    the whole family. ``residual=True`` is the Jégou IVFADC form
+    (per-(query, cell) residual tables).
 
     MEMBERSHIP AND DISTANCES ARE IN ADC SPACE — for a true-metric
     radius use :func:`ivf_adc_range_refined` (exact re-scoring of the
-    survivors, the pq.refine_topk repair). Same executor memory bound
-    as :func:`ivf_adc_topk`: a dense (nq_cell x cell_rows_in_batch)
-    tile per (cell, Arrow batch), bounded by the caller-sized query
-    batch and :func:`rebalance_index`'s skew cap (see ivf_adc_topk's
-    docstring for the arithmetic).
+    survivors). Same executor memory bound as :func:`ivf_adc_topk`
+    (see :func:`_cell_scan`).
 
     SERVING CONTRACT (query side): the query batch is CALLER-BOUNDED —
-    the per-query LUTs collect to the driver. A corpus-sized query
+    the per-query tables collect to the driver. A corpus-sized query
     side (near-dup blocking) belongs on the RAW radius path
     (:func:`ivf_range` / ``knn.range_search(broadcast_queries=False)``)
     or :func:`dedup.embedding_near_dup`, not the compressed one.
     """
-    from vector_search_spark.operators import pq as _pq
-
-    qids, cell_to_q, routed_cells, m = _adc_lut_routes(
-        queries, centroids, model, nprobe, residual,
-        query_id_col, query_vec_col,
+    return _adc_scan(
+        queries, codes, centroids, model, nprobe, residual,
+        partial(_radius_rows, radius=float(radius)), query_id_col,
+        query_vec_col, id_col, code_col, cluster_col,
     )
-    bc = queries.sparkSession.sparkContext.broadcast((qids, cell_to_q))
-    r = float(radius)
-
-    src = codes.select(
-        F.col(id_col).alias("_id"),
-        F.col(code_col).alias("_c"),
-        F.col(cluster_col).alias("_cell"),
-    ).filter(F.col("_cell").isin(routed_cells))
-
-    def fn(batches):
-        b_qids, b_map = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for cell, grp in pdf.groupby("_cell"):
-                hit = b_map.get(int(cell))
-                if hit is None or not len(grp):
-                    continue
-                qidx, lut_c = hit
-                vids = grp["_id"].to_numpy(dtype=np.int64)
-                cm = _pq._code_matrix(grp["_c"])
-                D = np.zeros((len(qidx), len(vids)))
-                for mi in range(m):
-                    D += lut_c[:, mi, :][
-                        np.arange(len(qidx))[:, None], cm[:, mi][None, :]
-                    ]
-                qi, vj = np.nonzero(D <= r)
-                if not len(qi):
-                    continue
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": b_qids[qidx[qi]],
-                            "vec_id": vids[vj],
-                            "dist": D[qi, vj],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    return src.mapInPandas(fn, "query_id long, vec_id long, dist double")
 
 
 def _exact_rescore(
@@ -661,14 +586,15 @@ def _exact_rescore(
     ``dist`` column (Catalyst L2 fold, broadcast query side). Extra
     columns on ``cand`` ride through untouched. Every refined/
     calibration tail builds on this one block so the re-score contract
-    can never drift between them.
+    can never drift between them — ``pq.refine_topk`` and
+    ``bq.bq_refine_topk`` re-score through it with the defaults.
 
-    ``broadcast_cand`` (r15 advisor, landed r17): the candidate side
-    emerges from mapInPandas, so it is STATS-FREE — Catalyst plans a
-    shuffle join against the possibly-huge ``points`` table and AQE
-    has to rescue it at runtime. Callers whose candidate volume is
-    bounded BY CONSTRUCTION (top-k refine: nq x shortlist rows;
-    refine curve: nq x max-shortlist) pass True for an explicit
+    ``broadcast_cand``: the candidate side emerges from mapInPandas,
+    so it is STATS-FREE — Catalyst plans a shuffle join against the
+    possibly-huge ``points`` table and AQE has to rescue it at runtime.
+    Callers whose candidate volume is bounded BY CONSTRUCTION (top-k
+    refine: nq x shortlist rows; refine curve: nq x max-shortlist)
+    pass True for an explicit
     broadcast hint — no shuffle of the raw-vector table, the plan a
     1000-executor deployment wants without relying on AQE's runtime
     size sample. Callers whose candidate volume is OUTPUT-SENSITIVE
@@ -683,7 +609,7 @@ def _exact_rescore(
     CONTRACT — codes ⊆ points: every candidate id must exist in the
     raw-vector table. The default inner join silently DROPS a candidate
     whose raw vector is missing (a stale or partial points parquet
-    shrinks the refined result instead of failing — r15 advisor).
+    shrinks the refined result instead of failing).
     ``strict=True`` left-joins instead and raises IN-PLAN on the first
     orphaned candidate, turning that data bug into a loud error at the
     cost of a join that Catalyst cannot reduce to inner."""
@@ -743,7 +669,7 @@ def ivf_adc_range_refined(
 ) -> DataFrame:
     """Compressed-domain radius search with EXACT re-scoring — the
     :func:`pq.refine_topk` repair applied to the radius family, closing
-    the serving matrix's last asymmetry (r14 judge): plain
+    the serving matrix's last asymmetry: plain
     :func:`ivf_adc_range` returns hits whose membership AND distances
     live in ADC space, which under- and over-estimates true L2² per
     the PQ quantization error; a FAISS-ported true-L2 radius silently
@@ -778,8 +704,8 @@ def ivf_adc_range_refined(
     DELIBERATELY leaves the join to AQE: the runtime size sample
     converts it to broadcast exactly when the hit set is actually
     small, and hinting an unbounded relation would trade a shuffle
-    for a driver OOM (the r15-advisor broadcast item, adjudicated per
-    caller in :func:`_exact_rescore`). The query side broadcasts like
+    for a driver OOM (the broadcast choice is made per caller, see
+    :func:`_exact_rescore`). The query side broadcasts like
     refine_topk, and the tail is a filter, not a window, so the
     result still streams with zero shuffle past the candidate join.
 
@@ -861,7 +787,7 @@ def ivf_adc_topk_refined(
     ).select("query_id", "vec_id")
     # candidate volume is nq x shortlist BY CONSTRUCTION (caller-bounded
     # query batch per the serving contract) -> explicit broadcast, no
-    # shuffle of the raw-vector table (r15 advisor, see _exact_rescore)
+    # shuffle of the raw-vector table (see _exact_rescore)
     scored = _exact_rescore(
         cand, queries, points, query_id_col, query_vec_col,
         id_col, vec_col, strict=strict, broadcast_cand=True,
@@ -883,15 +809,11 @@ def adc_search_index(
     shortlist: int | None = None,
     **kwargs,
 ) -> DataFrame:
-    """One-call COMPRESSED top-k serving over the persisted artifacts
-    — the cell the serving matrix was actually missing (r15: topk/raw
-    = search_index, radius/raw = range_index, radius/compressed =
-    adc_range_index existed; topk/compressed required the caller to
-    reopen codes + centroids + PQ model by hand). Load the coarse
-    model and the PQ model, open the cell-partitioned code parquet,
-    and run :func:`ivf_adc_topk` in only the probed cells — same
-    partition-pruned scan and pushed ``base_filter`` semantics as its
-    three siblings.
+    """One-call COMPRESSED top-k serving over the persisted artifacts:
+    open the coarse model, the PQ model and the cell-partitioned code
+    parquet (:func:`_open_index`, which pushes ``base_filter``) and run
+    :func:`ivf_adc_topk` in only the probed cells — the compressed
+    twin of :func:`search_index`.
 
     ``points_path`` (optional): the persisted RAW-vector parquet —
     when given, results are exactly re-ranked through
@@ -904,31 +826,11 @@ def adc_search_index(
     ``shortlist`` / ``vec_col`` / ``strict`` configure that re-rank
     stage and are rejected without ``points_path`` — plain ADC serving
     has no stage 2 to configure."""
-    from vector_search_spark.operators import pq as _pq
-
-    if points_path is None:
-        refined_only = {"shortlist": shortlist is not None} | {
-            kw: kw in kwargs for kw in ("vec_col", "strict")
-        }
-        bad = sorted(kw for kw, given in refined_only.items() if given)
-        if bad:  # fail loud — the plain branch would TypeError deeper in
-            raise ValueError(
-                f"{bad} configure the exact re-rank stage and require "
-                "points_path (r15 advisor: the two branches must not "
-                "accept different kwarg sets silently)"
-            )
-    C = load_centroids(spark, centroids_path)
-    model = _pq.load_model(spark, model_path)
-    codes = spark.read.parquet(codes_path)
-    if base_filter is not None:
-        codes = codes.filter(base_filter)
-    if points_path is not None:
-        # base_filter is NOT applied to points: stage-2 membership is
-        # already restricted by the filtered codes scan (the re-score
-        # joins survivors by vec_id), and the predicate's columns may
-        # not exist on a user's raw-vector parquet — filtering here
-        # would crash the refined path where the plain one succeeds.
-        points = spark.read.parquet(points_path)
+    C, model, codes, points = _open_index(
+        spark, codes_path, centroids_path, base_filter, model_path,
+        points_path, ("shortlist", shortlist), kwargs,
+    )
+    if points is not None:
         return ivf_adc_topk_refined(
             queries, codes, C, model, points=points, k=k,
             shortlist=shortlist if shortlist is not None else 5 * k,
@@ -1016,7 +918,7 @@ def calibrate_adc_margin(
     # q < 1.0 is the sampled-production path: approx_percentile is a
     # mergeable t-digest (map-side partial, no sort of the pair set) —
     # exact percentile here was a sort-shaped aggregate over every
-    # routed pair (r15 judge nit).
+    # routed pair.
     row = gaps.agg(
         F.expr(f"approx_percentile(_gap, {float(quantile)})").alias("m")
     ).collect()[0]
@@ -1042,8 +944,8 @@ def adc_refine_curve(
 ) -> DataFrame:
     """Recall-vs-shortlist curve for :func:`ivf_adc_topk_refined` from
     ONE stage-1 pass — the measured guidance behind that function's
-    "production practice is shortlist ~ 4-8x k" advice (r15 judge ask
-    #3), and the reference's own tuning protocol (py/hnsw.ipynb cell 6
+    "production practice is shortlist ~ 4-8x k" advice, and the
+    reference's own tuning protocol (py/hnsw.ipynb cell 6
     tunes by recall curve) applied to the refined family the way
     :func:`ivf_recall_curve` applies it to nprobe and
     ``dedup.lsh_band_curve`` to LSH banding.
@@ -1114,6 +1016,54 @@ def adc_refine_curve(
     )
 
 
+def _open_index(
+    spark,
+    path: str,
+    centroids_path: str,
+    base_filter=None,
+    model_path: str | None = None,
+    points_path: str | None = None,
+    stage2_knob: tuple = (None, None),
+    kwargs=(),
+):
+    """The shared opener of the persisted one-calls. Returns
+    ``(centroids, pq_model | None, relation, points | None)``.
+
+    Without ``points_path`` any explicitly passed re-score knob —
+    ``stage2_knob`` = (name, value), given when the value is not None,
+    plus ``vec_col`` / ``strict`` present in ``kwargs`` — raises a
+    ValueError up front: the plain branch has no stage 2, and would
+    fail deeper with a TypeError. Detection is by PRESENCE, so an
+    explicit default (``strict=False``, ``margin=0.0``) raises too.
+
+    ``base_filter`` (a Column) applies to the cell-partitioned relation
+    BEFORE scoring: the predicate reaches the parquet scan
+    (PushedFilters) INSIDE only the routed cell directories
+    (PartitionFilters), so a filtered search reads exactly (probed
+    cells ∩ predicate pages). It is NOT applied to ``points``: stage-2
+    membership is already restricted by the filtered scan (the
+    re-score joins survivors by vec_id), and the predicate's columns
+    may not exist on a raw-vector parquet."""
+    if points_path is None:
+        name, value = stage2_knob
+        bad = sorted(
+            [name] * (value is not None)
+            + [kw for kw in ("vec_col", "strict") if kw in kwargs]
+        )
+        if bad:
+            raise ValueError(
+                f"{bad} configure the exact re-score stage and require "
+                "points_path — plain ADC serving has no stage 2"
+            )
+    C = load_centroids(spark, centroids_path)
+    model = None if model_path is None else _pq.load_model(spark, model_path)
+    rel = spark.read.parquet(path)
+    if base_filter is not None:
+        rel = rel.filter(base_filter)
+    points = None if points_path is None else spark.read.parquet(points_path)
+    return C, model, rel, points
+
+
 def search_index(
     spark,
     index_path: str,
@@ -1132,17 +1082,12 @@ def search_index(
     to keep this one fast and correct.
 
     ``base_filter`` (optional Column) is a metadata predicate applied
-    to the index relation BEFORE scoring — filtered ANN on the pruned
-    path: the predicate reaches the parquet scan (PushedFilters)
-    INSIDE only the routed cell directories (PartitionFilters), so a
-    filtered search reads exactly (probed cells ∩ predicate pages).
-    Pre-filter semantics: top-k among matching rows (never undersized
-    unless fewer than k rows match in the probed cells).
+    before scoring — filtered ANN on the pruned path (see
+    :func:`_open_index`). Pre-filter semantics: top-k among matching
+    rows (never undersized unless fewer than k rows match in the
+    probed cells).
     """
-    C = load_centroids(spark, centroids_path)
-    base = spark.read.parquet(index_path)
-    if base_filter is not None:
-        base = base.filter(base_filter)
+    C, _, base, _ = _open_index(spark, index_path, centroids_path, base_filter)
     return ivf_topk(queries, base, C, k=k, nprobe=nprobe, **kwargs)
 
 
@@ -1157,25 +1102,18 @@ def range_index(
     **kwargs,
 ) -> DataFrame:
     """One-call RADIUS serving over the PERSISTED index —
-    :func:`search_index`'s twin for :func:`ivf_range` (r13 judge: the
-    topk path had the one-call API; radius callers had to hold
-    ``assigned_base`` + a centroids ndarray themselves). Load the
-    model (:func:`load_centroids`), open the cell-partitioned parquet,
-    route and keep every hit within ``radius`` in only the probed
-    cells. Same partition-pruned scan as search_index (PartitionFilters
-    on cluster_id — plan-asserted in tests), same nprobe-bounded
-    recall contract (``nprobe == NC`` is exact), same INCLUSIVE
-    ``dist <= radius`` boundary as knn.range_search.
+    :func:`search_index`'s twin for :func:`ivf_range`: open the index
+    (:func:`_open_index`) and keep every hit within ``radius`` in only
+    the probed cells. Same partition-pruned scan as search_index
+    (PartitionFilters on cluster_id — plan-asserted in tests), same
+    nprobe-bounded recall contract (``nprobe == NC`` is exact), same
+    INCLUSIVE ``dist <= radius`` boundary as knn.range_search.
 
     ``base_filter`` applies before scoring, inside the routed cells —
-    filtered radius search reads (probed cells ∩ predicate pages),
     the search_index pre-filter semantics. ``kwargs`` pass through to
     :func:`ivf_range` (metric, column names, broadcast_queries).
     """
-    C = load_centroids(spark, centroids_path)
-    base = spark.read.parquet(index_path)
-    if base_filter is not None:
-        base = base.filter(base_filter)
+    C, _, base, _ = _open_index(spark, index_path, centroids_path, base_filter)
     return ivf_range(queries, base, C, radius=radius, nprobe=nprobe, **kwargs)
 
 
@@ -1194,54 +1132,29 @@ def adc_range_index(
     **kwargs,
 ) -> DataFrame:
     """One-call COMPRESSED radius serving over the persisted artifacts
-    — :func:`range_index`'s twin for :func:`ivf_adc_range`, closing
-    the serving matrix (topk/radius x raw/compressed, all one-call):
-    load the coarse model (:func:`load_centroids`) and the PQ model
-    (``pq.load_model``), open the cell-partitioned code parquet, and
-    keep every code within the ADC-space ``radius`` in only the
-    probed cells. Same partition-pruned scan and pushed
-    ``base_filter`` semantics as search_index/range_index; same
-    INCLUSIVE boundary as the whole radius family. ``kwargs`` pass
-    through to :func:`ivf_adc_range` (column names).
+    — :func:`range_index`'s twin for :func:`ivf_adc_range`: open the
+    coarse model, the PQ model and the cell-partitioned code parquet
+    (:func:`_open_index`) and keep every code within the ADC-space
+    ``radius`` in only the probed cells. Same partition-pruned scan
+    and pushed ``base_filter`` semantics as search_index/range_index;
+    same INCLUSIVE boundary as the whole radius family. ``kwargs``
+    pass through to :func:`ivf_adc_range` (column names).
 
-    ``points_path`` (r15): when given, the persisted RAW-vector
-    parquet is opened and hits are exactly re-scored through
+    ``points_path``: when given, the persisted RAW-vector parquet is
+    opened and hits are exactly re-scored through
     :func:`ivf_adc_range_refined` — the radius becomes TRUE-metric
     (stage-1 candidates over-fetched at ``radius + margin`` in ADC
     space; see that docstring for the margin contract). Without it
     the radius stays in ADC space, as documented above. The codes ⊆
     points contract and ``strict`` apply as in :func:`adc_search_index`;
     ``margin`` / ``vec_col`` / ``strict`` configure the re-score stage
-    and are rejected without ``points_path`` — detection is PRESENCE-
-    based for all three (``margin=None`` default, r16 advisor: the two
-    one-call APIs previously detected "configured" inconsistently — an
-    explicit ``margin=0.0`` slipped through while an explicit
-    ``strict=False`` raised; now any explicitly-passed re-score knob,
-    default-valued or not, requires ``points_path`` in both APIs)."""
-    from vector_search_spark.operators import pq as _pq
-
-    if points_path is None:
-        refined_only = {"margin": margin is not None} | {
-            kw: kw in kwargs for kw in ("vec_col", "strict")
-        }
-        bad = sorted(kw for kw, given in refined_only.items() if given)
-        if bad:  # fail loud — see adc_search_index (r15 advisor)
-            raise ValueError(
-                f"{bad} configure the exact re-score stage and require "
-                "points_path — ADC-space radius serving has no stage 2"
-            )
-    C = load_centroids(spark, centroids_path)
-    model = _pq.load_model(spark, model_path)
-    codes = spark.read.parquet(codes_path)
-    if base_filter is not None:
-        codes = codes.filter(base_filter)
-    if points_path is not None:
-        # base_filter is NOT applied to points: stage-2 membership is
-        # already restricted by the filtered codes scan (the re-score
-        # joins survivors by vec_id), and the predicate's columns may
-        # not exist on a user's raw-vector parquet — filtering here
-        # would crash the refined path where the plain one succeeds.
-        points = spark.read.parquet(points_path)
+    and are rejected without ``points_path`` — by presence, so an
+    explicit ``margin=0.0`` or ``strict=False`` raises too."""
+    C, model, codes, points = _open_index(
+        spark, codes_path, centroids_path, base_filter, model_path,
+        points_path, ("margin", margin), kwargs,
+    )
+    if points is not None:
         return ivf_adc_range_refined(
             queries, codes, C, model, radius=radius, points=points,
             nprobe=nprobe, margin=0.0 if margin is None else margin,

@@ -1,7 +1,7 @@
 """PCA dimensionality reduction for embedding columns (the FAISS
 PCAMatrix preprocessing stage: project D -> d before indexing, both to
 shrink the index and to concentrate variance for quantizers; sibling of
-pq.random_rotation, which is the isometric no-reduction case).
+bq.random_rotation, which is the isometric no-reduction case).
 
 Scale shape: the sufficient statistics (sum vector + D x D co-moment
 matrix) are accumulated in ONE mapInPandas pass with per-batch BLAS

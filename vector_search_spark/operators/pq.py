@@ -29,11 +29,13 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_search_spark.functions.distance import as_double_array
+from vector_search_spark.operators import bq as _bq
 from vector_search_spark.operators import kmeans as _kmeans
+from vector_search_spark.operators.bq import random_rotation  # noqa: F401
 from vector_search_spark.operators.knn import topk_per_query
 
 
@@ -322,32 +324,102 @@ def decode(
     return src.mapInPandas(fn, f"{id_col} long, vec array<double>")
 
 
-def _emit_grouped_topk(qids, vids, D, k, exclude_self=False):
-    """Shared partial-top-k emitter over a distance matrix (nq x nb)."""
-    if exclude_self:
-        D[qids[:, None] == vids[None, :]] = np.inf
-    kk = min(k + 8, D.shape[1])
-    if kk < D.shape[1]:
-        cand = np.argpartition(D, kk - 1, axis=1)[:, :kk]
-    else:
-        cand = np.broadcast_to(np.arange(D.shape[1]), (len(qids), D.shape[1]))
-    rows_q, rows_v, rows_d = [], [], []
-    for i in range(len(qids)):
-        cj = cand[i]
-        dj = D[i, cj]
-        order = np.lexsort((vids[cj], dj))[:k]
-        keep, dk = cj[order], dj[order]
-        fin = np.isfinite(dk)
-        rows_q.append(np.full(int(fin.sum()), qids[i]))
-        rows_v.append(vids[keep][fin])
-        rows_d.append(dk[fin])
-    return pd.DataFrame(
-        {
-            "query_id": np.concatenate(rows_q),
-            "vec_id": np.concatenate(rows_v),
-            "dist": np.concatenate(rows_d),
-        }
+def _collect_queries(
+    queries: DataFrame, query_id_col: str, query_vec_col: str
+):
+    """Collect the caller-bounded query batch: ``(qids, Q)`` with ``Q``
+    the (nq, D) float64 query matrix."""
+    qpdf = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        as_double_array(query_vec_col).alias("qv"),
+    ).toPandas()
+    if not len(qpdf):
+        raise ValueError("empty query set")
+    return (
+        qpdf["query_id"].to_numpy(dtype=np.int64),
+        np.vstack(qpdf["qv"].to_numpy()).astype(np.float64),
     )
+
+
+def _adc_lut(codebooks: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """THE ADC lookup table: ``lut[q, m, k]`` = squared L2 from query
+    ``q``'s m-th subvector to codeword ``k`` of subspace ``m``, shape
+    (nq, M, K). Every ADC path (flat codes, routed cells, the
+    compressed HNSW walk) builds its table here."""
+    m, kcent, dsub = codebooks.shape
+    Q3 = Q.reshape(len(Q), m, dsub)
+    lut = np.empty((len(Q), m, kcent))
+    for mi in range(m):
+        Qm, Cm = Q3[:, mi, :], codebooks[mi]
+        lut[:, mi, :] = (
+            (Qm * Qm).sum(axis=1)[:, None]
+            + (Cm * Cm).sum(axis=1)[None, :]
+            - 2.0 * (Qm @ Cm.T)
+        )
+    np.maximum(lut, 0.0, out=lut)  # cancellation clamp
+    return lut
+
+
+def _adc_scores(lut: np.ndarray, codes) -> np.ndarray:
+    """(nq, n) table-summed distances of a column of ``n`` codes
+    against every query row of ``lut`` — M gathers per candidate."""
+    cm = _code_matrix(codes)
+    D = np.zeros((len(lut), len(cm)))
+    for mi in range(lut.shape[1]):
+        D += lut[:, mi, cm[:, mi]]
+    return D
+
+
+def _topk_rows(vids: np.ndarray, D: np.ndarray, k: int):
+    """Per-row top-``k`` cut of a distance tile: ``(row, col)`` index
+    pairs of each row's ``k`` smallest finite distances, ties broken by
+    ascending ``vids`` — the order :func:`knn.topk_per_query` promises.
+    Every candidate tied with the k-th distance survives the partition
+    step, so an exact tie at the cut can never drop the lowest id."""
+    kth = (
+        np.partition(D, k - 1, axis=1)[:, k - 1 : k]
+        if k < D.shape[1]
+        else np.inf
+    )
+    qi, vj = np.nonzero(~(D > kth))
+    d = D[qi, vj]
+    order = np.lexsort((vids[vj], d, qi))
+    qi, vj, d = qi[order], vj[order], d[order]
+    keep = (np.arange(len(qi)) - np.searchsorted(qi, qi) < k) & np.isfinite(d)
+    return qi[keep], vj[keep]
+
+
+def _lut_topk(
+    codes: DataFrame,
+    qids: np.ndarray,
+    lut: np.ndarray,
+    k: int,
+    id_col: str,
+    code_col: str,
+    exclude_self: bool = False,
+) -> DataFrame:
+    """Table-lookup top-k over a code table: broadcast ``(qids, lut)``,
+    one pass over the codes, per-batch partial top-k, exact top-k
+    window. ``adc_topk`` and ``sdc_topk`` differ only in the table."""
+    bc = codes.sparkSession.sparkContext.broadcast((qids, lut))
+    src = codes.select(F.col(id_col).alias("_id"), F.col(code_col).alias("_c"))
+
+    def fn(batches):
+        b_qids, b_lut = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            vids = pdf["_id"].to_numpy(dtype=np.int64)
+            D = _adc_scores(b_lut, pdf["_c"])
+            if exclude_self:
+                D[b_qids[:, None] == vids[None, :]] = np.inf
+            qi, vj = _topk_rows(vids, D, k)
+            yield pd.DataFrame(
+                {"query_id": b_qids[qi], "vec_id": vids[vj], "dist": D[qi, vj]}
+            )
+
+    scored = src.mapInPandas(fn, "query_id long, vec_id long, dist double")
+    return topk_per_query(scored, k)
 
 
 def adc_topk(
@@ -369,38 +441,10 @@ def adc_topk(
     keeps the shuffle at ~k rows per query per batch. Exact top-k
     window afterwards. Returns (query_id, vec_id, dist, rank).
     """
-    m, kcent, dsub = model.codebooks.shape
-    qpdf = queries.select(
-        F.col(query_id_col).alias("qid"), as_double_array(query_vec_col).alias("qv")
-    ).toPandas()
-    qids = qpdf["qid"].to_numpy(dtype=np.int64)
-    Q = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64).reshape(len(qpdf), m, dsub)
-    lut = np.empty((len(qids), m, kcent))
-    for mi in range(m):
-        Qm, Cm = Q[:, mi, :], model.codebooks[mi]
-        lut[:, mi, :] = (
-            (Qm * Qm).sum(axis=1)[:, None]
-            + (Cm * Cm).sum(axis=1)[None, :]
-            - 2.0 * (Qm @ Cm.T)
-        )
-    np.maximum(lut, 0.0, out=lut)  # cancellation clamp
-    bc = queries.sparkSession.sparkContext.broadcast((qids, lut))
-    src = codes.select(F.col(id_col).alias("_id"), F.col(code_col).alias("_c"))
-
-    def fn(batches):
-        b_qids, b_lut = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vids = pdf["_id"].to_numpy(dtype=np.int64)
-            cm = _code_matrix(pdf["_c"])
-            D = np.zeros((len(b_qids), len(vids)))
-            for mi in range(m):
-                D += b_lut[:, mi, cm[:, mi]]
-            yield _emit_grouped_topk(b_qids, vids, D, k)
-
-    scored = src.mapInPandas(fn, "query_id long, vec_id long, dist double")
-    return topk_per_query(scored, k)
+    qids, Q = _collect_queries(queries, query_id_col, query_vec_col)
+    return _lut_topk(
+        codes, qids, _adc_lut(model.codebooks, Q), k, id_col, code_col
+    )
 
 
 def sdc_table(model: PQModel) -> np.ndarray:
@@ -425,48 +469,18 @@ def sdc_topk(
     id_col: str = "vec_id",
     code_col: str = "code",
 ) -> DataFrame:
-    """Symmetric (code-to-code) kNN via broadcast SDC tables."""
-    m = model.m
+    """Symmetric (code-to-code) kNN: each query code's rows of the
+    :func:`sdc_table` form its lookup table (``lut[q, m] =
+    T[m, qcode[q, m]]``), then the same table scan as :func:`adc_topk`."""
     qpdf = query_codes.select(
         F.col(id_col).alias("qid"), F.col(code_col).alias("qc")
     ).toPandas()
-    qids = qpdf["qid"].to_numpy(dtype=np.int64)
     qcm = _code_matrix(qpdf["qc"])
-    bc = codes.sparkSession.sparkContext.broadcast((qids, qcm, sdc_table(model)))
-    src = codes.select(F.col(id_col).alias("_id"), F.col(code_col).alias("_c"))
-
-    def fn(batches):
-        b_qids, b_qcm, T = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vids = pdf["_id"].to_numpy(dtype=np.int64)
-            cm = _code_matrix(pdf["_c"])
-            D = np.zeros((len(b_qids), len(vids)))
-            for mi in range(m):
-                D += T[mi][b_qcm[:, mi][:, None], cm[:, mi][None, :]]
-            yield _emit_grouped_topk(b_qids, vids, D, k, exclude_self=exclude_self)
-
-    scored = src.mapInPandas(fn, "query_id long, vec_id long, dist double")
-    return topk_per_query(scored, k)
-
-
-# ---- persistence (Get/SetCodebooks, py/pq.py:351-381) ----
-
-
-def random_rotation(dim: int, seed: int = 42) -> np.ndarray:
-    """Seeded random ORTHONORMAL rotation (QR of a gaussian matrix,
-    sign-fixed so the decomposition is unique): the cheap cousin of OPQ
-    (Ge et al. 2013) that FAISS ships as OPQ's "random rotation" mode.
-    Rotating vectors before PQ balances variance across the M subspaces,
-    which is exactly what per-subspace quantizers need when the input
-    dimensions are skewed; the rotation is an isometry, so true
-    neighbors and L2 distances are unchanged."""
-    rng = np.random.default_rng(seed)
-    A = rng.normal(size=(dim, dim))
-    Q, R = np.linalg.qr(A)
-    Q *= np.sign(np.diag(R))[None, :]
-    return np.ascontiguousarray(Q)
+    lut = sdc_table(model)[np.arange(model.m)[None, :], qcm]
+    return _lut_topk(
+        codes, qpdf["qid"].to_numpy(dtype=np.int64), lut, k, id_col,
+        code_col, exclude_self=exclude_self,
+    )
 
 
 def rotate(
@@ -476,31 +490,15 @@ def rotate(
     vec_col: str = "embedding",
     out_col: str = "rotated",
 ) -> DataFrame:
-    """x -> R @ x per row: broadcast the (D x D) rotation, one gemm per
-    Arrow batch — the standard pre-processing stage in front of
-    train_pq/encode for rotated (OPQ-style) codes. Returns
-    (id_col, out_col)."""
-    bc = points.sparkSession.sparkContext.broadcast(
-        np.ascontiguousarray(R, dtype=np.float64)
-    )
-    src = points.select(
-        F.col(id_col).alias("_id"), as_double_array(vec_col).alias("_v")
-    )
+    """x -> R @ x per row through :func:`bq.rotate` (NULL vectors
+    dropped) — the pre-processing stage in front of train_pq/encode for
+    rotated (OPQ-style) codes. Returns (id_col, out_col)."""
+    return _bq.rotate(
+        points.select(id_col, vec_col), R, vec_col, out_col
+    ).select(id_col, out_col)
 
-    def fn(batches):
-        RR = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf["_id"].to_numpy(dtype=np.int64),
-                    out_col: list(X @ RR.T),
-                }
-            )
 
-    return src.mapInPandas(fn, f"{id_col} long, {out_col} array<double>")
+# ---- persistence (Get/SetCodebooks, py/pq.py:351-381) ----
 
 
 def save_model(spark: SparkSession, model: PQModel, path: str) -> None:
@@ -558,33 +556,17 @@ def refine_topk(
     fold the oracle replays. Returns (query_id, vec_id, dist, rank<=k)
     with EXACT distances.
     """
-    from vector_search_spark.functions.distance import l2_sqr
+    from vector_search_spark.operators.ivf import _exact_rescore
 
     cand = adc_topk(
         queries, codes, model, k=shortlist,
         query_id_col=query_id_col, query_vec_col=query_vec_col,
         id_col=id_col, code_col=code_col,
     ).select("query_id", "vec_id")
-    qv = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("_qv"),
-    )
-    pv = points.select(
-        F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("_pv")
-    )
-    scored = (
-        cand.join(pv, "vec_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id", "vec_id", l2_sqr("_qv", "_pv").alias("dist")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "dist", "rank")
-    )
+    scored = _exact_rescore(
+        cand, queries, points, query_id_col, query_vec_col, id_col, vec_col
+    ).select("query_id", "vec_id", "dist")
+    return topk_per_query(scored, k)
 
 
 def _lloyd_numpy(X: np.ndarray, C: np.ndarray, iters: int) -> np.ndarray:
