@@ -72,26 +72,8 @@ HEADLINE = [
 # top-N cut. Checked against the catalog at startup — a stale name
 # here fails loudly instead of silently guarding nothing.
 CHANGED_THIS_ROUND = [
-    # one IVF/PQ/BQ serving seam: one per-cell scan (flat gemm / ADC
-    # scorer x top-k / radius cut), one ADC lookup-table routine, one
-    # exact re-score, one rotation, one opener and routed join
+    # ivf_topk(impl="gemm") routes its batch on the driver
     "ivf_knn",
-    "ivf_filtered_knn",
-    "ivf_range",
-    "knn_range",
-    "ivf_adc_knn",
-    "ivf_adc_range",
-    "ivf_adc_knn_refined",
-    "ivf_adc_range_refined",
-    "ivf_adc_margin_check",
-    "adc_refine_curve",
-    "pq_adc_knn",
-    "pq_sdc_pairs",
-    "pq_refine_knn",
-    "opq_adc_knn",
-    "bq_hamming_knn",
-    "bq_rotated_knn",
-    "hnsw_adc_knn",
 ]
 
 TOP_N = 20

@@ -376,3 +376,80 @@ def test_pushed_filters_handles_in_lists_and_codegen_helper(spark):
         for f in fs
     ), fs
     assert plans.wholestage_codegen_ids(df) >= 1
+
+
+@pytest.fixture
+def tiny_index(spark, tmp_path):
+    """A persisted 2-D IVF index of 12 rows in 3 cells: ``(index path,
+    centroids path, C)``."""
+    import numpy as np
+
+    from vector_search_spark.operators import ivf
+
+    base = spark.createDataFrame(
+        [(i, [float(i), float(i % 3)]) for i in range(12)],
+        "vec_id long, embedding array<float>",
+    )
+    C = np.array([[1.0, 1.0], [5.0, 1.0], [10.0, 1.0]])
+    path, cpath = str(tmp_path / "index"), str(tmp_path / "cents")
+    ivf.write_index(ivf.assign_clusters(base, C), path)
+    ivf.save_centroids(spark, C, cpath)
+    return path, cpath, C
+
+
+@pytest.mark.parametrize(
+    "rows, match",
+    [
+        ([(1, [1.0, 0.0]), (7, None)], "query 7: a NULL vector"),
+        ([(1, [1.0, 0.0]), (7, [float("nan"), 0.0])], "query 7: a NaN"),
+        ([(7, [0.0, float("-inf")])], "query 7: a NaN or infinite"),
+        (
+            [(1, [1.0, 0.0]), (7, [1.0, 0.0, 2.0])],
+            "query 7: dimension 3, not the centroids' 2",
+        ),
+        ([(7, [1.0, 0.0]), (7, [2.0, 0.0])], "query 7: a duplicate id"),
+    ],
+    ids=["null_vector", "nan", "inf", "dimension", "duplicate_id"],
+)
+def test_ivf_serving_rejects_bad_query_batches(spark, tiny_index, rows, match):
+    """Every routed serving path (persisted flat one-calls, gemm, ADC)
+    shares one batch check and names the offending query — the
+    Catalyst fold would score these as NULL distances and the driver
+    replay would truncate or misorder them."""
+    import numpy as np
+
+    from vector_search_spark.operators import ivf, pq
+
+    path, cpath, C = tiny_index
+    qs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    base = spark.read.parquet(path)
+    model = pq.PQModel(np.zeros((2, 1, 1)))
+    for call in (
+        lambda: ivf.search_index(spark, path, cpath, qs, k=2, nprobe=2),
+        lambda: ivf.range_index(spark, path, cpath, qs, radius=4.0, nprobe=2),
+        lambda: ivf.ivf_topk(qs, base, C, k=2, nprobe=2, impl="gemm"),
+        lambda: ivf.ivf_adc_topk(qs, base, C, model, k=2, nprobe=2),
+    ):
+        with pytest.raises(ValueError, match=match):
+            call()
+
+
+def test_persisted_search_empty_batch_returns_empty_frame(spark, tiny_index):
+    """An empty batch routes to no cell: search_index / range_index give
+    an empty frame with the lazy-route path's schema."""
+    from vector_search_spark.operators import ivf
+
+    path, cpath, C = tiny_index
+    qs = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    base = spark.read.parquet(path)
+    for got, want in (
+        (
+            ivf.search_index(spark, path, cpath, qs, k=2, nprobe=2),
+            ivf.ivf_topk(qs, base, C, k=2, nprobe=2),
+        ),
+        (
+            ivf.range_index(spark, path, cpath, qs, radius=4.0, nprobe=2),
+            ivf.ivf_range(qs, base, C, radius=4.0, nprobe=2),
+        ),
+    ):
+        assert got.schema == want.schema and got.count() == 0

@@ -5,6 +5,8 @@ nprobe == NC, impl equivalence, and the physical partition-pruning plan
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -759,6 +761,13 @@ def test_index_maintenance_lifecycle(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
     )
+    # the persisted one-call (driver-routed) over the same final layout
+    got_s = ivf.search_index(
+        spark, path, cpath, queries, k=3, nprobe=len(C3)
+    ).select("query_id", "vec_id", "rank")
+    assert sorted(map(tuple, got_s.collect())) == sorted(
+        map(tuple, want.collect())
+    )
 
     # radius serving over the same final layout (r14): range_index at
     # full probe == exact range_search over the logical corpus — the
@@ -823,6 +832,108 @@ def test_search_index_serving_api_with_filter(spark, tmp_path):
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     assert "label" in plan.split("PushedFilters", 1)[1][:400]
+
+
+@pytest.fixture(scope="module")
+def persisted(spark, emb, tmp_path_factory):
+    """A persisted IVF-flat index whose cells carry ``label``, and its
+    centroid model: ``(index path, centroids path, C)``."""
+    C = kmeans.init_first_k(emb, 8)
+    root = tmp_path_factory.mktemp("persisted")
+    path, cpath = str(root / "index"), str(root / "cents")
+    ivf.write_index(
+        ivf.assign_clusters(emb, C).join(emb.select("vec_id", "label"), "vec_id"),
+        path,
+    )
+    ivf.save_centroids(spark, C, cpath)
+    return path, cpath, C
+
+
+def _job_count(spark, fn):
+    """``(fn(), number of Spark jobs it launched)``, counted through a
+    job group of its own."""
+    sc = spark.sparkContext
+    group = f"vss-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_persisted_one_calls_equal_the_lazy_route_path(spark, emb, persisted):
+    """search_index / range_index route the batch on the driver and
+    score through one broadcast (query, cell, vector) table; rows, dist
+    included, and schema equal the lazy-route ivf_topk(impl="expr") /
+    ivf_range over the same filtered relation — here with an int
+    query-id column, metric l2 and a base_filter."""
+    path, cpath, C = persisted
+    qs = emb.filter(F.col("vec_id") < 12).select(
+        F.col("vec_id").cast("int").alias("qid"), "embedding"
+    )
+    flt = F.col("label") == 1
+    base = spark.read.parquet(path).filter(flt)
+    kw = dict(metric="l2", query_id_col="qid")
+    for got, want in (
+        (
+            ivf.search_index(
+                spark, path, cpath, qs, k=5, nprobe=3, base_filter=flt, **kw
+            ),
+            ivf.ivf_topk(qs, base, C, k=5, nprobe=3, **kw),
+        ),
+        (
+            ivf.range_index(
+                spark, path, cpath, qs, radius=1.2, nprobe=3,
+                base_filter=flt, **kw,
+            ),
+            ivf.ivf_range(qs, base, C, radius=1.2, nprobe=3, **kw),
+        ),
+    ):
+        assert got.schema == want.schema
+        rows = sorted(map(tuple, got.collect()))
+        assert rows and rows == sorted(map(tuple, want.collect()))
+
+
+def test_search_index_runs_at_most_six_jobs(spark, emb, persisted):
+    """Open (centroids, cell listing) + one batch collect + the scan
+    and window: no distributed route job, no range sort, and the
+    caller's query plan runs once."""
+    path, cpath, _ = persisted
+    qs = emb.filter(F.col("vec_id") < 16)
+    rows, jobs = _job_count(
+        spark,
+        lambda: ivf.search_index(spark, path, cpath, qs, k=10, nprobe=3)
+        .collect(),
+    )
+    assert len(rows) == 160 and jobs <= 6, jobs
+
+
+def test_range_index_without_query_broadcast_keeps_the_lazy_route(
+    spark, emb, persisted
+):
+    """``broadcast_queries=False`` (a corpus-sized query side) plans the
+    distributed route_queries join: no job beyond the open's own runs
+    before the action, and the rows equal the driver-routed default."""
+    path, cpath, _ = persisted
+    qs = emb.filter(F.col("vec_id") < 12)
+    _, open_jobs = _job_count(spark, lambda: ivf._open_index(spark, path, cpath))
+    lazy, jobs = _job_count(
+        spark,
+        lambda: ivf.range_index(
+            spark, path, cpath, qs, radius=1.5, nprobe=3,
+            broadcast_queries=False,
+        ),
+    )
+    assert jobs == open_jobs
+    # route_queries' row_number rank is in the plan, not run eagerly
+    assert "Window" in lazy._jdf.queryExecution().optimizedPlan().toString()
+    routed = ivf.range_index(spark, path, cpath, qs, radius=1.5, nprobe=3)
+    assert "Window" not in (
+        routed._jdf.queryExecution().optimizedPlan().toString()
+    )
+    rows = sorted(map(tuple, lazy.collect()))
+    assert rows and rows == sorted(map(tuple, routed.collect()))
 
 
 # --- deletion-list purge (ivf.delete_ids) ---------------------------------

@@ -154,6 +154,19 @@ def test_load_model_validates_shape(spark, model, tmp_path):
         pq.load_model(spark, str(tmp_path / "cb_missing.parquet"))
 
 
+def test_load_model_rejects_duplicate_grid_cell(spark, tmp_path):
+    """A duplicated (m, k) row with a compensating gap has the m x k
+    row count and would misalign every later codebook: the grid check
+    is element-wise, not a row count."""
+    path = str(tmp_path / "cb_dup.parquet")
+    spark.createDataFrame(
+        [(0, 0, [0.0]), (0, 1, [1.0]), (0, 1, [1.0]), (1, 0, [2.0])],
+        "m int, k int, centroid array<double>",
+    ).write.parquet(path)
+    with pytest.raises(ValueError, match="ragged codebooks"):
+        pq.load_model(spark, path)
+
+
 def test_codec_protocol_generic_search(spark):
     """Reference parity for the VectorCompression strategy switch
     (py/vector_compression.py:5-94, composed at py/hnsw.py:181-189):

@@ -12,9 +12,11 @@ Every serving function here is one pipeline, written once:
 
 1. **route** — each query's ``nprobe`` nearest coarse centroids. The
    centroid model is tiny (NC x D doubles): :func:`route_queries` is a
-   broadcast cross join + window rank; the ADC paths replay the same
-   fold on the driver while ``VSS_ADC_DRIVER_ROUTE_TERMS`` allows
-   (:func:`_route_batch`).
+   broadcast cross join + window rank, kept lazy by ``ivf_topk(impl=
+   "expr")`` and :func:`ivf_range`; the gemm and ADC paths and the
+   persisted one-calls collect the batch once and replay the same fold
+   on the driver while ``VSS_ADC_DRIVER_ROUTE_TERMS`` allows
+   (:func:`_route_batch`, bit-identical membership).
 2. **score** — only the routed cells: ``base.filter(cluster_id IN
    routed)`` over a parquet layout partitioned by ``cluster_id`` is
    *partition pruning* (Catalyst never reads the other cells' files;
@@ -32,7 +34,8 @@ Every serving function here is one pipeline, written once:
 
 The persisted one-calls (:func:`search_index`, :func:`range_index`,
 :func:`adc_search_index`, :func:`adc_range_index`) open the written
-artifacts through :func:`_open_index` and run the same pipeline.
+artifacts through :func:`_open_index` and run the same pipeline,
+routed on the driver.
 
 Recall is governed by nprobe/NC exactly as in FAISS-style IVF-Flat;
 nprobe == NC degenerates to exact brute force (tests assert recall
@@ -87,6 +90,14 @@ def write_index(
     assigned.write.mode("overwrite").partitionBy(cluster_col).parquet(path)
 
 
+def _query_side(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(query_id, _qv)``: the query batch as every path reads it, its
+    vectors widened to array<double>."""
+    return queries.select(
+        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("_qv")
+    )
+
+
 def route_queries(
     queries: DataFrame,
     centroids: np.ndarray,
@@ -105,10 +116,7 @@ def route_queries(
             "cluster_id", F.col("centroid").alias("_cv")
         )
     )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("_qv"),
-    )
+    q = _query_side(queries, query_id_col, query_vec_col)
     w = Window.partitionBy("query_id").orderBy(
         F.col("_cd").asc(), F.col("cluster_id").asc()
     )
@@ -130,13 +138,14 @@ def _routed_scores(
     assigned_base: DataFrame,
     centroids: np.ndarray,
     nprobe: int,
-    metric: str,
-    query_id_col: str,
-    query_vec_col: str,
-    base_id_col: str,
-    base_vec_col: str,
-    cluster_col: str,
+    metric: str = "l2_sqr",
+    query_id_col: str = "vec_id",
+    query_vec_col: str = "embedding",
+    base_id_col: str = "vec_id",
+    base_vec_col: str = "embedding",
+    cluster_col: str = "cluster_id",
     broadcast: bool = True,
+    driver_routing: bool = False,
 ) -> DataFrame:
     """The routed candidate join: ``(query_id, vec_id, dist)`` for every
     base row in each query's routed cells, scored by the Catalyst
@@ -144,29 +153,42 @@ def _routed_scores(
     routes on the cell — Catalyst turns that into partition pruning on
     a partitioned layout — then the query vectors on ``query_id``.
     ``broadcast`` hints both the query side and the routes (nq x
-    nprobe rows, bounded exactly when the query batch is)."""
-    routes = route_queries(
-        queries, centroids, nprobe, query_id_col, query_vec_col
-    ).withColumnRenamed("cluster_id", "_cell")
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("_qv"),
+    nprobe rows, bounded exactly when the query batch is).
+
+    ``driver_routing`` collects and routes the batch once on the
+    driver (:func:`_route_batch`) and joins the base rows, filtered to
+    a static ``cluster_id IN (routed cells)``, on ``_cell`` to one
+    Arrow-built broadcast ``(query_id, _qv, _cell)`` table: the same
+    pairs and the same fold, so the same rows, with no distributed
+    route job and no second run of the caller's query plan."""
+    base = assigned_base.select(
+        F.col(base_id_col).alias("vec_id"),
+        as_double_array(base_vec_col).alias("_bv"),
+        F.col(cluster_col).alias("_cell"),
     )
-    if broadcast:
-        q, routes = F.broadcast(q), F.broadcast(routes)
-    return (
-        assigned_base.select(
-            F.col(base_id_col).alias("vec_id"),
-            as_double_array(base_vec_col).alias("_bv"),
-            F.col(cluster_col).alias("_cell"),
+    if driver_routing:
+        qids, Q, cells = _route_batch(
+            queries, centroids, nprobe, query_id_col, query_vec_col
         )
-        .join(routes, "_cell")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            distance(metric, "_qv", "_bv").alias("dist"),
+        rows = [(qids[i], Q[i].tolist(), c) for c in cells for i in cells[c]]
+        side = _query_side(queries, query_id_col, query_vec_col).schema
+        table = queries.sparkSession.createDataFrame(
+            pd.DataFrame(rows, columns=["query_id", "_qv", "_cell"]),
+            side.add(base.schema["_cell"]),
         )
+        joined = base.filter(F.col("_cell").isin(sorted(cells))).join(
+            F.broadcast(table), "_cell"
+        )
+    else:
+        routes = route_queries(
+            queries, centroids, nprobe, query_id_col, query_vec_col
+        ).withColumnRenamed("cluster_id", "_cell")
+        q = _query_side(queries, query_id_col, query_vec_col)
+        if broadcast:
+            q, routes = F.broadcast(q), F.broadcast(routes)
+        joined = base.join(routes, "_cell").join(q, "query_id")
+    return joined.select(
+        "query_id", "vec_id", distance(metric, "_qv", "_bv").alias("dist")
     )
 
 
@@ -176,30 +198,48 @@ def _route_batch(
     nprobe: int,
     query_id_col: str,
     query_vec_col: str,
-    driver_routing: bool,
 ):
     """Collect the caller-bounded query batch and route it: ``(qids,
     Q, cells)`` with ``cells = {cell: ascending positions (into qids)
-    of the queries routed there}``.
+    of the queries routed there}``. An empty batch routes to no cell.
 
-    ``driver_routing`` replays :func:`route_queries` on the driver
-    while nq x NC x D <= ``VSS_ADC_DRIVER_ROUTE_TERMS`` (default 2e6
-    terms, about 0.6 s — below the ~1 s the distributed pass costs at
-    bench scale; <= 0 lifts the cap): the distance loop repeats the
-    Catalyst l2 fold's sequential index-order sum exactly (same IEEE
-    adds in the same order) and ties break by ascending cluster_id like
+    A bad batch raises a ValueError naming the query: a NULL id or
+    vector, a NaN or infinite component, a dimension other than the
+    centroids', or an id seen earlier in the batch. Unchecked, the
+    Catalyst fold scores them as NULL distances and the driver replay
+    truncates (``zip``) or misorders (NaN sort keys) them.
+
+    Routing replays :func:`route_queries` on the driver while nq x NC
+    x D <= ``VSS_ADC_DRIVER_ROUTE_TERMS`` (default 2e6 terms, about
+    0.6 s — below the ~1 s the distributed pass costs at bench scale;
+    <= 0 lifts the cap): the distance loop repeats the Catalyst l2
+    fold's sequential index-order sum exactly (same IEEE adds in the
+    same order) and ties break by ascending cluster_id like
     route_queries' window, so membership is bit-identical and the
     distributed broadcast + window job is saved. The loop is
     interpreted Python (~300 ns per term) and NC grows with the corpus,
-    so above the cap — and always without ``driver_routing`` — the
-    distributed :func:`route_queries` runs and only its nq x nprobe
-    (query_id, cluster_id) pairs are collected."""
-    qids, Q = _pq._collect_queries(queries, query_id_col, query_vec_col)
+    so above the cap the distributed :func:`route_queries` runs and
+    only its nq x nprobe (query_id, cluster_id) pairs are collected."""
+    qpdf = _query_side(queries, query_id_col, query_vec_col).toPandas()
+    dim = np.shape(centroids)[1]
+    dup = qpdf["query_id"].duplicated()
+    for qid, v, d in zip(qpdf["query_id"], qpdf["_qv"], dup):
+        bad = (
+            "a NULL id" if pd.isna(qid) else "a duplicate id" if d
+            else "a NULL vector" if v is None
+            else f"dimension {len(v)}, not the centroids' {dim}"
+            if len(v) != dim else "a NaN or infinite component"
+            if not np.isfinite(v).all() else None
+        )
+        if bad:
+            raise ValueError(f"query {qid}: {bad}")
+    qids = qpdf["query_id"].to_numpy()
+    Q = np.asarray(list(qpdf["_qv"]), dtype=np.float64).reshape(-1, dim)
     budget = int(
         float(os.environ.get("VSS_ADC_DRIVER_ROUTE_TERMS", "2000000"))
     )
     n_terms = Q.size * len(centroids)
-    if driver_routing and (budget <= 0 or n_terms <= budget):
+    if budget <= 0 or n_terms <= budget:
         cents = np.ascontiguousarray(centroids, dtype=np.float64)
 
         def _seq_l2(q, c) -> float:
@@ -220,9 +260,9 @@ def _route_batch(
         rpdf = route_queries(
             queries, centroids, nprobe, query_id_col, query_vec_col
         ).toPandas()
-        pos = {int(q): i for i, q in enumerate(qids)}
+        pos = {q: i for i, q in enumerate(qids)}
         pairs = [
-            (pos[int(q)], int(c))
+            (pos[q], int(c))
             for q, c in zip(rpdf["query_id"], rpdf["cluster_id"])
         ]
     members: dict[int, list[int]] = {}
@@ -333,7 +373,8 @@ def ivf_topk(
     ``impl='expr'``: the broadcast routed join (:func:`_routed_scores`)
     + the codegen distance fold + window top-k.
 
-    ``impl='gemm'``: same routed filter, then one BLAS pass over the
+    ``impl='gemm'``: the batch routed on the driver
+    (:func:`_route_batch`), then one BLAS pass over the
     surviving partitions (:func:`_cell_scan`): each Arrow batch is
     grouped by cell and scored against just that cell's queries,
     emitting per-batch partial top-k. Use when (routed candidates x
@@ -351,8 +392,7 @@ def ivf_topk(
     if impl != "gemm":
         raise ValueError(f"unknown impl {impl!r}")
     qids, Q, cells = _route_batch(
-        queries, centroids, nprobe, query_id_col, query_vec_col,
-        driver_routing=False,
+        queries, centroids, nprobe, query_id_col, query_vec_col
     )
     qn2 = (Q * Q).sum(axis=1)
     cell_to_q = {c: (qi, (Q[qi], qn2[qi])) for c, qi in cells.items()}
@@ -462,8 +502,7 @@ def _adc_scan(
     ``residual=True`` builds each (query, cell) table from the query's
     residual against that cell's centroid."""
     qids, Q, cells = _route_batch(
-        queries, centroids, nprobe, query_id_col, query_vec_col,
-        driver_routing=True,
+        queries, centroids, nprobe, query_id_col, query_vec_col
     )
     cents = np.asarray(centroids, dtype=np.float64)
     glob = None if residual else _pq._adc_lut(model.codebooks, Q)
@@ -615,10 +654,7 @@ def _exact_rescore(
     cost of a join that Catalyst cannot reduce to inner."""
     from vector_search_spark.functions.distance import l2_sqr
 
-    qv = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("_qv"),
-    )
+    qv = _query_side(queries, query_id_col, query_vec_col)
     pv = points.select(
         F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("_pv")
     )
@@ -831,6 +867,11 @@ def adc_search_index(
         points_path, ("shortlist", shortlist), kwargs,
     )
     if points is not None:
+        # collect the batch once: stage 1 routes it, stage 2 broadcasts it
+        qc = kwargs.get("query_id_col", "vec_id")
+        vc = kwargs.get("query_vec_col", "embedding")
+        local = queries.select(qc, as_double_array(vc).alias(vc))
+        queries = spark.createDataFrame(local.toPandas(), local.schema)
         return ivf_adc_topk_refined(
             queries, codes, C, model, points=points, k=k,
             shortlist=shortlist if shortlist is not None else 5 * k,
@@ -1076,10 +1117,17 @@ def search_index(
 ) -> DataFrame:
     """One-call serving API over the PERSISTED index: load the model
     (:func:`load_centroids`), open the cell-partitioned parquet, route
-    + score only the probed cells (:func:`ivf_topk`). This is the
+    the batch on the driver and score only the probed cells with the
+    ``ivf_topk(impl="expr")`` fold and window (:func:`_routed_scores`;
+    same rows, still a lazy partition-pruned DataFrame). This is the
     call a query service makes per batch — everything upstream
     (write_index, upsert, compact, rebalance + save_centroids) exists
-    to keep this one fast and correct.
+    to keep this one fast and correct. ``impl="gemm"`` serves through
+    :func:`ivf_topk` instead.
+
+    DRIVER STATE: the collected batch and its broadcast (query, cell,
+    vector) table, nq x nprobe x D doubles — set by the caller's batch,
+    never by the corpus.
 
     ``base_filter`` (optional Column) is a metadata predicate applied
     before scoring — filtered ANN on the pruned path (see
@@ -1088,7 +1136,13 @@ def search_index(
     probed cells).
     """
     C, _, base, _ = _open_index(spark, index_path, centroids_path, base_filter)
-    return ivf_topk(queries, base, C, k=k, nprobe=nprobe, **kwargs)
+    impl = kwargs.pop("impl", "expr")
+    if impl != "expr":
+        return ivf_topk(queries, base, C, k, nprobe, impl=impl, **kwargs)
+    scored = _routed_scores(
+        queries, base, C, nprobe, driver_routing=True, **kwargs
+    )
+    return topk_per_query(scored, k)
 
 
 def range_index(
@@ -1110,11 +1164,17 @@ def range_index(
     INCLUSIVE ``dist <= radius`` boundary as knn.range_search.
 
     ``base_filter`` applies before scoring, inside the routed cells —
-    the search_index pre-filter semantics. ``kwargs`` pass through to
-    :func:`ivf_range` (metric, column names, broadcast_queries).
+    the search_index pre-filter semantics. ``kwargs`` are
+    :func:`ivf_range`'s (metric, column names, broadcast_queries). The
+    batch routes on the driver like search_index's, except with
+    ``broadcast_queries=False`` (a corpus-sized query side), which
+    keeps ivf_range's lazy distributed route join.
     """
     C, _, base, _ = _open_index(spark, index_path, centroids_path, base_filter)
-    return ivf_range(queries, base, C, radius=radius, nprobe=nprobe, **kwargs)
+    bq = kwargs.pop("broadcast_queries", True)
+    return _routed_scores(
+        queries, base, C, nprobe, broadcast=bq, driver_routing=bq, **kwargs
+    ).filter(F.col("dist") <= F.lit(float(radius)))
 
 
 def adc_range_index(
@@ -1189,10 +1249,12 @@ def save_centroids(spark, centroids: np.ndarray, path: str) -> None:
 def load_centroids(spark, path: str) -> np.ndarray:
     """Reopen a :func:`save_centroids` model as the (NC, D) ndarray the
     routing/maintenance ops take. Model-sized driver collect by
-    definition; validates the id range is dense 0..NC-1."""
-    pdf = (
-        spark.read.parquet(path).orderBy("cluster_id").toPandas()
-    )
+    definition, read with the fixed schema save_centroids writes (no
+    footer-inference job) and sorted on the driver (no range-sort
+    jobs); validates the id range is dense 0..NC-1."""
+    schema = "cluster_id int, centroid array<double>"
+    pdf = spark.read.schema(schema).parquet(path).toPandas()
+    pdf = pdf.sort_values("cluster_id")
     ids = pdf["cluster_id"].to_numpy()
     if len(ids) == 0 or not (ids == np.arange(len(ids))).all():
         # element-wise, not endpoints-only: duplicates with a

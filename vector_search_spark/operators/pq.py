@@ -514,14 +514,29 @@ def save_model(spark: SparkSession, model: PQModel, path: str) -> None:
 
 
 def load_model(spark: SparkSession, path: str) -> PQModel:
-    pdf = spark.read.parquet(path).orderBy("m", "k").toPandas()
+    """Reopen a :func:`save_model` codebook parquet, read with the fixed
+    schema it writes (no footer-inference job) and sorted on the driver
+    (no range-sort jobs)."""
+    pdf = (
+        spark.read.schema("m int, k int, centroid array<double>")
+        .parquet(path)
+        .toPandas()
+        .sort_values(["m", "k"])
+    )
     m = int(pdf["m"].max()) + 1
     k = int(pdf["k"].max()) + 1
+    # shape validation mirrors SetCodebooks (py/pq.py:351-371), element-
+    # wise over the (m, k) grid: a row count alone passes a duplicated
+    # (m, k) with a compensating gap and misaligns every later codebook
+    grid = np.stack([np.repeat(np.arange(m), k), np.tile(np.arange(k), m)], 1)
+    mk = pdf[["m", "k"]].to_numpy()
+    if mk.shape != grid.shape or not (mk == grid).all():
+        raise ValueError(
+            f"ragged codebooks in {path}: {len(pdf)} (m, k) rows do not "
+            f"cover the {m}x{k} grid once each"
+        )
     dsub = len(pdf["centroid"].iloc[0])
     cb = np.vstack(pdf["centroid"].to_numpy()).astype(np.float64).reshape(m, k, dsub)
-    # shape validation mirrors SetCodebooks (py/pq.py:351-371)
-    if len(pdf) != m * k:
-        raise ValueError(f"ragged codebooks: {len(pdf)} rows != {m}x{k}")
     return PQModel(cb)
 
 
