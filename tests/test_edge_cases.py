@@ -412,25 +412,38 @@ def tiny_index(spark, tmp_path):
     ids=["null_vector", "nan", "inf", "dimension", "duplicate_id"],
 )
 def test_ivf_serving_rejects_bad_query_batches(spark, tiny_index, rows, match):
-    """Every routed serving path (persisted flat one-calls, gemm, ADC)
-    shares one batch check and names the offending query — the
-    Catalyst fold would score these as NULL distances and the driver
-    replay would truncate or misorder them."""
+    """Every path that collects a caller-bounded batch (persisted flat
+    one-calls, routed gemm and ADC, exact gemm kNN, flat ADC, the graph
+    walk) shares one batch check and names the offending query — the
+    Catalyst fold would score these as NULL distances, the driver
+    replay would truncate or misorder them and the gemm would emit
+    NaN. The dimension is checked against the caller's model, or the
+    batch's first row when there is none."""
     import numpy as np
 
-    from vector_search_spark.operators import ivf, pq
+    from vector_search_spark.operators import graph, ivf, pq
 
     path, cpath, C = tiny_index
     qs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     base = spark.read.parquet(path)
     model = pq.PQModel(np.zeros((2, 1, 1)))
-    for call in (
-        lambda: ivf.search_index(spark, path, cpath, qs, k=2, nprobe=2),
-        lambda: ivf.range_index(spark, path, cpath, qs, radius=4.0, nprobe=2),
-        lambda: ivf.ivf_topk(qs, base, C, k=2, nprobe=2, impl="gemm"),
-        lambda: ivf.ivf_adc_topk(qs, base, C, model, k=2, nprobe=2),
+    for dim_of, call in (
+        ("the centroids'", lambda: ivf.search_index(
+            spark, path, cpath, qs, k=2, nprobe=2)),
+        ("the centroids'", lambda: ivf.range_index(
+            spark, path, cpath, qs, radius=4.0, nprobe=2)),
+        ("the centroids'", lambda: ivf.ivf_topk(
+            qs, base, C, k=2, nprobe=2, impl="gemm")),
+        ("the centroids'", lambda: ivf.ivf_adc_topk(
+            qs, base, C, model, k=2, nprobe=2)),
+        ("the first row's", lambda: knn.brute_force_knn(qs, base, k=2)),
+        ("the model's", lambda: pq.adc_topk(qs, base, model, k=2)),
+        # the batch is checked before the walk reads the graph
+        ("the first row's", lambda: graph.greedy_search(None, base, qs, k=2)),
     ):
-        with pytest.raises(ValueError, match=match):
+        with pytest.raises(
+            ValueError, match=match.replace("the centroids'", dim_of)
+        ):
             call()
 
 

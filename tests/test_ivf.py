@@ -865,9 +865,10 @@ def _job_count(spark, fn):
 def test_persisted_one_calls_equal_the_lazy_route_path(spark, emb, persisted):
     """search_index / range_index route the batch on the driver and
     score through one broadcast (query, cell, vector) table; rows, dist
-    included, and schema equal the lazy-route ivf_topk(impl="expr") /
-    ivf_range over the same filtered relation — here with an int
-    query-id column, metric l2 and a base_filter."""
+    included, and schema equal the lazy distributed route
+    (ivf_range(broadcast_queries=False); top-k as its radius=inf hits
+    cut by topk_per_query) over the same filtered relation — here with
+    an int query-id column, metric l2 and a base_filter."""
     path, cpath, C = persisted
     qs = emb.filter(F.col("vec_id") < 12).select(
         F.col("vec_id").cast("int").alias("qid"), "embedding"
@@ -875,19 +876,26 @@ def test_persisted_one_calls_equal_the_lazy_route_path(spark, emb, persisted):
     flt = F.col("label") == 1
     base = spark.read.parquet(path).filter(flt)
     kw = dict(metric="l2", query_id_col="qid")
+
+    def lazy(radius):
+        return ivf.ivf_range(
+            qs, base, C, radius=radius, nprobe=3, broadcast_queries=False,
+            **kw,
+        )
+
     for got, want in (
         (
             ivf.search_index(
                 spark, path, cpath, qs, k=5, nprobe=3, base_filter=flt, **kw
             ),
-            ivf.ivf_topk(qs, base, C, k=5, nprobe=3, **kw),
+            knn.topk_per_query(lazy(float("inf")), 5),
         ),
         (
             ivf.range_index(
                 spark, path, cpath, qs, radius=1.2, nprobe=3,
                 base_filter=flt, **kw,
             ),
-            ivf.ivf_range(qs, base, C, radius=1.2, nprobe=3, **kw),
+            lazy(1.2),
         ),
     ):
         assert got.schema == want.schema
@@ -1402,6 +1410,51 @@ def test_ivf_adc_range_refined_full_probe_equals_exact(
         .toString()
     )
     assert "Window" not in plan
+
+
+def test_refined_adc_one_calls_run_the_query_plan_once(spark, tmp_path, emb):
+    """With ``points_path`` both refined one-calls read the batch twice
+    (stage-1 routing, the stage-2 query side) but collect it once: a
+    per-row accumulator on an nq-16 query frame counts exactly one
+    evaluation of the caller's query plan per call."""
+    from vector_search_spark.operators import pq
+
+    C = kmeans.init_first_k(emb, 8)
+    assigned = ivf.assign_clusters(emb, C)
+    model, _ = pq.train_pq(emb, m=8, k=16, seed=42, max_iter=5)
+    codes = pq.encode(assigned, model).join(
+        assigned.select("vec_id", "cluster_id"), "vec_id"
+    )
+    cp, cc, mp, pp = (
+        str(tmp_path / d) for d in ("codes", "cents", "pqmodel", "points")
+    )
+    ivf.write_index(codes, cp)
+    ivf.save_centroids(spark, C, cc)
+    pq.save_model(spark, model, mp)
+    assigned.write.parquet(pp)
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tag(v):
+        seen.add(1)
+        return v
+
+    vec_type = emb.schema["embedding"].dataType
+    qs = emb.filter(F.col("vec_id") < 16).withColumn(
+        "embedding", F.udf(tag, vec_type)("embedding")
+    )
+    for call in (
+        lambda: ivf.adc_search_index(
+            spark, cp, cc, mp, qs, k=5, nprobe=3, points_path=pp
+        ),
+        lambda: ivf.adc_range_index(
+            spark, cp, cc, mp, qs, radius=1.2, nprobe=3, points_path=pp,
+            margin=0.3,
+        ),
+    ):
+        seen.value = 0
+        rows = call().collect()
+        assert rows and seen.value == 16, seen.value
 
 
 def test_adc_range_index_points_path_refines(spark, tmp_path, emb, queries):

@@ -71,6 +71,13 @@ def test_centroids_roundtrip(spark, clustered_df, tmp_path):
     kmeans.centroids_df(spark, res.centroids).write.parquet(path)
     loaded = kmeans.load_centroids(spark.read.parquet(path))
     assert np.allclose(loaded, res.centroids)
+    # a duplicate id with a compensating gap must not load misaligned
+    gap = spark.createDataFrame(
+        [(i, [float(i)]) for i in (0, 1, 1, 3)],
+        "cluster_id int, centroid array<double>",
+    )
+    with pytest.raises(ValueError, match="non-dense centroid ids"):
+        kmeans.load_centroids(gap)
 
 
 def test_train_coarse_deterministic_and_bounded(spark):

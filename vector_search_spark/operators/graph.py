@@ -707,16 +707,13 @@ def hnsw_build(
 
 def collect_query_batch(
     queries: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> pd.DataFrame:
-    """Collect the caller-bounded query batch ONCE as a
-    ``(query_id, qv)`` pandas frame. The HNSW entries run BOTH
+):
+    """Collect and check the caller-bounded query batch ONCE
+    (``knn._collect_batch``): ``(qids, Q)``. The HNSW entries run BOTH
     :func:`descend_entry_points` and a :func:`greedy_search` scorer over
-    the same batch; before r18 each did its own ``toPandas`` — one
-    whole scheduled job per entry re-collecting rows the driver already
-    held (guide §1.2: don't compute things twice)."""
-    return queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("qv")
-    ).toPandas()
+    the same batch; passing this as their ``query_batch`` saves one
+    whole scheduled job re-collecting rows the driver already holds."""
+    return knn._collect_batch(queries, id_col, vec_col)
 
 
 # Edge-artifact broadcast budget for the walk joins (guide §3.1
@@ -743,24 +740,16 @@ def _broadcast_query_scorer(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    query_batch: pd.DataFrame | None = None,
+    query_batch: tuple | None = None,
 ):
     """Shared scorer for the graph-walk operators: broadcast the query
     matrix once, return (qids, score_fn) where score_fn maps a
     (query_id, vec_id) DataFrame to (query_id, vec_id, dist) via one
     exact (a-b)^2 gemm-free kernel per Arrow batch. ``query_batch`` is
-    an optional pre-collected :func:`collect_query_batch` frame (skips
-    this scorer's own collect job)."""
+    an optional pre-collected :func:`collect_query_batch` (skips this
+    scorer's own collect job)."""
     spark = points.sparkSession
-    qpdf = (
-        query_batch
-        if query_batch is not None
-        else collect_query_batch(queries, id_col, vec_col)
-    )
-    if not len(qpdf):
-        raise ValueError("empty query set")
-    qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-    Q = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
+    qids, Q = query_batch or collect_query_batch(queries, id_col, vec_col)
     bc = spark.sparkContext.broadcast((qids, Q))
     base = points.select(
         F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("bv")
@@ -806,7 +795,7 @@ def _broadcast_adc_scorer(
     id_col: str,
     code_col: str,
     strict: bool = False,
-    query_batch: pd.DataFrame | None = None,
+    query_batch: tuple | None = None,
 ):
     """ADC twin of :func:`_broadcast_query_scorer` — the reference's
     COMPRESSED SearchLayer distance kernel (py/hnsw.py:217-226: walk
@@ -830,48 +819,21 @@ def _broadcast_adc_scorer(
     raises IN-PLAN on the first candidate with no code, mirroring
     :func:`ivf._exact_rescore`."""
     spark = codes.sparkSession
-    qpdf = (
-        query_batch
-        if query_batch is not None
-        else collect_query_batch(queries, query_id_col, query_vec_col)
+    qids, Q = query_batch or knn._collect_batch(
+        queries, query_id_col, query_vec_col, model.dim, "the model's"
     )
-    if not len(qpdf):
-        raise ValueError("empty query set")
-    qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-    Q = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
     bc = spark.sparkContext.broadcast((qids, pq._adc_lut(model.codebooks, Q)))
     base = codes.select(
         F.col(id_col).alias("vec_id"), F.col(code_col).alias("_c")
     )
 
     def score(cands: DataFrame) -> DataFrame:
-        # same §3.1 hint as the raw scorer: candidates are bounded.
-        # strict's LEFT join keeps cands stream-side (a left outer join
-        # cannot build on its preserved side), so only the inner form
-        # takes the hint.
-        withc = (
-            cands.join(base, "vec_id", "left")
-            if strict
-            else F.broadcast(cands).join(base, "vec_id")
+        # same §3.1 hint as the raw scorer: candidates are bounded
+        withc = knn._contract_join(
+            cands, base, "_c", strict, True, "compressed walk: frontier",
+            "has no PQ code — the codes ⊇ graph-nodes contract is "
+            "violated (stale or partial code table)",
         )
-        if strict:
-            withc = withc.withColumn(
-                "_c",
-                F.when(
-                    F.col("_c").isNull(),
-                    F.raise_error(
-                        F.concat(
-                            F.lit("compressed walk: frontier vec_id "),
-                            F.col("vec_id").cast("string"),
-                            F.lit(
-                                " has no PQ code — the codes ⊇ graph-"
-                                "nodes contract is violated (stale or "
-                                "partial code table)"
-                            ),
-                        )
-                    ),
-                ).otherwise(F.col("_c")),
-            )
 
         def fn(batches):
             b_qids, b_lut = bc.value
@@ -908,7 +870,7 @@ def descend_entry_points(
     layer1_hops: int = 2,
     probe_rounds: int = 1,
     upper_hops: int = 3,
-    query_batch: pd.DataFrame | None = None,
+    query_batch: tuple | None = None,
 ) -> DataFrame:
     """Upper-layer greedy descent (reference KNNSearch layers L..1 with
     ef=1, py/hnsw.py:408-409): start every query at the global entry
@@ -955,21 +917,11 @@ def descend_entry_points(
     at the fixture scale).
     """
     spark = points.sparkSession
-    qdf = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double_array(vec_col).alias("_qv"),
-    )
+    qdf = knn._query_side(queries, id_col, vec_col)
     # the caller-bounded query batch (serving contract); accepting a
     # pre-collected batch lets the HNSW entries share ONE collect with
-    # the walk scorer (r18 — was two jobs for the same rows)
-    qpdf = (
-        query_batch.rename(columns={"qv": "_qv"})
-        if query_batch is not None
-        else qdf.toPandas()
-    )
-    qids = qpdf["query_id"].to_numpy()
-    if not len(qids):
-        raise ValueError("empty query set")
+    # the walk scorer
+    qids, Q = query_batch or collect_query_batch(queries, id_col, vec_col)
     # NOTE (r18, measured): do NOT coalesce(1) this literal. A single-
     # partition seed's SinglePartition output satisfies every downstream
     # clustering requirement, so Catalyst DROPS the argmin exchanges —
@@ -1005,7 +957,7 @@ def descend_entry_points(
         F.create_map(
             *[
                 x
-                for q, v in zip(qids, qpdf["_qv"].to_numpy())
+                for q, v in zip(qids, Q)
                 for x in (
                     F.lit(int(q)),
                     F.array(*[F.lit(float(c)) for c in v]),
@@ -1187,7 +1139,7 @@ def greedy_search(
     expand: int = 1,
     early_stop: bool = True,
     scorer=None,
-    query_batch: pd.DataFrame | None = None,
+    query_batch: tuple | None = None,
 ) -> DataFrame:
     """Layer-0 batch greedy search over the edge artifact: every query
     expands its frontier one hop per iteration until no frontier node
@@ -1337,7 +1289,7 @@ def greedy_search_adc(
     expand: int = 1,
     early_stop: bool = True,
     strict: bool = False,
-    query_batch: pd.DataFrame | None = None,
+    query_batch: tuple | None = None,
 ) -> DataFrame:
     """COMPRESSED batch greedy search — the reference's PQ-scored
     SearchLayer (py/hnsw.py:217-226: when the index holds a trained

@@ -11,12 +11,13 @@ and stored partitioned by ``cluster_id``; a query is routed to its
 Every serving function here is one pipeline, written once:
 
 1. **route** — each query's ``nprobe`` nearest coarse centroids. The
-   centroid model is tiny (NC x D doubles): :func:`route_queries` is a
-   broadcast cross join + window rank, kept lazy by ``ivf_topk(impl=
-   "expr")`` and :func:`ivf_range`; the gemm and ADC paths and the
-   persisted one-calls collect the batch once and replay the same fold
+   centroid model is tiny (NC x D doubles). One helper
+   (``knn._collect_batch``) collects and checks every caller-bounded
+   batch, and :func:`_route_batch` replays :func:`route_queries`' fold
    on the driver while ``VSS_ADC_DRIVER_ROUTE_TERMS`` allows
-   (:func:`_route_batch`, bit-identical membership).
+   (bit-identical membership). Only ``ivf_range(broadcast_queries=
+   False)`` — a corpus-sized query side — keeps the lazy distributed
+   route (:func:`route_queries`: a broadcast cross join + window rank).
 2. **score** — only the routed cells: ``base.filter(cluster_id IN
    routed)`` over a parquet layout partitioned by ``cluster_id`` is
    *partition pruning* (Catalyst never reads the other cells' files;
@@ -55,7 +56,13 @@ from pyspark.sql import functions as F
 from vector_search_spark.functions.distance import as_double_array, distance
 from vector_search_spark.operators import kmeans
 from vector_search_spark.operators import pq as _pq
-from vector_search_spark.operators.knn import _gemm_batch_dists, topk_per_query
+from vector_search_spark.operators.knn import (
+    _collect_batch,
+    _contract_join,
+    _gemm_batch_dists,
+    _query_side,
+    topk_per_query,
+)
 
 
 def assign_clusters(
@@ -88,14 +95,6 @@ def write_index(
     probed lists".
     """
     assigned.write.mode("overwrite").partitionBy(cluster_col).parquet(path)
-
-
-def _query_side(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """``(query_id, _qv)``: the query batch as every path reads it, its
-    vectors widened to array<double>."""
-    return queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("_qv")
-    )
 
 
 def route_queries(
@@ -145,28 +144,27 @@ def _routed_scores(
     base_vec_col: str = "embedding",
     cluster_col: str = "cluster_id",
     broadcast: bool = True,
-    driver_routing: bool = False,
 ) -> DataFrame:
     """The routed candidate join: ``(query_id, vec_id, dist)`` for every
     base row in each query's routed cells, scored by the Catalyst
-    distance fold. Base rows equi-join the (query_id, cluster_id)
-    routes on the cell — Catalyst turns that into partition pruning on
-    a partitioned layout — then the query vectors on ``query_id``.
-    ``broadcast`` hints both the query side and the routes (nq x
-    nprobe rows, bounded exactly when the query batch is).
+    distance fold.
 
-    ``driver_routing`` collects and routes the batch once on the
-    driver (:func:`_route_batch`) and joins the base rows, filtered to
-    a static ``cluster_id IN (routed cells)``, on ``_cell`` to one
-    Arrow-built broadcast ``(query_id, _qv, _cell)`` table: the same
-    pairs and the same fold, so the same rows, with no distributed
-    route job and no second run of the caller's query plan."""
+    ``broadcast=True`` (a caller-bounded batch): collect and route the
+    batch once on the driver (:func:`_route_batch`) and join the base
+    rows, filtered to a static ``cluster_id IN (routed cells)`` —
+    partition pruning on a partitioned layout — on ``_cell`` to one
+    Arrow-built broadcast ``(query_id, _qv, _cell)`` table.
+    ``broadcast=False`` (a corpus-sized query side): the lazy
+    distributed route — base rows equi-join the :func:`route_queries`
+    pairs on the cell, then the query vectors on ``query_id``, with no
+    hint, so AQE picks the join strategy. Same pairs, same fold, same
+    rows."""
     base = assigned_base.select(
         F.col(base_id_col).alias("vec_id"),
         as_double_array(base_vec_col).alias("_bv"),
         F.col(cluster_col).alias("_cell"),
     )
-    if driver_routing:
+    if broadcast:
         qids, Q, cells = _route_batch(
             queries, centroids, nprobe, query_id_col, query_vec_col
         )
@@ -183,10 +181,9 @@ def _routed_scores(
         routes = route_queries(
             queries, centroids, nprobe, query_id_col, query_vec_col
         ).withColumnRenamed("cluster_id", "_cell")
-        q = _query_side(queries, query_id_col, query_vec_col)
-        if broadcast:
-            q, routes = F.broadcast(q), F.broadcast(routes)
-        joined = base.join(routes, "_cell").join(q, "query_id")
+        joined = base.join(routes, "_cell").join(
+            _query_side(queries, query_id_col, query_vec_col), "query_id"
+        )
     return joined.select(
         "query_id", "vec_id", distance(metric, "_qv", "_bv").alias("dist")
     )
@@ -199,15 +196,11 @@ def _route_batch(
     query_id_col: str,
     query_vec_col: str,
 ):
-    """Collect the caller-bounded query batch and route it: ``(qids,
-    Q, cells)`` with ``cells = {cell: ascending positions (into qids)
-    of the queries routed there}``. An empty batch routes to no cell.
-
-    A bad batch raises a ValueError naming the query: a NULL id or
-    vector, a NaN or infinite component, a dimension other than the
-    centroids', or an id seen earlier in the batch. Unchecked, the
-    Catalyst fold scores them as NULL distances and the driver replay
-    truncates (``zip``) or misorders (NaN sort keys) them.
+    """Collect and check the caller-bounded query batch
+    (``knn._collect_batch``, dimension = the centroids') and route it:
+    ``(qids, Q, cells)`` with ``cells = {cell: ascending positions
+    (into qids) of the queries routed there}``. An empty batch routes
+    to no cell.
 
     Routing replays :func:`route_queries` on the driver while nq x NC
     x D <= ``VSS_ADC_DRIVER_ROUTE_TERMS`` (default 2e6 terms, about
@@ -220,21 +213,10 @@ def _route_batch(
     interpreted Python (~300 ns per term) and NC grows with the corpus,
     so above the cap the distributed :func:`route_queries` runs and
     only its nq x nprobe (query_id, cluster_id) pairs are collected."""
-    qpdf = _query_side(queries, query_id_col, query_vec_col).toPandas()
-    dim = np.shape(centroids)[1]
-    dup = qpdf["query_id"].duplicated()
-    for qid, v, d in zip(qpdf["query_id"], qpdf["_qv"], dup):
-        bad = (
-            "a NULL id" if pd.isna(qid) else "a duplicate id" if d
-            else "a NULL vector" if v is None
-            else f"dimension {len(v)}, not the centroids' {dim}"
-            if len(v) != dim else "a NaN or infinite component"
-            if not np.isfinite(v).all() else None
-        )
-        if bad:
-            raise ValueError(f"query {qid}: {bad}")
-    qids = qpdf["query_id"].to_numpy()
-    Q = np.asarray(list(qpdf["_qv"]), dtype=np.float64).reshape(-1, dim)
+    qids, Q = _collect_batch(
+        queries, query_id_col, query_vec_col, np.shape(centroids)[1],
+        "the centroids'", empty_ok=True,
+    )
     budget = int(
         float(os.environ.get("VSS_ADC_DRIVER_ROUTE_TERMS", "2000000"))
     )
@@ -370,8 +352,11 @@ def ivf_topk(
     :func:`assign_clusters` or a partitioned read of
     :func:`write_index` output). Returns (query_id, vec_id, dist, rank).
 
-    ``impl='expr'``: the broadcast routed join (:func:`_routed_scores`)
-    + the codegen distance fold + window top-k.
+    ``impl='expr'``: the batch routed on the driver and joined to the
+    routed cells through one broadcast (query, cell, vector) table
+    (:func:`_routed_scores`) + the codegen distance fold + window
+    top-k. It runs one collect job at call time (the batch); the rest
+    stays a lazy DataFrame.
 
     ``impl='gemm'``: the batch routed on the driver
     (:func:`_route_batch`), then one BLAS pass over the
@@ -434,11 +419,12 @@ def ivf_range(
     rationale; FAISS-tuned radii may gain exact-boundary hits).
 
     ``broadcast_queries=True`` (default) fits the serving contract's
-    caller-bounded query batches; pass ``False`` for a corpus-sized
-    query side (radius blocking) so AQE — not a hint that would force
-    a driver-side collect — picks the join strategy. The flag also
-    governs the routes table's hint: routes is ``nq * nprobe`` rows,
-    bounded exactly when the query batch is.
+    caller-bounded query batches: the batch is collected at call time
+    (one job) and routed on the driver into one broadcast (query,
+    cell, vector) table. Pass ``False`` for a corpus-sized query side
+    (radius blocking): the lazy distributed route, with no hint, so
+    AQE — not a hint that would force a driver-side collect — picks
+    the join strategy.
     """
     return _routed_scores(
         queries, assigned_base, centroids, nprobe, metric, query_id_col,
@@ -621,7 +607,8 @@ def _exact_rescore(
     broadcast_cand: bool = False,
 ) -> DataFrame:
     """Shared stage 2 of the refined family: join (query_id, vec_id)
-    candidates back to the raw ``points`` vectors and add the exact
+    candidates back to the raw ``points`` vectors
+    (``knn._contract_join``) and add the exact
     ``dist`` column (Catalyst L2 fold, broadcast query side). Extra
     columns on ``cand`` ride through untouched. Every refined/
     calibration tail builds on this one block so the re-score contract
@@ -658,26 +645,12 @@ def _exact_rescore(
     pv = points.select(
         F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("_pv")
     )
-    cside = F.broadcast(cand) if broadcast_cand and not strict else cand
-    joined = cside.join(pv, "vec_id", "left" if strict else "inner")
-    if strict:
-        joined = joined.withColumn(
-            "_pv",
-            F.when(
-                F.col("_pv").isNull(),
-                F.raise_error(
-                    F.concat(
-                        F.lit("refined rescore: candidate vec_id "),
-                        F.col("vec_id").cast("string"),
-                        F.lit(
-                            " has no raw vector in points — the "
-                            "codes ⊆ points contract is violated "
-                            "(stale or partial raw-vector table)"
-                        ),
-                    )
-                ),
-            ).otherwise(F.col("_pv")),
-        )
+    joined = _contract_join(
+        cand, pv, "_pv", strict, broadcast_cand,
+        "refined rescore: candidate",
+        "has no raw vector in points — the codes ⊆ points contract is "
+        "violated (stale or partial raw-vector table)",
+    )
     return (
         joined.join(F.broadcast(qv), "query_id")
         .withColumn("dist", l2_sqr("_qv", "_pv"))
@@ -862,16 +835,11 @@ def adc_search_index(
     ``shortlist`` / ``vec_col`` / ``strict`` configure that re-rank
     stage and are rejected without ``points_path`` — plain ADC serving
     has no stage 2 to configure."""
-    C, model, codes, points = _open_index(
+    C, model, codes, points, queries = _open_index(
         spark, codes_path, centroids_path, base_filter, model_path,
-        points_path, ("shortlist", shortlist), kwargs,
+        points_path, ("shortlist", shortlist), kwargs, queries,
     )
     if points is not None:
-        # collect the batch once: stage 1 routes it, stage 2 broadcasts it
-        qc = kwargs.get("query_id_col", "vec_id")
-        vc = kwargs.get("query_vec_col", "embedding")
-        local = queries.select(qc, as_double_array(vc).alias(vc))
-        queries = spark.createDataFrame(local.toPandas(), local.schema)
         return ivf_adc_topk_refined(
             queries, codes, C, model, points=points, k=k,
             shortlist=shortlist if shortlist is not None else 5 * k,
@@ -1066,9 +1034,15 @@ def _open_index(
     points_path: str | None = None,
     stage2_knob: tuple = (None, None),
     kwargs=(),
+    queries: DataFrame | None = None,
 ):
     """The shared opener of the persisted one-calls. Returns
-    ``(centroids, pq_model | None, relation, points | None)``.
+    ``(centroids, pq_model | None, relation, points | None, queries)``.
+
+    With ``points_path`` the refined stages read the query batch twice
+    (stage 1 routes it, stage 2 broadcasts it), so ``queries`` comes
+    back collected and checked once (``knn._collect_batch``) as an
+    Arrow-built local frame: the caller's query plan runs once.
 
     Without ``points_path`` any explicitly passed re-score knob —
     ``stage2_knob`` = (name, value), given when the value is not None,
@@ -1101,8 +1075,19 @@ def _open_index(
     rel = spark.read.parquet(path)
     if base_filter is not None:
         rel = rel.filter(base_filter)
-    points = None if points_path is None else spark.read.parquet(points_path)
-    return C, model, rel, points
+    points = None
+    if points_path is not None:
+        points = spark.read.parquet(points_path)
+        qc = dict(kwargs).get("query_id_col", "vec_id")
+        vc = dict(kwargs).get("query_vec_col", "embedding")
+        qids, Q = _collect_batch(
+            queries, qc, vc, C.shape[1], "the centroids'", empty_ok=True
+        )
+        queries = spark.createDataFrame(
+            pd.DataFrame({qc: qids, vc: list(Q)}),
+            queries.select(qc, as_double_array(vc).alias(vc)).schema,
+        )
+    return C, model, rel, points, queries
 
 
 def search_index(
@@ -1115,15 +1100,13 @@ def search_index(
     base_filter=None,
     **kwargs,
 ) -> DataFrame:
-    """One-call serving API over the PERSISTED index: load the model
-    (:func:`load_centroids`), open the cell-partitioned parquet, route
-    the batch on the driver and score only the probed cells with the
-    ``ivf_topk(impl="expr")`` fold and window (:func:`_routed_scores`;
-    same rows, still a lazy partition-pruned DataFrame). This is the
-    call a query service makes per batch — everything upstream
-    (write_index, upsert, compact, rebalance + save_centroids) exists
-    to keep this one fast and correct. ``impl="gemm"`` serves through
-    :func:`ivf_topk` instead.
+    """One-call serving API over the PERSISTED index: open the model
+    and the cell-partitioned parquet (:func:`_open_index`) and run
+    :func:`ivf_topk` (``kwargs``: impl, metric, column names) over
+    only the probed cells. This is the call a query service makes per
+    batch — everything upstream (write_index, upsert, compact,
+    rebalance + save_centroids) exists to keep this one fast and
+    correct.
 
     DRIVER STATE: the collected batch and its broadcast (query, cell,
     vector) table, nq x nprobe x D doubles — set by the caller's batch,
@@ -1135,14 +1118,10 @@ def search_index(
     rows (never undersized unless fewer than k rows match in the
     probed cells).
     """
-    C, _, base, _ = _open_index(spark, index_path, centroids_path, base_filter)
-    impl = kwargs.pop("impl", "expr")
-    if impl != "expr":
-        return ivf_topk(queries, base, C, k, nprobe, impl=impl, **kwargs)
-    scored = _routed_scores(
-        queries, base, C, nprobe, driver_routing=True, **kwargs
+    C, _, base, _, _ = _open_index(
+        spark, index_path, centroids_path, base_filter
     )
-    return topk_per_query(scored, k)
+    return ivf_topk(queries, base, C, k, nprobe, **kwargs)
 
 
 def range_index(
@@ -1165,16 +1144,12 @@ def range_index(
 
     ``base_filter`` applies before scoring, inside the routed cells —
     the search_index pre-filter semantics. ``kwargs`` are
-    :func:`ivf_range`'s (metric, column names, broadcast_queries). The
-    batch routes on the driver like search_index's, except with
-    ``broadcast_queries=False`` (a corpus-sized query side), which
-    keeps ivf_range's lazy distributed route join.
+    :func:`ivf_range`'s (metric, column names, broadcast_queries).
     """
-    C, _, base, _ = _open_index(spark, index_path, centroids_path, base_filter)
-    bq = kwargs.pop("broadcast_queries", True)
-    return _routed_scores(
-        queries, base, C, nprobe, broadcast=bq, driver_routing=bq, **kwargs
-    ).filter(F.col("dist") <= F.lit(float(radius)))
+    C, _, base, _, _ = _open_index(
+        spark, index_path, centroids_path, base_filter
+    )
+    return ivf_range(queries, base, C, radius, nprobe, **kwargs)
 
 
 def adc_range_index(
@@ -1210,9 +1185,9 @@ def adc_range_index(
     ``margin`` / ``vec_col`` / ``strict`` configure the re-score stage
     and are rejected without ``points_path`` — by presence, so an
     explicit ``margin=0.0`` or ``strict=False`` raises too."""
-    C, model, codes, points = _open_index(
+    C, model, codes, points, queries = _open_index(
         spark, codes_path, centroids_path, base_filter, model_path,
-        points_path, ("margin", margin), kwargs,
+        points_path, ("margin", margin), kwargs, queries,
     )
     if points is not None:
         return ivf_adc_range_refined(
@@ -1232,36 +1207,16 @@ def save_centroids(spark, centroids: np.ndarray, path: str) -> None:
     consistent if the new model and the rewritten cells publish
     together, so a real pipeline writes this immediately after the
     cell rewrite (model-sized: NC x D doubles, one tiny parquet)."""
-    rows = [
-        (int(i), [float(x) for x in c])
-        for i, c in enumerate(np.asarray(centroids, dtype=np.float64))
-    ]
-    (
-        spark.createDataFrame(
-            rows, "cluster_id int, centroid array<double>"
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    df = kmeans.centroids_df(spark, centroids)
+    df.coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def load_centroids(spark, path: str) -> np.ndarray:
     """Reopen a :func:`save_centroids` model as the (NC, D) ndarray the
-    routing/maintenance ops take. Model-sized driver collect by
-    definition, read with the fixed schema save_centroids writes (no
-    footer-inference job) and sorted on the driver (no range-sort
-    jobs); validates the id range is dense 0..NC-1."""
+    routing/maintenance ops take: :func:`kmeans.load_centroids` over
+    the fixed schema save_centroids writes (no footer-inference job)."""
     schema = "cluster_id int, centroid array<double>"
-    pdf = spark.read.schema(schema).parquet(path).toPandas()
-    pdf = pdf.sort_values("cluster_id")
-    ids = pdf["cluster_id"].to_numpy()
-    if len(ids) == 0 or not (ids == np.arange(len(ids))).all():
-        # element-wise, not endpoints-only: duplicates with a
-        # compensating gap (e.g. [0,1,1,3]) would silently misalign
-        # every row after the duplicate (round-7 review)
-        raise ValueError(f"non-dense centroid ids in {path}")
-    return np.vstack(pdf["centroid"].to_numpy())
+    return kmeans.load_centroids(spark.read.schema(schema).parquet(path))
 
 
 def cell_stats(

@@ -336,7 +336,15 @@ def centroids_df(spark, C: np.ndarray) -> DataFrame:
 
 
 def load_centroids(df: DataFrame) -> np.ndarray:
-    pdf = df.orderBy("cluster_id").toPandas()
+    """A (cluster_id, centroid) model table back as the (NC, D) float64
+    matrix. Model-sized driver collect, sorted on the driver (no
+    range-sort jobs); the ids must be dense 0..NC-1, checked
+    element-wise — a duplicate with a compensating gap (``[0, 1, 1,
+    3]``) would silently misalign every row after it."""
+    pdf = df.toPandas().sort_values("cluster_id")
+    ids = pdf["cluster_id"].to_numpy()
+    if len(ids) == 0 or not (ids == np.arange(len(ids))).all():
+        raise ValueError(f"non-dense centroid ids {ids.tolist()[:16]}")
     return np.vstack(pdf["centroid"].to_numpy()).astype(np.float64)
 
 

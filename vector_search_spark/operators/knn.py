@@ -44,6 +44,14 @@ from vector_search_spark.functions.distance import (
 )
 
 
+def _query_side(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(query_id, _qv)``: the query batch as every path reads it, its
+    vectors widened to array<double>."""
+    return queries.select(
+        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("_qv")
+    )
+
+
 def score_pairs(
     queries: DataFrame,
     base: DataFrame,
@@ -60,10 +68,7 @@ def score_pairs(
     only id+vector columns reach the join, so the parquet scan reads a
     2-column projection regardless of the input schema width.
     """
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("_qv"),
-    )
+    q = _query_side(queries, query_id_col, query_vec_col)
     b = base.select(
         F.col(base_id_col).alias("vec_id"),
         as_double_array(base_vec_col).alias("_bv"),
@@ -134,6 +139,83 @@ def topk_per_query(
     )
 
 
+def _collect_batch(
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int | None = None,
+    dim_of: str = "the first row's",
+    empty_ok: bool = False,
+):
+    """THE driver collect of a caller-bounded ``(query id, vector)``
+    batch — ivf routing, pq ADC tables, the graph walk and the gemm
+    scan all collect through here. Returns ``(qids, Q)``, ``Q`` the
+    (nq, D) float64 query matrix.
+
+    A bad batch raises a ValueError naming the query: a NULL id, an id
+    seen earlier in the batch, a NULL vector, a dimension other than
+    ``dim`` (the caller's model, named by ``dim_of``; without one, the
+    first row's), or a NaN or infinite component. Unchecked, the
+    Catalyst fold scores them as NULL distances, the driver replays
+    truncate (``zip``) or misorder (NaN sort keys) them and the gemm
+    emits NaN. An empty batch raises ``"empty query set"`` unless
+    ``empty_ok``."""
+    qpdf = _query_side(queries, id_col, vec_col).toPandas()
+    vecs = qpdf["_qv"]
+    if not len(qpdf) and not empty_ok:
+        raise ValueError("empty query set")
+    if dim is None:
+        dim = len(vecs[0]) if len(vecs) and vecs[0] is not None else 0
+    dup = qpdf["query_id"].duplicated()
+    for qid, v, d in zip(qpdf["query_id"], vecs, dup):
+        bad = (
+            "a NULL id" if pd.isna(qid) else "a duplicate id" if d
+            else "a NULL vector" if v is None
+            else f"dimension {len(v)}, not {dim_of} {dim}"
+            if len(v) != dim else "a NaN or infinite component"
+            if not np.isfinite(v).all() else None
+        )
+        if bad:
+            raise ValueError(f"query {qid}: {bad}")
+    Q = np.asarray(list(vecs), dtype=np.float64).reshape(-1, dim)
+    return qpdf["query_id"].to_numpy(), Q
+
+
+def _contract_join(
+    cand: DataFrame,
+    side: DataFrame,
+    col: str,
+    strict: bool,
+    broadcast_cand: bool,
+    what: str,
+    contract: str,
+) -> DataFrame:
+    """Join ``cand`` to ``side`` on ``vec_id`` under a containment
+    contract (every candidate id has a ``side`` row). The default inner
+    join silently DROPS an orphaned candidate; ``strict=True``
+    left-joins instead and raises IN-PLAN on the first one whose
+    ``col`` is NULL, naming the candidate and ``contract``. A left
+    outer join cannot build on its preserved side, so only the inner
+    form takes the ``broadcast_cand`` hint."""
+    if not strict:
+        return (F.broadcast(cand) if broadcast_cand else cand).join(
+            side, "vec_id"
+        )
+    return cand.join(side, "vec_id", "left").withColumn(
+        col,
+        F.when(
+            F.col(col).isNull(),
+            F.raise_error(
+                F.concat(
+                    F.lit(f"{what} vec_id "),
+                    F.col("vec_id").cast("string"),
+                    F.lit(f" {contract}"),
+                )
+            ),
+        ).otherwise(F.col(col)),
+    )
+
+
 def _gemm_batch_dists(metric: str, Qm, qn2, B):
     """(nq x nb) distance matrix for one Arrow batch — THE shared gemm
     kernel (score_topk_gemm + mine_semihard_negatives use this one
@@ -198,15 +280,7 @@ def score_topk_gemm(
 
     Returns ``(query_id, vec_id, dist)`` (partial — feed topk_per_query).
     """
-    qpdf = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("qv"),
-    ).toPandas()
-    if not len(qpdf):
-        raise ValueError("empty query set")
-    qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-    Q = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-
+    qids, Q = _collect_batch(queries, query_id_col, query_vec_col)
     if metric == "cosine":
         qn = np.linalg.norm(Q, axis=1)
         Qn = np.divide(Q, qn[:, None], out=np.zeros_like(Q), where=qn[:, None] != 0)

@@ -36,7 +36,7 @@ from vector_search_spark.functions.distance import as_double_array
 from vector_search_spark.operators import bq as _bq
 from vector_search_spark.operators import kmeans as _kmeans
 from vector_search_spark.operators.bq import random_rotation  # noqa: F401
-from vector_search_spark.operators.knn import topk_per_query
+from vector_search_spark.operators.knn import _collect_batch, topk_per_query
 
 
 @dataclass
@@ -324,23 +324,6 @@ def decode(
     return src.mapInPandas(fn, f"{id_col} long, vec array<double>")
 
 
-def _collect_queries(
-    queries: DataFrame, query_id_col: str, query_vec_col: str
-):
-    """Collect the caller-bounded query batch: ``(qids, Q)`` with ``Q``
-    the (nq, D) float64 query matrix."""
-    qpdf = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("qv"),
-    ).toPandas()
-    if not len(qpdf):
-        raise ValueError("empty query set")
-    return (
-        qpdf["query_id"].to_numpy(dtype=np.int64),
-        np.vstack(qpdf["qv"].to_numpy()).astype(np.float64),
-    )
-
-
 def _adc_lut(codebooks: np.ndarray, Q: np.ndarray) -> np.ndarray:
     """THE ADC lookup table: ``lut[q, m, k]`` = squared L2 from query
     ``q``'s m-th subvector to codeword ``k`` of subspace ``m``, shape
@@ -441,7 +424,9 @@ def adc_topk(
     keeps the shuffle at ~k rows per query per batch. Exact top-k
     window afterwards. Returns (query_id, vec_id, dist, rank).
     """
-    qids, Q = _collect_queries(queries, query_id_col, query_vec_col)
+    qids, Q = _collect_batch(
+        queries, query_id_col, query_vec_col, model.dim, "the model's"
+    )
     return _lut_topk(
         codes, qids, _adc_lut(model.codebooks, Q), k, id_col, code_col
     )
