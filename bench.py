@@ -72,15 +72,9 @@ HEADLINE = [
 # top-N cut. Checked against the catalog at startup — a stale name
 # here fails loudly instead of silently guarding nothing.
 CHANGED_THIS_ROUND = [
-    # one batch collect + check (knn._collect_batch) for every
-    # caller-bounded batch; ivf_topk(impl="expr") / ivf_range route on
-    # the driver; one strict re-score join (knn._contract_join)
-    "ivf_knn", "ivf_filtered_knn", "ivf_range",
-    "ivf_adc_knn", "ivf_adc_knn_refined", "ivf_adc_range",
-    "ivf_adc_range_refined", "ivf_adc_margin_check", "adc_refine_curve",
-    "pq_adc_knn", "pq_refine_knn", "opq_adc_knn",
+    # the HNSW walk replays on the driver when the graph's exact size
+    # bound fits VSS_EDGE_BCAST_BYTES (graph._DriverWalk)
     "hnsw_knn", "hnsw_adc_knn", "graph_greedy_search",
-    "knn_exact", "knn_cosine", "knn_mips",
 ]
 
 TOP_N = 20

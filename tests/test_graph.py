@@ -12,14 +12,26 @@ from vector_search_spark.operators import graph, kmeans, knn
 
 @pytest.fixture(scope="module")
 def emb(spark):
+    # unpersisted at teardown: a cached scan of this parquet would stand
+    # in for every later module's scan of it and hide its PushedFilters
     df = tables.load(spark, SF_ORACLE, "embeddings").cache()
     df.count()
-    return df
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def exact5(spark, emb):
-    return knn.knn_graph(emb, k=5).select("src", "dst").cache()
+    df = knn.knn_graph(emb, k=5).select("src", "dst").cache()
+    yield df
+    df.unpersist()
+
+
+@pytest.fixture(scope="module")
+def hg(emb):
+    """The hnsw_knn catalog build over the fixture corpus."""
+    C = kmeans.train_coarse(emb, k=8, seed=42)
+    return graph.hnsw_build(emb, C, m=8, ef_construction=32, seed=42)
 
 
 def test_blocked_graph_structure(spark, emb):
@@ -272,7 +284,10 @@ def test_descend_only_query_sized_driver_collects(spark, emb, monkeypatch):
 
     Guards the
     regression the round-5 judge flagged (the old layers>=2 skeleton
-    collect scaled as N/m^2)."""
+    collect scaled as N/m^2). Runs the distributed walk (budget 0); the
+    driver walk's collects are bounded by
+    test_driver_walk_collects_stay_within_the_size_bound."""
+    monkeypatch.setattr(graph, "EDGE_BCAST_BYTES", 0)
     C = kmeans.train_coarse(emb, k=8, seed=42)
     hg = graph.hnsw_build(emb, C, m=8, ef_construction=32, seed=42)
     queries = emb.filter(F.col("vec_id") < 20)
@@ -321,6 +336,154 @@ def test_descend_only_query_sized_driver_collects(spark, emb, monkeypatch):
     )
 
 
+def test_size_bound_covers_the_real_bytes(spark, emb, hg):
+    """HNSWGraph.edges_size_hint is an exact bound of what the driver
+    walk collects (edge rows + node id/vector rows), and a tight one —
+    the optimizer estimate it replaces read ~1e11 B here."""
+    n, dim = emb.count(), len(emb.first().embedding)
+    real = hg.edges.count() * graph._EDGE_BYTES + n * (dim + 1) * 8
+    assert real <= hg.edges_size_hint <= 2 * real, (real, hg.edges_size_hint)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_driver_walk_equals_distributed_walk(spark, emb, hg, monkeypatch):
+    """The driver walk replays the distributed walk row for row, dist
+    and rank included; budget 0 forces the distributed walk."""
+    queries = emb.filter(F.col("vec_id") < 20)
+    C = kmeans.train_coarse(emb, k=8, seed=42)
+    flat = graph.hnsw_build(emb, C, m=8, ef_construction=32, seed=42,
+                            m_l=1e-9)  # every level 0
+    assert flat.max_level == 0 < hg.max_level
+    caller = emb.filter(F.col("vec_id").between(100, 119)).select(
+        (F.col("vec_id") - 100).alias("query_id"), "vec_id"
+    )
+    configs = [  # (graph, seeds, walk kwargs)
+        (hg, "descend", dict(ef=48, max_hops=1, expand=5, early_stop=False)),
+        (hg, None, dict(max_hops=12, early_stop=True)),
+        (hg, None, dict(ef=48, max_hops=6, expand=2)),
+        (hg, caller, dict(ef=16, max_hops=3)),
+        (flat, "descend", dict(ef=24, max_hops=2, expand=2, early_stop=False)),
+    ]
+
+    def run():
+        out = []
+        for g, seeds, kw in configs:
+            if seeds == "descend":
+                seeds = graph.descend_entry_points(g, emb, queries)
+                out.append(("seeds", _rows(seeds)))
+            res = graph.greedy_search(g, emb, queries, k=10, seeds=seeds, **kw)
+            out.append(("schema", [(f.name, f.dataType) for f in res.schema]))
+            out.append(("rows", _rows(res)))
+        return out
+
+    assert graph._DriverWalk.collect(hg, emb, "vec_id", "embedding", 64)
+    local = run()
+    monkeypatch.setattr(graph, "EDGE_BCAST_BYTES", 0)
+    assert graph._DriverWalk.collect(hg, emb, "vec_id", "embedding", 64) is None
+    assert run() == local
+    sizes = {(t, len(v)) for t, v in local if t != "schema"}
+    assert sizes == {("seeds", 20), ("rows", 200)}
+
+
+def test_driver_walk_replays_the_fold_and_the_ties(spark, monkeypatch):
+    """Exact ties, hand-built: under Catalyst's sequential l2 fold, node
+    1 ties node 2 at 1.0 (7 squares of 2^-54 each round away), so the
+    descent's (dist, vec_id) argmin keeps 1 — numpy's pairwise sum
+    would make it 1 + 2^-52 and pick 2, and the layer-0 beam does
+    score it so. Nodes 3, 4, 5 tie at 4.0 at the ef=2 cut, which keeps
+    the lowest ids."""
+    t = 2.0 ** -27
+    vecs = {0: [3.0] + [0.0] * 7, 1: [1.0] + [t] * 7, 2: [1.0] + [0.0] * 7,
+            3: [2.0] + [0.0] * 7, 4: [2.0] + [0.0] * 7, 5: [0.0, 2.0] + [0.0] * 6}
+    schema = "vec_id long, embedding array<double>"
+    pts = spark.createDataFrame(list(vecs.items()), schema)
+    q = spark.createDataFrame([(100, [0.0] * 8)], schema)
+    pairs = [(1, 0, 1), (1, 0, 2), (0, 0, 3), (0, 0, 4), (0, 0, 5), (0, 1, 2)]
+    edges = spark.createDataFrame(
+        [(l, a, b, 0.0) for l, x, y in pairs for a, b in ((x, y), (y, x))],
+        "layer int, src long, dst long, dist double",
+    )
+    g = graph.HNSWGraph(edges, None, 0, 1, graph._size_bound(9, 6, 5, 8))
+
+    def walk():
+        seeds = graph.descend_entry_points(g, pts, q)
+        return [_rows(seeds)] + [
+            _rows(graph.greedy_search(g, pts, q, k=3, ef=2, max_hops=1, seeds=s))
+            for s in (None, seeds)
+        ]
+
+    local = walk()
+    assert local[0] == [(100, 1)]
+    assert local[1] == [(100, 3, 4.0, 1), (100, 4, 4.0, 2)]
+    assert local[2] == [(100, 1, 1.0 + 2.0 ** -52, 2), (100, 2, 1.0, 1)]
+    monkeypatch.setattr(graph, "EDGE_BCAST_BYTES", 0)
+    assert walk() == local
+
+
+def test_driver_walk_collects_stay_within_the_size_bound(
+    spark, emb, hg, monkeypatch
+):
+    """The driver walk's explicit byte budget: everything it collects
+    beyond the query batch (edge rows, node id/vector rows) fits the
+    graph's size bound, which fits ``VSS_EDGE_BCAST_BYTES``; at a
+    budget equal to the bound only the query batch reaches the driver."""
+    queries = emb.filter(F.col("vec_id") < 20)
+    qb = graph.collect_query_batch(queries)
+    cls = type(emb)
+    orig = cls.toPandas
+    got = []
+
+    def spy(self):
+        pdf = orig(self)
+        got.append(pdf)
+        return pdf
+
+    monkeypatch.setattr(cls, "toPandas", spy)
+
+    def nbytes(pdf):
+        return 8 * sum(
+            len(v) if hasattr(v, "__len__") else 1
+            for row in pdf.itertuples(index=False) for v in row
+        )
+
+    seeds = graph.descend_entry_points(hg, emb, queries, query_batch=qb)
+    res = graph.greedy_search(hg, emb, queries, k=10, ef=48, max_hops=1,
+                              seeds=seeds, expand=5, early_stop=False,
+                              query_batch=qb)
+    assert res.count() == 200
+    assert len(got) == 4  # edges + vectors, for the descent and the walk
+    for call in (got[:2], got[2:]):
+        assert sum(nbytes(p) for p in call) <= hg.edges_size_hint
+    assert hg.edges_size_hint < graph.EDGE_BCAST_BYTES
+
+    monkeypatch.setattr(graph, "EDGE_BCAST_BYTES", hg.edges_size_hint)
+    got.clear()
+    graph.descend_entry_points(hg, emb, queries).count()
+    assert got and max(len(p) for p in got) <= 20
+
+
+def test_driver_walk_falls_back_on_points_that_are_not_the_graph(spark, emb, hg):
+    """Duplicate ids, rows that are not graph nodes, or more rows than
+    the bound allows: the distributed walk, with the same rows."""
+    extra = spark.createDataFrame(
+        [(10**9, [0.0] * 64, 0)], emb.schema
+    )
+    coll = graph._DriverWalk.collect
+    assert coll(hg, emb, "vec_id", "embedding", 64)
+    assert coll(hg, emb.unionByName(emb.limit(1)), "vec_id", "embedding", 64) is None
+    assert coll(hg, emb.unionByName(extra), "vec_id", "embedding", 64) is None
+    big = graph.HNSWGraph(hg.edges, hg.levels, hg.entry_point, hg.max_level,
+                          edges_size_hint=hg.edges_size_hint // 2)
+    assert coll(big, emb, "vec_id", "embedding", 64) is None
+    queries = emb.filter(F.col("vec_id") < 20)
+    kw = dict(k=10, ef=16, max_hops=2)
+    with_extra = graph.greedy_search(hg, emb.unionByName(extra), queries, **kw)
+    assert _rows(with_extra) == _rows(graph.greedy_search(hg, emb, queries, **kw))
+
+
 def test_graph_save_load_roundtrip_and_pruning(spark, emb, tmp_path):
     """save_graph/load_graph: the reopened artifact serves the same
     answers as the in-memory build, and a per-layer edge filter on the
@@ -332,6 +495,7 @@ def test_graph_save_load_roundtrip_and_pruning(spark, emb, tmp_path):
     graph.save_graph(hg, path)
     hg2 = graph.load_graph(spark, path)
     assert (hg2.entry_point, hg2.max_level) == (hg.entry_point, hg.max_level)
+    assert hg2.edges_size_hint == hg.edges_size_hint is not None
     assert hg2.edges.count() == hg.edges.count()
     assert sorted(
         tuple(r) for r in hg2.levels.collect()
@@ -355,6 +519,13 @@ def test_graph_save_load_roundtrip_and_pruning(spark, emb, tmp_path):
     assert "PartitionFilters" in plan and "layer" in plan.split(
         "PartitionFilters", 1
     )[1][:200]
+
+    # an artifact written without a size bound reopens without one:
+    # the distributed walk
+    spark.createDataFrame(
+        [(hg.entry_point, hg.max_level)], "entry_point long, max_level int"
+    ).write.mode("overwrite").parquet(f"{path}/meta")
+    assert graph.load_graph(spark, path).edges_size_hint is None
 
 
 def test_greedy_search_adc_full_exploration_equals_adc_topk(spark, emb):

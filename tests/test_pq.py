@@ -19,7 +19,11 @@ M, K = 8, 16
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return tables.load(spark, SF_ORACLE, "embeddings").cache()
+    # unpersisted at teardown: a cached scan of this parquet would stand
+    # in for every later module's scan of it and hide its PushedFilters
+    df = tables.load(spark, SF_ORACLE, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

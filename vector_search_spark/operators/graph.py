@@ -22,25 +22,36 @@ Spark replaces that with (SURVEY.md §7 step 7):
 4. ``hnsw_build`` — levels + per-layer blocked graph + heuristic
    pruning + symmetrization → a layered edge DataFrame artifact.
 5. ``descend_entry_points`` — the reference's upper-layer greedy
-   descent (ef=1 walk to each layer's local minimum) over the routing
-   skeleton (levels >= 1, ~N/m nodes) collected once to the driver.
+   descent (ef=1 walk to each layer's local minimum): per layer, the
+   argmin of the anchor's bounded-hop ring, then layer-1 probes.
 6. ``greedy_search`` — batch frontier-expansion over the edge artifact:
-   all queries advance one hop per iteration (join frontier⋈edges,
-   anti-join visited, score, keep top-ef). Descent-seeded, 2-3 hops
-   suffice (recall 1.0 at sf0.1); the value oracle for the walk itself
-   is the ``graph_greedy_search`` catalog query. The production
-   distributed ANN paths remain operators/ivf.py and hnsw_sharded.py.
+   all queries advance one hop per iteration (frontier⋈edges minus
+   visited, score, keep top-ef). Descent-seeded, 2-3 hops suffice
+   (recall 1.0 at sf0.1); the value oracle for the walk itself is the
+   ``graph_greedy_search`` catalog query.
+
+Steps 5-6 run in one of two forms with identical rows. When the
+graph's exact size bound (``HNSWGraph.edges_size_hint``: edge rows plus
+node id/vector rows) fits ``VSS_EDGE_BCAST_BYTES``, the edges and the
+vectors are collected once per call, capped at that bound, and
+``_DriverWalk`` replays the walk per query in numpy on the driver —
+two jobs instead of ~20. Above the budget, at budget 0, or when the
+points table is not exactly the graph's nodes, the walk runs
+distributed: relational hop joins, one Spark job per layer or hop.
+The production distributed ANN paths remain operators/ivf.py and
+hnsw_sharded.py.
 """
 
 from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from vector_search_spark.functions.distance import as_double_array, l2_sqr
@@ -508,16 +519,28 @@ class HNSWGraph:
     levels: DataFrame  # (vec_id, level)
     entry_point: int
     max_level: int
-    # Optimizer size estimate of ``edges`` captured BEFORE it was
-    # localCheckpointed (r18): a checkpointed LogicalRDD has no stats,
-    # so the planner cannot see that a small edge artifact fits a
-    # broadcast and falls back to sort-merge + AQE demotion — one extra
-    # exchange pair per walk join. The walk operators use this hint to
-    # pick the join build side deliberately (guide §3.1): edges-side
-    # broadcast (one reused build per layer) when the artifact fits,
-    # candidate-side broadcast otherwise. None = unknown = candidate
-    # side (the always-safe, caller-bounded choice).
+    # Exact upper bound, in driver bytes, of the edges plus the node
+    # vectors (:func:`_size_bound`). A checkpointed LogicalRDD has no
+    # stats, so the walk operators gate on this instead: when it fits
+    # ``VSS_EDGE_BCAST_BYTES`` they walk on the driver, and the
+    # distributed walk broadcasts the edges (one reused build per
+    # layer) rather than the candidate chain. None = unknown = the
+    # distributed walk with candidate-side broadcast (the always-safe,
+    # caller-bounded choice).
     edges_size_hint: int | None = None
+
+
+# Driver bytes of one collected edge row: (layer, src, dst) as int64.
+_EDGE_BYTES = 24
+
+
+def _size_bound(node_layers: int, n: int, m: int, dim: int) -> int:
+    """Exact upper bound, in driver bytes, of a graph's edge rows plus
+    its ``n`` nodes' (id, ``dim``-vector) rows as float64.
+    ``symmetrize_and_cap`` keeps at most ``m`` edges per (layer, src),
+    so the edge rows are at most
+    m · Σₗ n(level ≥ l) = m · Σ_v (level_v + 1) = m · ``node_layers``."""
+    return m * node_layers * _EDGE_BYTES + n * (dim + 1) * 8
 
 
 def save_graph(graph: HNSWGraph, path: str) -> None:
@@ -541,8 +564,8 @@ def save_graph(graph: HNSWGraph, path: str) -> None:
     graph.levels.write.mode("overwrite").parquet(f"{path}/levels")
     spark = graph.edges.sparkSession
     spark.createDataFrame(
-        [(int(graph.entry_point), int(graph.max_level))],
-        "entry_point long, max_level int",
+        [(int(graph.entry_point), int(graph.max_level), graph.edges_size_hint)],
+        "entry_point long, max_level int, size_bound long",
     ).write.mode("overwrite").parquet(f"{path}/meta")
 
 
@@ -550,13 +573,16 @@ def load_graph(spark, path: str) -> HNSWGraph:
     """Reopen a :func:`save_graph` artifact. The edge relation comes
     back as a layer-partitioned parquet scan, so per-layer filters in
     the walk operators prune at the directory level (plan-asserted in
-    tests/test_graph.py)."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    tests/test_graph.py). The size bound comes back from ``meta``; an
+    artifact written without one reopens with None (the distributed
+    walk)."""
+    meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
     return HNSWGraph(
         edges=spark.read.parquet(f"{path}/edges"),
         levels=spark.read.parquet(f"{path}/levels"),
-        entry_point=int(meta.entry_point),
-        max_level=int(meta.max_level),
+        entry_point=int(meta["entry_point"]),
+        max_level=int(meta["max_level"]),
+        edges_size_hint=meta.get("size_bound"),
     )
 
 
@@ -604,10 +630,16 @@ def hnsw_build(
     levels = routed.filter(F.col("probe_rank") == 0).select(
         "vec_id", "level"
     )
-    # one tiny job over the checkpoint: highest level, lowest id
-    top_row = levels.orderBy(F.desc("level"), "vec_id").limit(1).first()
+    # one tiny job over the checkpoint: highest level, lowest id; the
+    # same scan observes the node count and Σ (level + 1) for the size
+    # bound (a groupBy of the per-level counts would add a shuffle job)
+    seen = Observation()
+    top_row = levels.observe(
+        seen, F.count(F.lit(1)).alias("n"), F.sum(F.col("level") + 1).alias("nl")
+    ).orderBy(F.desc("level"), "vec_id").limit(1).first()
     top = int(top_row["level"]) if top_row else 0
     ep = int(top_row["vec_id"]) if top_row else 0
+    bound = _size_bound(seen.get["nl"] or 0, seen.get["n"], m, centroids.shape[1])
     kk = ef_construction + 4  # per-cell pad absorbs cross-cell dedup
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -691,17 +723,16 @@ def hnsw_build(
     # partitions at bench scale), and EVERY per-layer filter in the
     # descent + walk re-scans all of them — measured ~10 scans x ~40
     # tasks of scheduling for kilobytes. Identity at scale (estimate-
-    # gated), so a big graph keeps its partitioning. The pre-checkpoint
-    # size estimate is kept on the artifact so the walk operators can
-    # pick join build sides the planner no longer can (stats are lost
-    # at the checkpoint — see HNSWGraph.edges_size_hint).
+    # gated), so a big graph keeps its partitioning. The exact size
+    # bound is kept on the artifact: stats are lost at the checkpoint,
+    # and the walk operators gate on it (HNSWGraph.edges_size_hint).
     from vector_search_spark.functions.fanout import plan_size_estimate
 
     est = plan_size_estimate(edges)
     return HNSWGraph(
         edges=coalesce_small(edges, est=est).localCheckpoint(),
         levels=levels, entry_point=int(ep), max_level=int(top),
-        edges_size_hint=est,
+        edges_size_hint=bound,
     )
 
 
@@ -735,21 +766,111 @@ def _edges_fit_broadcast(graph: "HNSWGraph") -> bool:
     )
 
 
-def _broadcast_query_scorer(
-    points: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_batch: tuple | None = None,
-):
-    """Shared scorer for the graph-walk operators: broadcast the query
-    matrix once, return (qids, score_fn) where score_fn maps a
-    (query_id, vec_id) DataFrame to (query_id, vec_id, dist) via one
-    exact (a-b)^2 gemm-free kernel per Arrow batch. ``query_batch`` is
-    an optional pre-collected :func:`collect_query_batch` (skips this
-    scorer's own collect job)."""
+class _DriverWalk:
+    """The one local kernel of the walk: a numpy replay, on the driver,
+    of the distributed walk's own set semantics, row for row (not
+    ``LocalHNSW._search_layer``, whose best-first heap visits a
+    different set). :meth:`collect` returns None — the distributed
+    walk — unless the graph's size bound fits ``VSS_EDGE_BCAST_BYTES``;
+    both collects stop at that bound, so the driver never holds more
+    than it. Edges beyond the bound, more vector rows than it allows,
+    a NULL or duplicate id, an id that is not a graph node, or a
+    vector that is NULL, non-finite or not ``dim`` long also fall back.
+    A node with no vector is skipped, as the inner join skips it."""
+
+    @classmethod
+    def collect(cls, graph, points, id_col, vec_col, dim):
+        if not _edges_fit_broadcast(graph):
+            return None
+        ecap, vcap = (graph.edges_size_hint // b for b in (_EDGE_BYTES, 8 * dim + 8))
+        e = graph.edges.select("layer", "src", "dst").limit(ecap + 1).toPandas()
+        if len(e) > ecap:
+            return None
+        p = points.select(F.col(id_col).alias("i"), as_double_array(vec_col)
+                          .alias("v")).limit(vcap + 1).toPandas().sort_values("i")
+        nodes = np.concatenate([e["src"], e["dst"], [graph.entry_point]])
+        ok = (0 < len(p) <= vcap and p.notna().all(axis=None)
+              and not p["i"].duplicated().any() and np.isin(p["i"], nodes).all()
+              and p["v"].map(lambda v: len(v) == dim and np.isfinite(v).all()).all())
+        return cls(e, p["i"].to_numpy(np.int64), np.vstack(p["v"])) if ok else None
+
+    def __init__(self, e, ids, V):
+        self.ids, self.V = ids, V  # sorted by id
+        self.adj = {l: (g["src"].to_numpy(np.int64), g["dst"].to_numpy(np.int64))
+                    for l, g in e.sort_values("src", kind="stable").groupby("layer")}
+
+    def rings(self, layer, ids, hops):
+        """The set of nodes 1..``hops`` chained hops from ``ids`` in
+        ``layer``."""
+        src, dst = self.adj.get(layer, (np.zeros(0, np.int64),) * 2)
+        out = [np.zeros(0, np.int64)]
+        for _ in range(hops):
+            lo, hi = np.searchsorted(src, ids), np.searchsorted(src, ids, "right")
+            at = np.repeat(hi - np.cumsum(hi - lo), hi - lo)
+            ids = np.unique(dst[at + np.arange(len(at))])
+            out.append(ids)
+        return np.unique(np.concatenate(out))
+
+    def scored(self, ids, q, fold):
+        """(the ``ids`` that have a vector, their distances to ``q``):
+        with ``fold`` Catalyst's ``l2_sqr`` (the descent's scorer, a
+        sequential index-order float64 sum), else the raw walk scorer's
+        numpy kernel."""
+        ids = ids[np.isin(ids, self.ids)]
+        B = self.V[np.searchsorted(self.ids, ids)]
+        return ids, (
+            reduce(lambda acc, t: acc + t * t, (q - B).T, np.zeros(len(B)))
+            if fold else ((B - q) ** 2).sum(axis=1)
+        )
+
+    def descend(self, qid, q, graph, layer1_hops, probe_rounds, upper_hops):
+        """``descend_entry_points`` for one query: per layer the
+        (dist, id)-minimum of the anchor and its chained rings, then the
+        layer-1 probes of the best node's neighbours. No row = the query
+        lost its anchor (no candidate had a vector)."""
+        def argmin(ids):
+            c, d = self.scored(np.unique(ids), q, fold=True)
+            return c[np.lexsort((c, d))[:1]]
+
+        a = np.array([graph.entry_point], np.int64)
+        for layer in range(graph.max_level, 0, -1):
+            hops = upper_hops if layer > 1 else layer1_hops
+            a = argmin(np.concatenate([a, self.rings(layer, a, hops)]))
+        for _ in range(probe_rounds):
+            a = argmin(np.concatenate([a, self.rings(1, a, 1)]))
+        return pd.DataFrame({"query_id": qid, "vec_id": a})
+
+    def beam(self, qid, q, seeds, k, ef, max_hops, expand):
+        """``greedy_search``'s layer-0 beam for one query: its top-k rows
+        by (dist, id). Each hop scores the chained 1..``expand`` rings
+        minus the visited set (seeds + past frontiers) and keeps the top
+        ``ef``; the frontier is the newly scored survivors. An empty
+        frontier ends the walk either way (``early_stop`` or not): it
+        adds no candidates."""
+        ids, d = self.scored(np.unique(np.asarray(seeds, np.int64)), q, False)
+        visited = frontier = ids
+        for _ in range(max_hops):
+            c, cd = self.scored(np.setdiff1d(
+                self.rings(0, frontier, max(1, expand)), visited), q, False)
+            ids, d = np.concatenate([ids, c]), np.concatenate([d, cd])
+            keep = np.lexsort((ids, d))[:ef]
+            frontier = ids[keep[keep >= len(ids) - len(c)]]
+            ids, d = ids[keep], d[keep]
+            if not len(frontier):
+                break
+            visited = np.union1d(visited, frontier)
+        top = np.lexsort((ids, d))[:k]
+        return pd.DataFrame({"query_id": qid, "vec_id": ids[top], "dist": d[top],
+                             "rank": np.arange(1, len(top) + 1)})
+
+
+def _broadcast_query_scorer(points: DataFrame, id_col: str, vec_col: str, qids, Q):
+    """Shared scorer for the distributed walk: broadcast the collected
+    query batch ``(qids, Q)`` once, return (qids, score_fn) where
+    score_fn maps a (query_id, vec_id) DataFrame to
+    (query_id, vec_id, dist) via one exact (a-b)^2 gemm-free kernel per
+    Arrow batch."""
     spark = points.sparkSession
-    qids, Q = query_batch or collect_query_batch(queries, id_col, vec_col)
     bc = spark.sparkContext.broadcast((qids, Q))
     base = points.select(
         F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("bv")
@@ -879,15 +1000,23 @@ def descend_entry_points(
     neighbor while it improves), then drop a layer. Returns
     (query_id, vec_id) — per-query layer-0 entry seeds.
 
-    FULLY DISTRIBUTED (round 6 — retires the last N-scaling driver
-    collect): every layer's walk is the same relational recipe —
+    DRIVER WALK: when the graph's size bound fits
+    ``VSS_EDGE_BCAST_BYTES`` (see the module docstring), the edges and
+    vectors are collected once, capped at that bound, and
+    ``_DriverWalk.descend`` replays the recipe below per query — the
+    same candidate sets, the same Catalyst ``l2_sqr`` fold (a
+    sequential float64 sum), the same (dist, vec_id) argmin — and the
+    result is a driver-built frame. Otherwise:
+
+    FULLY DISTRIBUTED FALLBACK (no N-scaling driver collect): every
+    layer's walk is the same relational recipe —
     candidates = anchor ∪ up-to-``hops`` chained edge-joins in that
     layer, one scorer pass, per-query argmin (anchor included, so the
     descent is monotone) — and the per-layer argmin is just a DataFrame
     transform of the previous layer's anchor, so the WHOLE descent
-    composes into one lazy plan. No ``.toPandas()`` anywhere; the only
-    driver-side data is the query batch itself (model-sized, broadcast
-    by design, as in every serving path here).
+    composes into one lazy plan. On this branch there is no
+    ``.toPandas()`` beyond the query batch itself (model-sized,
+    broadcast by design, as in every serving path here).
 
     Scan economics at 100 TB: the layers>=2 scoring passes probe
     ``upper_base`` — the routing skeleton's (id, vector) relation,
@@ -922,6 +1051,12 @@ def descend_entry_points(
     # pre-collected batch lets the HNSW entries share ONE collect with
     # the walk scorer
     qids, Q = query_batch or collect_query_batch(queries, id_col, vec_col)
+    walk = graph.max_level >= 1 and _DriverWalk.collect(
+        graph, points, id_col, vec_col, Q.shape[1])
+    if walk:
+        return spark.createDataFrame(pd.concat([
+            walk.descend(q, qv, graph, layer1_hops, probe_rounds, upper_hops)
+            for q, qv in zip(qids, Q)]), "query_id long, vec_id long")
     # NOTE (r18, measured): do NOT coalesce(1) this literal. A single-
     # partition seed's SinglePartition output satisfies every downstream
     # clustering requirement, so Catalyst DROPS the argmin exchanges —
@@ -1153,6 +1288,14 @@ def greedy_search(
     reference's compressed SearchLayer). With a scorer given,
     ``points`` is unused and may be None.
 
+    DRIVER WALK: with the raw scorer (``scorer is None``) and a graph
+    whose size bound fits ``VSS_EDGE_BCAST_BYTES``, the edges and
+    vectors are collected once, capped at that bound, and
+    ``_DriverWalk.beam`` replays the loop below per query with the
+    raw scorer's numpy kernel; the result is a driver-built frame with
+    the same schema and rows. Otherwise the loop runs distributed, one
+    Spark job per hop, as described here.
+
     Set-oriented form of py/hnsw.py:240-277 — the early-termination
     heap loop becomes an iteration-level stop test. Entry is the global
     entry point for every query, optionally widened by ``seeds``
@@ -1183,9 +1326,18 @@ def greedy_search(
     """
     spark = queries.sparkSession
     if scorer is None:
-        qids, score = _broadcast_query_scorer(
-            points, queries, id_col, vec_col, query_batch=query_batch
-        )
+        qids, Q = query_batch or collect_query_batch(queries, id_col, vec_col)
+        walk = _DriverWalk.collect(graph, points, id_col, vec_col, Q.shape[1])
+        if walk:
+            mine = {q: [graph.entry_point] for q in qids}
+            for q, v in [] if seeds is None else seeds.select(
+                    "query_id", "vec_id").collect():
+                mine[q] += [] if v is None else [v]
+            return spark.createDataFrame(pd.concat([
+                walk.beam(q, qv, mine[q], k, ef, max_hops, expand)
+                for q, qv in zip(qids, Q)
+            ]), "query_id long, vec_id long, dist double, rank int")
+        qids, score = _broadcast_query_scorer(points, id_col, vec_col, qids, Q)
     else:
         qids, score = scorer
     edges0 = graph.edges.filter(F.col("layer") == 0).select("src", "dst")

@@ -1061,15 +1061,17 @@ def q_graph_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = gr.knn_graph_blocked(emb, C, k=NNG_K, nprobe=NNG_NPROBE)
     # compact the pinned walk artifact (r18, guide §6): the hop joins
     # re-scan it per hop; without the estimate-gated coalesce it keeps
-    # the repartition("src") shuffle's ~32 sub-KB partitions. The pre-
-    # checkpoint size estimate rides along so the walk picks its join
-    # build sides (graph.HNSWGraph.edges_size_hint).
+    # the repartition("src") shuffle's ~32 sub-KB partitions. The graph
+    # carries the exact size bound of an HNSW build (one layer, at most
+    # NNG_K edges per src), so the walk runs on the driver and the SQL
+    # replay below checks that kernel (graph.HNSWGraph.edges_size_hint).
     e_df = g.select(F.lit(0).alias("layer"), "src", "dst", "dist")
     est = plan_size_estimate(e_df)
     edges = coalesce_small(e_df, est=est).localCheckpoint()
+    n = emb.count()
     hg = gr.HNSWGraph(
         edges=edges, levels=None, entry_point=0, max_level=0,
-        edges_size_hint=est,
+        edges_size_hint=gr._size_bound(n, n, NNG_K, C.shape[1]),
     )
     queries = emb.filter(F.col("vec_id") < GS_Q)
     assigned = kmeans.assign(emb, C)
