@@ -72,9 +72,16 @@ HEADLINE = [
 # top-N cut. Checked against the catalog at startup — a stale name
 # here fails loudly instead of silently guarding nothing.
 CHANGED_THIS_ROUND = [
-    # the HNSW walk replays on the driver when the graph's exact size
-    # bound fits VSS_EDGE_BCAST_BYTES (graph._DriverWalk)
-    "hnsw_knn", "hnsw_adc_knn", "graph_greedy_search",
+    # one k-means trainer (kmeans._kmeanspp / _lloyd_loop / _nearest)
+    # under k-means, k-means||, train_coarse, train_pq and encode
+    "kmeans_assign", "kmeans_lloyd", "kmeans_train", "kmeans_parallel_train",
+    "pq_train", "pq_encode", "pq_decode", "pq_adc_knn", "pq_sdc_pairs",
+    "pq_refine_knn", "opq_adc_knn",
+    # the IVFADC catalog set-up, now one helper (_ivfadc_setup)
+    "ivf_adc_knn", "ivf_adc_range", "ivf_adc_range_refined",
+    "ivf_adc_knn_refined", "ivf_adc_margin_check", "adc_refine_curve",
+    # coarse training / cell routing through the shared kernel
+    "hnsw_knn", "hnsw_adc_knn", "hnsw_sharded_knn", "ivf_knn",
 ]
 
 TOP_N = 20

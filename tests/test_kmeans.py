@@ -64,6 +64,64 @@ def test_kmeanspp_without_replacement(clustered_df):
     assert len({tuple(np.round(c, 9)) for c in C}) == 5
 
 
+def test_train_coarse_k_equal_n_returns_the_input_rows(spark):
+    """k = n = 5 with four copies of one vector: once the odd row is a
+    centre the D² mass is 0, and the seeding then takes the rows not yet
+    chosen instead of redrawing — so no row is a centre twice and the
+    centroids are exactly the input rows, wherever the sample order puts
+    the odd one."""
+    rows = [(i, [1.0, 2.0]) for i in range(4)] + [(4, [5.0, -3.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    want = sorted(tuple(v) for _, v in rows)
+    for seed in range(10):
+        C = kmeans.train_coarse(df, k=5, seed=seed)
+        assert sorted(map(tuple, C.tolist())) == want, seed
+
+
+def _reference_driver_kmeans(X, w, k, seed, iters=25, tol=1e-6):
+    """Loop form of the driver trainer: weighted D² draws, then Lloyd
+    with a per-cluster weighted mean (empty clusters keep their
+    centroid, stop at max squared shift <= tol)."""
+    rng = np.random.default_rng(seed)
+    chosen = [int(rng.integers(0, len(X)))]
+    d2 = ((X - X[chosen[0]]) ** 2).sum(axis=1)
+    for _ in range(1, k):
+        wd = w * d2
+        r = rng.uniform(0.0, float(wd.sum()))
+        idx = min(int(np.searchsorted(np.cumsum(wd), r, side="right")), len(X) - 1)
+        chosen.append(idx)
+        d2 = np.minimum(d2, ((X - X[idx]) ** 2).sum(axis=1))
+    C = X[chosen].copy()
+    for _ in range(iters):
+        D = (X * X).sum(1)[:, None] + (C * C).sum(1)[None, :] - 2.0 * (X @ C.T)
+        cid = D.argmin(axis=1)
+        newC = C.copy()
+        for j in range(k):
+            mask = cid == j
+            if mask.any():
+                newC[j] = (X[mask] * w[mask][:, None]).sum(axis=0) / w[mask].sum()
+        shift = float(((C - newC) ** 2).sum(axis=1).max())
+        C = newC
+        if shift <= tol:
+            break
+    return C
+
+
+def test_driver_kmeans_equals_the_loop_reference():
+    """The driver trainer (shared seeding, kernel and Lloyd loop) gives
+    the loop form's centroids bit for bit — unit weights (train_coarse)
+    and integer weights (k-means||), rounded inputs so ties occur."""
+    rng = np.random.default_rng(3)
+    for t in range(12):
+        X = rng.normal(size=(int(rng.integers(40, 400)), 6))
+        if t % 3 == 0:
+            X = np.round(X, 1)
+        w = np.ones(len(X)) if t % 2 else rng.integers(1, 6, len(X)).astype(float)
+        k = int(rng.integers(2, 12))
+        got = kmeans._np_weighted_kmeans(X, w, k, seed=t)
+        assert np.array_equal(got, _reference_driver_kmeans(X, w, k, seed=t)), t
+
+
 def test_centroids_roundtrip(spark, clustered_df, tmp_path):
     init = kmeans.kmeans_plus_plus(clustered_df, 3, seed=1)
     res = kmeans.lloyd(clustered_df, init, max_iter=10, tol=1e-6)

@@ -72,14 +72,12 @@ def test_l2_matches_numpy_and_axioms(session, data):
         assert r.ab >= 0.0  # non-negativity
 
 
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(data=st.data())
-def test_dot_and_cosine_match_numpy(session, data):
-    pairs = _vec_pairs(data.draw)
+def _check_dot_and_cosine(session, pairs):
+    """``D.dot`` against the exactly rounded sum of the products
+    (``math.fsum``), within the forward-error bound of an n-term
+    sequential sum, n * 2**-53 * sum(|a_i * b_i|), plus a tiny floor.
+    numpy's ``a @ b`` is no reference here: its summation order loses
+    the small terms under cancellation."""
     df = session.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(pairs)],
         "i long, a array<double>, b array<double>",
@@ -90,15 +88,35 @@ def test_dot_and_cosine_match_numpy(session, data):
         D.cosine_distance("a", "b").alias("c"),
     ).collect()
     for r, (a, b) in zip(sorted(rows, key=lambda r: r.i), pairs):
+        exact = math.fsum(x * y for x, y in zip(a, b))
+        bound = len(a) * 2.0**-53 * math.fsum(abs(x * y) for x, y in zip(a, b))
+        assert abs(r.d - exact) <= bound + 1e-300
         na, nb = np.array(a), np.array(b)
-        assert math.isclose(
-            r.d, float(na @ nb), rel_tol=1e-9, abs_tol=1e-6
-        )
         denom = float(np.linalg.norm(na) * np.linalg.norm(nb))
         if denom > 1e-9:
-            want_c = 1.0 - float(na @ nb) / denom
+            want_c = 1.0 - exact / denom
             assert math.isclose(r.c, want_c, rel_tol=1e-6, abs_tol=1e-6)
         assert -1e-9 <= r.c <= 2.0 + 1e-9  # cosine distance range
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(data=st.data())
+def test_dot_and_cosine_match_numpy(session, data):
+    _check_dot_and_cosine(session, _vec_pairs(data.draw))
+
+
+def test_dot_matches_the_exact_sum_under_cancellation(session):
+    """A recorded hypothesis pair: the ±1e12 products cancel, leaving
+    17 * 2**-24 ≈ 1.01e-6. The sequential fold keeps it; numpy's
+    ``a @ b`` returns 0.0, which the old numpy-referenced check (fixed
+    abs_tol 1e-6) rejected."""
+    a = [0.0, 999999.0, -999999.0, 0.0, 2.0**-24, 0.0]
+    b = [0.0, -1e6, -1e6, 0.0, 17.0, 0.0]
+    _check_dot_and_cosine(session, [(a, b)])
 
 
 @settings(

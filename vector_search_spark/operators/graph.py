@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 
 from vector_search_spark.functions.distance import as_double_array, l2_sqr
 from vector_search_spark.functions.fanout import coalesce_small
-from vector_search_spark.operators import knn, pq
+from vector_search_spark.operators import kmeans, knn, pq
 
 __all__ = [
     "route_to_cells",
@@ -156,13 +156,9 @@ def route_to_cells(
 
     def fn(batches):
         C = bc.value
-        cn2 = (C * C).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
+        for pdf, X in kmeans._batch_vectors(batches, "v"):
             vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            X = np.vstack(pdf["v"].to_numpy())
-            D = cn2[None, :] + (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T)
+            D = kmeans._sq_dists(X, C)
             m = min(npb, D.shape[1])
             cells = np.argsort(D, axis=1, kind="stable")[:, :m]
             n = len(vids)

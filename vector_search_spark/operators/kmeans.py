@@ -1,31 +1,52 @@
 """K-means on DataFrames (reference py/pq.py:80-206 — _KMeansPlusPlus +
-_KMeans/Lloyd), re-shaped for Spark scale.
+_KMeans/Lloyd), re-shaped for Spark scale — and the one quantizer
+trainer of the package: the coarse cells (``train_coarse``, k-means,
+k-means||) and the PQ codebooks (``pq.train_pq``, ``pq.encode``, OPQ's
+init) all run on the parts below, as the reference trains every PQ
+subspace with its one k-means class.
 
 Covers SURVEY.md §2 #15 (argmin assignment), #16 (centroid mean with
 empty-cluster-keeps-old, reference py/pq.py:181-183), #17 (cluster
 sizes), #19 (convergence max-shift, tol 1e-6, reference py/pq.py:197),
 #40 (k-means++ init), #41 (Lloyd loop, <=100 iters, py/pq.py:140).
 
+One copy of each part
+---------------------
+- ``_nearest`` (over ``_sq_dists``) — THE nearest-centroid kernel:
+  BLAS ``‖x‖² + ‖c‖² − 2x·c``, unclamped, first minimum wins, so exact
+  ties go to the lowest id like the reference's strict-< loops
+  (py/pq.py:167-170). Used by ``assign``, the Lloyd pass, the driver
+  Lloyd, k-means||'s cost / sample / weight passes and ``pq.encode``;
+  ``graph.route_to_cells`` and the PQ lookup tables use ``_sq_dists``.
+- ``_kmeanspp`` — THE D² seeding (py/pq.py:80-138), optionally
+  weighted: ``kmeans_plus_plus``, ``train_coarse``, k-means||'s final
+  step, ``pq.train_pq`` and ``pq.train_opq_rotation``'s init.
+- ``_lloyd_loop`` — THE Lloyd update and stop rule: an empty cluster
+  keeps its centroid, stop once the max squared shift <= tol. It runs
+  over a (k, D) centroid matrix or an (M, K, D') codebook stack.
+- ``_lloyd_pass`` — THE distributed Lloyd step, for ``lloyd`` (M = 1)
+  and ``pq.train_pq`` (M subspaces). ``_np_weighted_kmeans`` is the
+  driver-side trainer (``train_coarse`` with unit weights, k-means||'s
+  weighted candidates).
+- ``_training_sample`` — THE bounded training sample
+  (``kmeans_plus_plus``, ``pq.train_pq``, ``pq.train_opq_rotation``).
+
 Execution shape
 ---------------
 Centroids are a tiny model (K x D <= 256 x 64 doubles) — exactly like
 the reference, which holds them on the "driver" (a Python list). Each
-Lloyd iteration is ONE distributed pass:
+distributed Lloyd iteration is ONE pass:
 
     mapInPandas over points:
-        BLAS distance matrix batch x K -> argmin assignment
-        -> per-batch partial (cluster_id, count, component sums)
-    -> collect partials (O(batches x K) tiny rows) -> combine on driver
+        BLAS distance matrix batch x K (per subspace) -> argmin
+        -> per-batch partial (m, k, count, component sums)
+    -> collect partials (O(batches x M x K) tiny rows) -> combine on driver
 
 No shuffle of point rows at all; the only data movement per iteration
 is the partial-sum rows. This is the map-side-combine formulation of
 the groupBy-mean the logical plan implies, and it survives 100 TB: the
-pass is embarrassingly parallel and the reduce state is K x (D+1)
+pass is embarrassingly parallel and the reduce state is M x K x (D'+1)
 doubles per batch.
-
-Tie-breaking matches the reference's strict-< first-wins loops
-(py/pq.py:167-170): centroids are ordered by cluster_id and np.argmin
-returns the first minimal index, so exact ties go to the lowest id.
 
 Init: ``init_first_k`` (deterministic, oracle-friendly) and
 ``kmeans_plus_plus`` — faithful D^2-weighted sampling (py/pq.py:80-138)
@@ -37,7 +58,7 @@ driver-side.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -70,6 +91,174 @@ def _collect_matrix(
     return ids, mat
 
 
+def _training_sample(
+    df: DataFrame, vec_col: str, sample_size: int, seed: int
+) -> np.ndarray:
+    """At most ``sample_size`` of ``df``'s vectors as a driver matrix —
+    the bounded sample every driver-side init trains on (a seeded
+    Bernoulli draw of ~1.1x the target fraction, then a limit)."""
+    n = df.count()
+    if n > sample_size:
+        df = df.sample(fraction=min(1.0, sample_size / n * 1.1), seed=seed)
+        df = df.limit(sample_size)
+    pdf = df.select(as_double_array(vec_col).alias("_v")).toPandas()
+    if not len(pdf):
+        return np.zeros((0, 0))
+    return np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
+
+
+def _batch_vectors(batches, col: str = "_v"):
+    """``(pdf, X)`` per non-empty Arrow batch of a mapInPandas input,
+    ``X`` the batch's vector column as an (n, D) float64 matrix."""
+    for pdf in batches:
+        if len(pdf):
+            yield pdf, np.vstack(pdf[col].to_numpy()).astype(np.float64)
+
+
+def _sq_dists(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(n, k) squared L2 distances ``‖x‖² + ‖c‖² − 2x·c`` (one BLAS
+    gemm). Unclamped: cancellation can leave tiny negative values, and
+    clamping them to 0 before an argmin would merge them into ties."""
+    return (
+        (X * X).sum(axis=1)[:, None]
+        + (C * C).sum(axis=1)[None, :]
+        - 2.0 * (X @ C.T)
+    )
+
+
+def _nearest(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Each row's nearest centroid id and its (unclamped) squared
+    distance. np.argmin returns the first minimum, so exact ties go to
+    the lowest centroid id (py/pq.py:167-170)."""
+    D = _sq_dists(X, C)
+    cid = D.argmin(axis=1)
+    return cid, D[np.arange(len(D)), cid]
+
+
+def _kmeanspp(
+    X: np.ndarray, k: int, rng: np.random.Generator, w: np.ndarray | None = None
+) -> np.ndarray:
+    """Seeded D² seeding (py/pq.py:80-138): the first centre uniform,
+    each next one drawn with probability proportional to ``w * d2`` —
+    ``d2`` the squared distance to the nearest chosen centre, ``w`` the
+    row weights (1 when None). A chosen row has ``d2 == 0``; when the
+    whole mass is 0 (fewer distinct weighted rows than k) the next
+    centre is the first row not yet chosen rather than a random one."""
+    n = len(X)
+    chosen = [int(rng.integers(0, n))]
+    d2 = ((X - X[chosen[0]]) ** 2).sum(axis=1)
+    for _ in range(1, k):
+        p = d2 if w is None else w * d2
+        total = float(p.sum())
+        if total <= 0.0:
+            chosen.append(int(np.setdiff1d(np.arange(n), chosen)[0]))
+            continue
+        r = rng.uniform(0.0, total)
+        idx = min(int(np.searchsorted(np.cumsum(p), r, side="right")), n - 1)
+        chosen.append(idx)
+        d2 = np.minimum(d2, ((X - X[idx]) ** 2).sum(axis=1))
+    return X[chosen].copy()
+
+
+@dataclass
+class LloydResult:
+    centroids: np.ndarray  # (k, D)
+    n_iter: int
+    max_shift: float
+    converged: bool
+
+
+def _lloyd_loop(C: np.ndarray, step, max_iter: int, tol: float) -> LloydResult:
+    """Lloyd iterations over a centroid matrix (k, D) or a codebook
+    stack (M, K, D'). ``step(C)`` returns per-centroid ``(count, sum)``
+    of the rows nearest to it (``count`` a weight sum on the driver).
+    A centroid with a positive count moves to ``sum / count``, an empty
+    one keeps its value (py/pq.py:181-183); stop once the max squared
+    shift over all centroids is <= ``tol`` (py/pq.py:197)."""
+    it, shift = 0, float("inf")
+    for it in range(1, max_iter + 1):
+        cnt, sums = step(C)
+        newC = C.copy()
+        nz = cnt > 0
+        newC[nz] = sums[nz] / cnt[nz][:, None]
+        shift = float(((C - newC) ** 2).sum(axis=-1).max())
+        C = newC
+        if shift <= tol:
+            return LloydResult(C, it, shift, True)
+    return LloydResult(C, it, shift, False)
+
+
+def _lloyd_pass(src: DataFrame, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """One distributed Lloyd step for a codebook stack ``C`` (M, K, D')
+    over the ``_v`` vectors of ``src``: per Arrow batch, each subspace's
+    subvectors go to their nearest codeword and the batch emits partial
+    ``(m, k, cnt, vsum)`` rows; the driver adds them up. Returns
+    ``(count (M, K), sums (M, K, D'))``."""
+    m, k, dsub = C.shape
+    bc = src.sparkSession.sparkContext.broadcast(np.ascontiguousarray(C))
+    grid = {
+        "m": np.repeat(np.arange(m, dtype=np.int32), k),
+        "k": np.tile(np.arange(k, dtype=np.int32), m),
+    }
+
+    def fn(batches):
+        CC = bc.value
+        for _, X in _batch_vectors(batches):
+            Xs = X.reshape(len(X), m, dsub)
+            cnt = np.empty((m, k), dtype=np.int64)
+            sums = np.zeros_like(CC)
+            for mi in range(m):
+                cid, _ = _nearest(Xs[:, mi, :], CC[mi])
+                cnt[mi] = np.bincount(cid, minlength=k)
+                np.add.at(sums[mi], cid, Xs[:, mi, :])
+            yield pd.DataFrame(
+                {**grid, "cnt": cnt.reshape(-1), "vsum": list(sums.reshape(-1, dsub))}
+            )
+
+    partials = src.mapInPandas(
+        fn, "m int, k int, cnt long, vsum array<double>"
+    ).toPandas()
+    cnt = np.zeros((m, k), dtype=np.int64)
+    sums = np.zeros_like(C)
+    if len(partials):
+        mk = (
+            partials["m"].to_numpy(dtype=np.int64),
+            partials["k"].to_numpy(dtype=np.int64),
+        )
+        np.add.at(cnt, mk, partials["cnt"].to_numpy(dtype=np.int64))
+        # same row order as a python loop -> bit-identical float sums
+        np.add.at(sums, mk, np.vstack(partials["vsum"].to_numpy()))
+    return cnt, sums
+
+
+def _np_weighted_kmeans(
+    X: np.ndarray,
+    w: np.ndarray,
+    k: int,
+    seed: int,
+    iters: int = 25,
+    tol: float = 1e-6,
+) -> np.ndarray:
+    """Driver-local weighted k-means++ + Lloyd on an in-memory matrix:
+    ``train_coarse``'s bounded sample (unit weights) and the final step
+    of k-means|| (the small candidate set, each candidate weighted by
+    how many corpus points it attracts)."""
+    C = _kmeanspp(X, k, np.random.default_rng(seed), w)
+
+    def step(C):
+        cid, _ = _nearest(X, C)
+        cnt = np.bincount(cid, weights=w, minlength=len(C))
+        sums = np.zeros_like(C)
+        # one numpy reduction per cluster, not the distributed pass's
+        # row-order np.add.at: the two orders round differently
+        for j in np.flatnonzero(cnt):
+            mask = cid == j
+            sums[j] = (X[mask] * w[mask][:, None]).sum(axis=0)
+        return cnt, sums
+
+    return _lloyd_loop(C, step, iters, tol).centroids
+
+
 def init_first_k(points: DataFrame, k: int, id_col="vec_id", vec_col="embedding") -> np.ndarray:
     """Deterministic init: the k lowest-id points, ordered by id."""
     _, mat = _collect_matrix(
@@ -92,31 +281,13 @@ def kmeans_plus_plus(
 
     Faithful to reference py/pq.py:80-138: first centroid uniform, each
     next drawn with probability proportional to squared distance to the
-    nearest chosen centroid; already-chosen points excluded.
+    nearest chosen centroid; already-chosen points excluded. Only the
+    vectors are read (``id_col`` is accepted for the common signature).
     """
-    n = points.count()
-    if n > sample_size:
-        frac = min(1.0, sample_size / n * 1.1)
-        points = points.sample(fraction=frac, seed=seed).limit(sample_size)
-    ids, X = _collect_matrix(points, id_col, vec_col)
+    X = _training_sample(points, vec_col, sample_size, seed)
     if len(X) < k:
         raise ValueError(f"need >= {k} points after sampling, got {len(X)}")
-    rng = np.random.default_rng(seed)
-    chosen = [int(rng.integers(0, len(X)))]
-    d2 = ((X - X[chosen[0]]) ** 2).sum(axis=1)
-    for _ in range(1, k):
-        d2[chosen] = 0.0
-        total = d2.sum()
-        if total <= 0.0:  # all remaining points identical to a centroid
-            remaining = np.setdiff1d(np.arange(len(X)), chosen)
-            chosen.append(int(remaining[0]))
-            continue
-        r = rng.uniform(0.0, total)
-        idx = int(np.searchsorted(np.cumsum(d2), r, side="right"))
-        idx = min(idx, len(X) - 1)
-        chosen.append(idx)
-        d2 = np.minimum(d2, ((X - X[idx]) ** 2).sum(axis=1))
-    return X[chosen].copy()
+    return _kmeanspp(X, k, np.random.default_rng(seed))
 
 
 def assign(
@@ -156,17 +327,12 @@ def assign(
 
     def fn(batches):
         C = bc.value
-        cn2 = (C * C).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-            D = (X * X).sum(axis=1)[:, None] + cn2[None, :] - 2.0 * (X @ C.T)
-            cid = D.argmin(axis=1)  # first minimal index == lowest cluster_id
+        for pdf, X in _batch_vectors(batches):
+            cid, d = _nearest(X, C)
             cols = {
                 id_col: pdf["_id"].to_numpy(dtype=np.int64),
                 "cluster_id": cid.astype(np.int32),
-                "dist": np.maximum(D[np.arange(len(X)), cid], 0.0),
+                "dist": np.maximum(d, 0.0),
             }
             if with_vec:
                 cols["vec"] = list(X)
@@ -178,43 +344,6 @@ def assign(
             yield pd.DataFrame(cols)
 
     return src.mapInPandas(fn, out_schema)
-
-
-def _np_kmeans(
-    X: np.ndarray, k: int, seed: int, iters: int = 25, tol: float = 1e-6
-) -> np.ndarray:
-    """Driver-local k-means++ + Lloyd on an in-memory sample."""
-    rng = np.random.default_rng(seed)
-    n = len(X)
-    chosen = [int(rng.integers(0, n))]
-    d2 = ((X - X[chosen[0]]) ** 2).sum(axis=1)
-    for _ in range(1, k):
-        total = float(d2.sum())
-        if total <= 0.0:
-            chosen.append(int(rng.integers(0, n)))
-            continue
-        r = rng.uniform(0.0, total)
-        idx = min(int(np.searchsorted(np.cumsum(d2), r, side="right")), n - 1)
-        chosen.append(idx)
-        d2 = np.minimum(d2, ((X - X[idx]) ** 2).sum(axis=1))
-    C = X[chosen].copy()
-    for _ in range(iters):
-        D = (
-            (X * X).sum(axis=1)[:, None]
-            + (C * C).sum(axis=1)[None, :]
-            - 2.0 * (X @ C.T)
-        )
-        cid = D.argmin(axis=1)
-        newC = C.copy()
-        for j in range(k):
-            mask = cid == j
-            if mask.any():
-                newC[j] = X[mask].mean(axis=0)
-        shift = float(((C - newC) ** 2).sum(axis=1).max())
-        C = newC
-        if shift <= tol:
-            break
-    return C
 
 
 def train_coarse(
@@ -232,7 +361,7 @@ def train_coarse(
     quantizer needs O(k * a few hundred) training points regardless of
     table size — FAISS caps IVF training at ~256 samples/centroid — so
     the cluster does ONE bounded-collect job and Lloyd runs in
-    microseconds locally. The distributed ``lloyd`` above remains the
+    microseconds locally. The distributed ``lloyd`` below remains the
     full-data trainer (kmeans_train / kmeans_lloyd catalog queries);
     this replaces it where its output only routes rows to cells.
     """
@@ -247,15 +376,7 @@ def train_coarse(
     )
     if len(X) < k:
         raise ValueError(f"need >= {k} points, got {len(X)}")
-    return _np_kmeans(X, k, seed, iters=iters)
-
-
-@dataclass
-class LloydResult:
-    centroids: np.ndarray  # (k, D)
-    n_iter: int
-    max_shift: float
-    converged: bool
+    return _np_weighted_kmeans(X, np.ones(len(X)), k, seed, iters=iters)
 
 
 def lloyd(
@@ -269,64 +390,16 @@ def lloyd(
     """Lloyd iterations until max centroid shift (squared L2) <= tol.
 
     Defaults mirror the reference (py/pq.py:140,197). Empty clusters
-    keep their previous centroid (py/pq.py:181-183).
+    keep their previous centroid (py/pq.py:181-183). The one-subspace
+    case of the distributed loop ``pq.train_pq`` runs.
     """
-    spark = points.sparkSession
     src = points.select(as_double_array(vec_col).alias("_v")).cache()
     try:
-        k, dim = init.shape
-        C = np.ascontiguousarray(init, dtype=np.float64)
-        it, shift = 0, float("inf")
-        for it in range(1, max_iter + 1):
-            cnt, sums = _partial_assign_sums(spark, src, C)
-            newC = C.copy()
-            nonempty = cnt > 0
-            newC[nonempty] = sums[nonempty] / cnt[nonempty, None]
-            shift = float(((C - newC) ** 2).sum(axis=1).max())
-            C = newC
-            if shift <= tol:
-                return LloydResult(C, it, shift, True)
-        return LloydResult(C, it, shift, False)
+        C = np.ascontiguousarray(init, dtype=np.float64)[None]
+        res = _lloyd_loop(C, lambda C: _lloyd_pass(src, C), max_iter, tol)
+        return replace(res, centroids=res.centroids[0])
     finally:
         src.unpersist()
-
-
-def _partial_assign_sums(spark, src: DataFrame, C: np.ndarray):
-    """One pass: per-batch assignment + partial (count, sum) per cluster."""
-    k, dim = C.shape
-    bc = spark.sparkContext.broadcast(C)
-
-    def fn(batches):
-        CC = bc.value
-        cn2 = (CC * CC).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-            D = (X * X).sum(axis=1)[:, None] + cn2[None, :] - 2.0 * (X @ CC.T)
-            cid = D.argmin(axis=1)
-            cnt = np.bincount(cid, minlength=k).astype(np.int64)
-            sums = np.zeros_like(CC)
-            np.add.at(sums, cid, X)
-            yield pd.DataFrame(
-                {
-                    "cluster_id": np.arange(k, dtype=np.int32),
-                    "cnt": cnt,
-                    "vsum": list(sums),
-                }
-            )
-
-    partials = src.mapInPandas(
-        fn, "cluster_id int, cnt long, vsum array<double>"
-    ).toPandas()
-    cnt = np.zeros(k, dtype=np.int64)
-    sums = np.zeros_like(C)
-    if len(partials):
-        cid = partials["cluster_id"].to_numpy(dtype=np.int64)
-        np.add.at(cnt, cid, partials["cnt"].to_numpy(dtype=np.int64))
-        # same row order as a python loop -> bit-identical float sums
-        np.add.at(sums, cid, np.vstack(partials["vsum"].to_numpy()))
-    return cnt, sums
 
 
 def centroids_df(spark, C: np.ndarray) -> DataFrame:
@@ -367,52 +440,6 @@ def _splitmix64_uniform(
         z = (z * np.uint64(0x94D049BB133111EB)) & mask
         z ^= z >> np.uint64(31)
     return z.astype(np.float64) / 2.0**64
-
-
-def _np_weighted_kmeans(
-    X: np.ndarray,
-    w: np.ndarray,
-    k: int,
-    seed: int,
-    iters: int = 25,
-    tol: float = 1e-6,
-) -> np.ndarray:
-    """Driver-local WEIGHTED k-means++ + Lloyd (the final reduction step
-    of k-means||: cluster the small candidate set, each candidate
-    weighted by how many corpus points it attracts)."""
-    rng = np.random.default_rng(seed)
-    n = len(X)
-    chosen = [int(rng.integers(0, n))]
-    d2 = ((X - X[chosen[0]]) ** 2).sum(axis=1)
-    for _ in range(1, k):
-        wd = w * d2
-        total = float(wd.sum())
-        if total <= 0.0:
-            chosen.append(int(rng.integers(0, n)))
-            continue
-        r = rng.uniform(0.0, total)
-        idx = min(int(np.searchsorted(np.cumsum(wd), r, side="right")), n - 1)
-        chosen.append(idx)
-        d2 = np.minimum(d2, ((X - X[idx]) ** 2).sum(axis=1))
-    C = X[chosen].copy()
-    for _ in range(iters):
-        D = (
-            (X * X).sum(axis=1)[:, None]
-            + (C * C).sum(axis=1)[None, :]
-            - 2.0 * (X @ C.T)
-        )
-        cid = D.argmin(axis=1)
-        newC = C.copy()
-        for j in range(k):
-            mask = cid == j
-            if mask.any():
-                wj = w[mask]
-                newC[j] = (X[mask] * wj[:, None]).sum(axis=0) / wj.sum()
-        shift = float(((C - newC) ** 2).sum(axis=1).max())
-        C = newC
-        if shift <= tol:
-            break
-    return C
 
 
 def kmeans_parallel_init(
@@ -475,17 +502,8 @@ def kmeans_parallel_init(
             # pass 1: phi = sum of min-d2 to current C
             def cost_fn(batches):
                 CC = bc.value
-                cn2 = (CC * CC).sum(axis=1)
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-                    D = (
-                        (X * X).sum(axis=1)[:, None]
-                        + cn2[None, :]
-                        - 2.0 * (X @ CC.T)
-                    )
-                    d2 = np.maximum(D.min(axis=1), 0.0)
+                for _, X in _batch_vectors(batches):
+                    d2 = np.maximum(_nearest(X, CC)[1], 0.0)
                     yield pd.DataFrame({"phi": [float(d2.sum())]})
 
             phi = float(
@@ -501,20 +519,12 @@ def kmeans_parallel_init(
             # Python (numpy end to end).
             def sample_fn(batches, _r=rnd_i, _phi=phi):
                 CC = bc.value
-                cn2 = (CC * CC).sum(axis=1)
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-                    ids = pdf["_id"].to_numpy(dtype=np.int64)
-                    D = (
-                        (X * X).sum(axis=1)[:, None]
-                        + cn2[None, :]
-                        - 2.0 * (X @ CC.T)
-                    )
-                    d2 = np.maximum(D.min(axis=1), 0.0)
+                for pdf, X in _batch_vectors(batches):
+                    d2 = np.maximum(_nearest(X, CC)[1], 0.0)
                     p = np.minimum(1.0, l * d2 / _phi)
-                    u = _splitmix64_uniform(ids, seed, _r)
+                    u = _splitmix64_uniform(
+                        pdf["_id"].to_numpy(dtype=np.int64), seed, _r
+                    )
                     sel = u < p
                     if sel.any():
                         yield pdf.loc[sel, ["_id", "_v"]]
@@ -529,22 +539,12 @@ def kmeans_parallel_init(
 
         def weight_fn(batches):
             CC = bc.value
-            cn2 = (CC * CC).sum(axis=1)
             nc = len(CC)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-                D = (
-                    (X * X).sum(axis=1)[:, None]
-                    + cn2[None, :]
-                    - 2.0 * (X @ CC.T)
-                )
-                cid = D.argmin(axis=1)
+            for _, X in _batch_vectors(batches):
                 yield pd.DataFrame(
                     {
                         "cand": np.arange(nc, dtype=np.int64),
-                        "w": np.bincount(cid, minlength=nc).astype(np.int64),
+                        "w": np.bincount(_nearest(X, CC)[0], minlength=nc),
                     }
                 )
 

@@ -9,8 +9,8 @@ matrix) are accumulated in ONE mapInPandas pass with per-batch BLAS
 per partition, never rows. The eigendecomposition is a driver-side
 O(D^3) on the D x D covariance (D is 64-4096 in practice — model-sized),
 and the projection back over the data is one broadcast gemm per batch.
-The exact pattern of kmeans._partial_assign_sums, reused for second
-moments.
+The map-side-combine shape of the k-means Lloyd pass
+(kmeans._lloyd_pass), reused for second moments.
 
 Determinism: eigh of a fixed matrix is deterministic; eigenvector SIGN
 is not meaningful, so each component is canonicalized to make its

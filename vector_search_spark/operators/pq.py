@@ -90,124 +90,42 @@ def train_pq(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[PQModel, int]:
-    """Train all M codebooks in the same distributed Lloyd passes.
+    """Train all M codebooks in the same distributed Lloyd passes — the
+    M-subspace caller of the one k-means trainer (``kmeans.lloyd`` is
+    its one-subspace case).
 
-    Init: seeded k-means++ per subspace on one driver-side sample
-    (reference runs full k-means++ per subspace, py/pq.py:155; at scale
+    Init: seeded k-means++ (``kmeans._kmeanspp``) per subspace, one rng
+    in subspace order, on one bounded driver-side sample (reference
+    runs full k-means++ per subspace, py/pq.py:155; at scale
     init-on-sample is the honest equivalent). Then each Lloyd iteration
-    is ONE mapInPandas pass over points: per Arrow batch, for every
-    subspace, BLAS-assign subvectors and emit partial (m, k, count,
-    sum) rows; the driver combines (state: M*K*(D'+1) doubles).
-    Convergence: max centroid shift over ALL subspaces <= tol
-    (reference tol/iters: py/pq.py:140,197). Returns (model, n_iter).
+    is ONE mapInPandas pass over points (``kmeans._lloyd_pass``): per
+    Arrow batch, for every subspace, BLAS-assign subvectors and emit
+    partial (m, k, count, sum) rows; the driver combines (state:
+    M*K*(D'+1) doubles). Empty codewords keep their value; convergence:
+    max codeword shift over ALL subspaces <= tol (reference tol/iters:
+    py/pq.py:140,197). Returns (model, n_iter).
     """
     src = points.select(as_double_array(vec_col).alias("_v")).cache()
     try:
-        # ---- init: kmeans++ per subspace on one sample ----
         # dim comes from the sample itself — a separate first() probe
         # was one extra scheduled job per training call for a value the
         # sample collect already carries (optimization r17, guide §1.2:
         # don't compute things twice).
-        n = src.count()
-        if n == 0:
+        X = _kmeans._training_sample(src, "_v", sample_size, seed)
+        if not len(X):
             raise ValueError("empty training set")  # py/pq.py:226
-        sample = src
-        if n > sample_size:
-            sample = src.sample(fraction=min(1.0, sample_size / n * 1.1), seed=seed).limit(
-                sample_size
-            )
-        X = np.vstack(sample.toPandas()["_v"].to_numpy()).astype(np.float64)
-        dim = X.shape[1]
-        dsub = _check_dims(dim, m)
+        dsub = _check_dims(X.shape[1], m)
         if len(X) < k:
             raise ValueError(f"need >= {k} training points, got {len(X)}")
         Xs = X.reshape(len(X), m, dsub)
         rng = np.random.default_rng(seed)
-        C = np.empty((m, k, dsub))
-        for mi in range(m):
-            C[mi] = _kmeanspp_numpy(Xs[:, mi, :], k, rng)
-
-        # ---- Lloyd over all subspaces at once ----
-        spark = points.sparkSession
-        it = 0
-        for it in range(1, max_iter + 1):
-            cnt, sums = _pq_partial_sums(spark, src, C)
-            newC = C.copy()
-            nz = cnt > 0
-            newC[nz] = sums[nz] / cnt[nz][:, None]
-            shift = float(((C - newC) ** 2).sum(axis=2).max())
-            C = newC
-            if shift <= tol:
-                break
-        return PQModel(C), it
+        C = np.stack([_kmeans._kmeanspp(Xs[:, mi, :], k, rng) for mi in range(m)])
+        res = _kmeans._lloyd_loop(
+            C, lambda C: _kmeans._lloyd_pass(src, C), max_iter, tol
+        )
+        return PQModel(res.centroids), res.n_iter
     finally:
         src.unpersist()
-
-
-def _kmeanspp_numpy(X: np.ndarray, k: int, rng) -> np.ndarray:
-    """Seeded k-means++ (D^2 sampling, no replacement) — py/pq.py:80-138."""
-    chosen = [int(rng.integers(0, len(X)))]
-    d2 = ((X - X[chosen[0]]) ** 2).sum(axis=1)
-    for _ in range(1, k):
-        d2[chosen] = 0.0
-        total = d2.sum()
-        if total <= 0.0:
-            remaining = np.setdiff1d(np.arange(len(X)), chosen)
-            chosen.append(int(remaining[0]))
-            continue
-        r = rng.uniform(0.0, total)
-        idx = min(int(np.searchsorted(np.cumsum(d2), r, side="right")), len(X) - 1)
-        chosen.append(idx)
-        d2 = np.minimum(d2, ((X - X[idx]) ** 2).sum(axis=1))
-    return X[chosen].copy()
-
-
-def _pq_partial_sums(spark, src: DataFrame, C: np.ndarray):
-    m, k, dsub = C.shape
-    bc = spark.sparkContext.broadcast(np.ascontiguousarray(C))
-
-    def fn(batches):
-        CC = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-            Xs = X.reshape(len(X), m, dsub)
-            out_m, out_k, out_c, out_s = [], [], [], []
-            for mi in range(m):
-                Xm, Cm = Xs[:, mi, :], CC[mi]
-                D = (
-                    (Xm * Xm).sum(axis=1)[:, None]
-                    + (Cm * Cm).sum(axis=1)[None, :]
-                    - 2.0 * (Xm @ Cm.T)
-                )
-                cid = D.argmin(axis=1)
-                cnt = np.bincount(cid, minlength=k)
-                sums = np.zeros_like(Cm)
-                np.add.at(sums, cid, Xm)
-                out_m.append(np.full(k, mi, dtype=np.int32))
-                out_k.append(np.arange(k, dtype=np.int32))
-                out_c.append(cnt.astype(np.int64))
-                out_s.extend(list(sums))
-            yield pd.DataFrame(
-                {
-                    "m": np.concatenate(out_m),
-                    "k": np.concatenate(out_k),
-                    "cnt": np.concatenate(out_c),
-                    "vsum": out_s,
-                }
-            )
-
-    partials = src.mapInPandas(fn, "m int, k int, cnt long, vsum array<double>").toPandas()
-    cnt = np.zeros((m, k), dtype=np.int64)
-    sums = np.zeros_like(C)
-    if len(partials):
-        mi = partials["m"].to_numpy(dtype=np.int64)
-        ki = partials["k"].to_numpy(dtype=np.int64)
-        np.add.at(cnt, (mi, ki), partials["cnt"].to_numpy(dtype=np.int64))
-        # same row order as a python loop -> bit-identical float sums
-        np.add.at(sums, (mi, ki), np.vstack(partials["vsum"].to_numpy()))
-    return cnt, sums
 
 
 def _code_matrix(col) -> np.ndarray:
@@ -263,10 +181,7 @@ def encode(
 
     def fn(batches):
         CC = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
+        for pdf, X in _kmeans._batch_vectors(batches):
             if X.shape[1] != m * dsub:
                 raise ValueError(
                     f"vector dim {X.shape[1]} != model dim {m * dsub}"
@@ -274,13 +189,7 @@ def encode(
             Xs = X.reshape(len(X), m, dsub)
             codes = np.empty((len(X), m), dtype=np.int16)
             for mi in range(m):
-                Xm, Cm = Xs[:, mi, :], CC[mi]
-                D = (
-                    (Xm * Xm).sum(axis=1)[:, None]
-                    + (Cm * Cm).sum(axis=1)[None, :]
-                    - 2.0 * (Xm @ Cm.T)
-                )
-                codes[:, mi] = D.argmin(axis=1)
+                codes[:, mi] = _kmeans._nearest(Xs[:, mi, :], CC[mi])[0]
             out = (
                 [r.tobytes() for r in codes.astype(np.uint8)]
                 if as_bytes
@@ -333,12 +242,7 @@ def _adc_lut(codebooks: np.ndarray, Q: np.ndarray) -> np.ndarray:
     Q3 = Q.reshape(len(Q), m, dsub)
     lut = np.empty((len(Q), m, kcent))
     for mi in range(m):
-        Qm, Cm = Q3[:, mi, :], codebooks[mi]
-        lut[:, mi, :] = (
-            (Qm * Qm).sum(axis=1)[:, None]
-            + (Cm * Cm).sum(axis=1)[None, :]
-            - 2.0 * (Qm @ Cm.T)
-        )
+        lut[:, mi, :] = _kmeans._sq_dists(Q3[:, mi, :], codebooks[mi])
     np.maximum(lut, 0.0, out=lut)  # cancellation clamp
     return lut
 
@@ -440,8 +344,7 @@ def sdc_table(model: PQModel) -> np.ndarray:
     T = np.empty((m, k, k))
     for mi in range(m):
         C = model.codebooks[mi]
-        n2 = (C * C).sum(axis=1)
-        T[mi] = np.maximum(n2[:, None] + n2[None, :] - 2.0 * (C @ C.T), 0.0)
+        T[mi] = np.maximum(_kmeans._sq_dists(C, C), 0.0)
     return T
 
 
@@ -569,10 +472,14 @@ def refine_topk(
     return topk_per_query(scored, k)
 
 
+# Not the shared k-means loop (kmeans._lloyd_loop), on purpose: like
+# ivf.rebalance_index's 2-means, OPQ's inner Lloyd scores by broadcast
+# differences rather than the BLAS kernel and stops on np.allclose, and
+# at convergence it returns the NEW centroids (rebalance keeps the old
+# ones) — moving either onto the shared loop would change its rows.
 def _lloyd_numpy(X: np.ndarray, C: np.ndarray, iters: int) -> np.ndarray:
     """Small in-memory Lloyd refinement (first-min tie-break, empty
-    cluster keeps its old centroid — same conventions as the
-    distributed trainer)."""
+    cluster keeps its old centroid)."""
     for _ in range(iters):
         d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         a = d.argmin(axis=1)
@@ -618,14 +525,7 @@ def train_opq_rotation(
     (:func:`rotate` gemm pass → :func:`encode`); no unbounded driver
     state. Returns (R, model, errs).
     """
-    src = points.select(as_double_array(vec_col).alias("_v"))
-    n = src.count()
-    sample = src
-    if n > sample_size:
-        sample = src.sample(
-            fraction=min(1.0, sample_size / n * 1.1), seed=seed
-        ).limit(sample_size)
-    X = np.vstack(sample.toPandas()["_v"].to_numpy()).astype(np.float64)
+    X = _kmeans._training_sample(points, vec_col, sample_size, seed)
     if len(X) < k:
         raise ValueError(f"need >= {k} training points, got {len(X)}")
     dim = X.shape[1]
@@ -641,7 +541,7 @@ def train_opq_rotation(
         if C is None:
             C = np.empty((m, k, dsub))
             for mi in range(m):
-                C[mi] = _kmeanspp_numpy(Xs[:, mi, :], k, rng)
+                C[mi] = _kmeans._kmeanspp(Xs[:, mi, :], k, rng)
         for mi in range(m):
             C[mi] = _lloyd_numpy(Xs[:, mi, :], C[mi], lloyd_iters)
         # reconstruct in rotated space

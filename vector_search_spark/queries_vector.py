@@ -459,17 +459,11 @@ QUALIFY "rank" <= 10
 """
 
 
-@register("ivf_adc_knn", _IVFADC_SQL, "vector", "ivf", "pq")
-def q_ivf_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC, paper-faithful residual form (Jégou et al. 2011 §III):
-    coarse routing, PQ codes over RESIDUALS (x - centroid[cell]),
-    asymmetric-distance scoring with a per-(query, cell) LUT inside the
-    probed cells — the classic billion-scale layout. Models here are
-    data-derived (first-NC coarse cells, residual codebooks from rows
-    NC..NC+K) so DuckDB replays the ENTIRE pipeline — assignment,
-    residuals, encode, routing, per-cell LUTs, ADC ranking — value-
-    exact. The RNG-trained variant (train_coarse + train_pq) is
-    recall-gated in tests/test_ivf.py."""
+def _ivfadc_setup(spark: SparkSession, sf_dir: str):
+    """The data-derived IVFADC pipeline the ``_IVFADC_CTES`` oracle
+    replays: first-NC coarse cells, residuals, residual codebooks from
+    rows NC..NC+K, residual codes joined to their cells, and the query
+    rows. Returns ``(emb, C, model, codes, queries)``."""
     emb = tables.load(spark, sf_dir, "embeddings")
     C = kmeans.init_first_k(emb, IVF_NC)
     assigned = ivf.assign_clusters(emb, C)
@@ -485,6 +479,21 @@ def q_ivf_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         res.select("vec_id", "cluster_id"), "vec_id"
     )
     queries = emb.filter(F.col("vec_id") < IVF_QUERIES)
+    return emb, C, model, codes, queries
+
+
+@register("ivf_adc_knn", _IVFADC_SQL, "vector", "ivf", "pq")
+def q_ivf_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVFADC, paper-faithful residual form (Jégou et al. 2011 §III):
+    coarse routing, PQ codes over RESIDUALS (x - centroid[cell]),
+    asymmetric-distance scoring with a per-(query, cell) LUT inside the
+    probed cells — the classic billion-scale layout. Models here are
+    data-derived (first-NC coarse cells, residual codebooks from rows
+    NC..NC+K) so DuckDB replays the ENTIRE pipeline — assignment,
+    residuals, encode, routing, per-cell LUTs, ADC ranking — value-
+    exact. The RNG-trained variant (train_coarse + train_pq) is
+    recall-gated in tests/test_ivf.py."""
+    emb, C, model, codes, queries = _ivfadc_setup(spark, sf_dir)
     out = ivf.ivf_adc_topk(
         queries, codes, C, model, k=10, nprobe=IVF_NPROBE, residual=True
     )
@@ -517,19 +526,7 @@ def q_ivf_adc_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise, so the set is stable. Together with knn_range (exact) and
     ivf_range (routed raw vectors) every radius path is
     value-adjudicated."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-    C = kmeans.init_first_k(emb, IVF_NC)
-    assigned = ivf.assign_clusters(emb, C)
-    res = ivf.residuals(assigned, C).localCheckpoint()
-    sel = res.filter(
-        (F.col("vec_id") >= IVF_NC) & (F.col("vec_id") < IVF_NC + PQ_K)
-    )  # ordered DRIVER-side inside the collect (r17: no range-sort stage)
-    _, mat = kmeans._collect_matrix(sel, "vec_id", "residual", sort_by_id=True)
-    model = pq.model_from_vectors(mat, PQ_M, PQ_K)
-    codes = pq.encode(res, model, vec_col="residual").join(
-        res.select("vec_id", "cluster_id"), "vec_id"
-    )
-    queries = emb.filter(F.col("vec_id") < IVF_QUERIES)
+    emb, C, model, codes, queries = _ivfadc_setup(spark, sf_dir)
     out = ivf.ivf_adc_range(
         queries, codes, C, model, radius=ADC_RADIUS, nprobe=IVF_NPROBE,
         residual=True,
@@ -573,19 +570,7 @@ def q_ivf_adc_range_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute + `<= 1.35` tail. Boundary gaps measured at every SF
     (see REFINED_* constants). Together with pq_refine_knn this
     value-adjudicates both exact-refine repairs (top-k and radius)."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-    C = kmeans.init_first_k(emb, IVF_NC)
-    assigned = ivf.assign_clusters(emb, C)
-    res = ivf.residuals(assigned, C).localCheckpoint()
-    sel = res.filter(
-        (F.col("vec_id") >= IVF_NC) & (F.col("vec_id") < IVF_NC + PQ_K)
-    )  # ordered DRIVER-side inside the collect (r17: no range-sort stage)
-    _, mat = kmeans._collect_matrix(sel, "vec_id", "residual", sort_by_id=True)
-    model = pq.model_from_vectors(mat, PQ_M, PQ_K)
-    codes = pq.encode(res, model, vec_col="residual").join(
-        res.select("vec_id", "cluster_id"), "vec_id"
-    )
-    queries = emb.filter(F.col("vec_id") < IVF_QUERIES)
+    emb, C, model, codes, queries = _ivfadc_setup(spark, sf_dir)
     out = ivf.ivf_adc_range_refined(
         queries, codes, C, model, radius=REFINED_TRUE_RADIUS, points=emb,
         nprobe=IVF_NPROBE, margin=REFINED_MARGIN, residual=True,
@@ -635,19 +620,7 @@ def q_ivf_adc_knn_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     both boundaries' gaps measured at every SF (see REFINE_SHORTLIST).
     Together with ivf_adc_range_refined this value-adjudicates the
     refined half of the whole serving matrix."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-    C = kmeans.init_first_k(emb, IVF_NC)
-    assigned = ivf.assign_clusters(emb, C)
-    res = ivf.residuals(assigned, C).localCheckpoint()
-    sel = res.filter(
-        (F.col("vec_id") >= IVF_NC) & (F.col("vec_id") < IVF_NC + PQ_K)
-    )  # ordered DRIVER-side inside the collect (r17: no range-sort stage)
-    _, mat = kmeans._collect_matrix(sel, "vec_id", "residual", sort_by_id=True)
-    model = pq.model_from_vectors(mat, PQ_M, PQ_K)
-    codes = pq.encode(res, model, vec_col="residual").join(
-        res.select("vec_id", "cluster_id"), "vec_id"
-    )
-    queries = emb.filter(F.col("vec_id") < IVF_QUERIES)
+    emb, C, model, codes, queries = _ivfadc_setup(spark, sf_dir)
     out = ivf.ivf_adc_topk_refined(
         queries, codes, C, model, points=emb, k=10,
         shortlist=REFINE_SHORTLIST, nprobe=IVF_NPROBE, residual=True,
@@ -703,19 +676,7 @@ def q_ivf_adc_margin_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantees for any radius. Calibration and serving share
     nprobe=IVF_NPROBE per the routing contract. Boundary gaps: see
     MC_RADIUS."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-    C = kmeans.init_first_k(emb, IVF_NC)
-    assigned = ivf.assign_clusters(emb, C)
-    res = ivf.residuals(assigned, C).localCheckpoint()
-    sel = res.filter(
-        (F.col("vec_id") >= IVF_NC) & (F.col("vec_id") < IVF_NC + PQ_K)
-    )  # ordered DRIVER-side inside the collect (r17: no range-sort stage)
-    _, mat = kmeans._collect_matrix(sel, "vec_id", "residual", sort_by_id=True)
-    model = pq.model_from_vectors(mat, PQ_M, PQ_K)
-    codes = pq.encode(res, model, vec_col="residual").join(
-        res.select("vec_id", "cluster_id"), "vec_id"
-    )
-    queries = emb.filter(F.col("vec_id") < IVF_QUERIES)
+    emb, C, model, codes, queries = _ivfadc_setup(spark, sf_dir)
     margin = ivf.calibrate_adc_margin(
         queries, codes, C, model, points=emb, nprobe=IVF_NPROBE,
         quantile=1.0, residual=True,
@@ -814,19 +775,7 @@ def q_adc_refine_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-level exact re-rank, the brute-force truth join, and both
     counts; output is exact integers + a division. Rank-cut gaps
     measured at every SF (see RC_SHORTLISTS)."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-    C = kmeans.init_first_k(emb, IVF_NC)
-    assigned = ivf.assign_clusters(emb, C)
-    res = ivf.residuals(assigned, C).localCheckpoint()
-    sel = res.filter(
-        (F.col("vec_id") >= IVF_NC) & (F.col("vec_id") < IVF_NC + PQ_K)
-    )  # ordered DRIVER-side inside the collect (r17: no range-sort stage)
-    _, mat = kmeans._collect_matrix(sel, "vec_id", "residual", sort_by_id=True)
-    model = pq.model_from_vectors(mat, PQ_M, PQ_K)
-    codes = pq.encode(res, model, vec_col="residual").join(
-        res.select("vec_id", "cluster_id"), "vec_id"
-    )
-    queries = emb.filter(F.col("vec_id") < IVF_QUERIES)
+    emb, C, model, codes, queries = _ivfadc_setup(spark, sf_dir)
     return ivf.adc_refine_curve(
         queries, codes, C, model, points=emb, k=10,
         shortlists=RC_SHORTLISTS, nprobe=IVF_NPROBE, residual=True,
