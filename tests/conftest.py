@@ -26,6 +26,16 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def catalog_plans(spark):
+    """Every catalog entry built ONCE per session, cache cleared first:
+    ``{name: initial physical plan text}`` for the digest gate and the
+    plan sweeps (each full catalog build costs over a minute)."""
+    from vector_search_spark.plans import digests
+
+    return digests.catalog_plans(spark, SF_ORACLE)
+
+
+@pytest.fixture(scope="session")
 def duck():
     """DuckDB connection with the oracle views registered (mirrors driver)."""
     import duckdb

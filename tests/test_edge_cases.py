@@ -466,3 +466,46 @@ def test_persisted_search_empty_batch_returns_empty_frame(spark, tiny_index):
         ),
     ):
         assert got.schema == want.schema and got.count() == 0
+
+
+@pytest.mark.parametrize(
+    "rows, match",
+    [
+        ([(1, [1.0, 0.0]), (None, [2.0, 0.0])], "a NULL id"),
+        ([(20, [1.0, 0.0]), (20, [9.0, 0.0])], "upsert row 20: a duplicate id"),
+        ([(1, [1.0, 0.0]), (7, None)], "upsert row 7: a NULL vector"),
+        ([(7, [float("nan"), 0.0])], "upsert row 7: a NaN or infinite"),
+        (
+            [(1, [1.0, 0.0]), (7, [1.0, 0.0, 2.0])],
+            "upsert row 7: dimension 3, not the centroids' 2",
+        ),
+    ],
+    ids=["null_id", "duplicate_id", "null_vector", "nan", "dimension"],
+)
+def test_upsert_rejects_bad_batches_before_writing(spark, tiny_index, rows, match):
+    """upsert_index checks its batch like every caller-bounded batch and
+    raises before anything is written: unchecked, a NULL id was stored
+    as -2^63, a duplicate id landed twice in two cells, a NaN vector
+    routed silently to cell 0 and a wrong dimension failed as a raw
+    PythonException. The index files stay byte-identical."""
+    import hashlib
+    import os
+
+    from vector_search_spark.operators import ivf
+
+    path, _, C = tiny_index
+
+    def snapshot():
+        return {
+            os.path.relpath(os.path.join(d, f), path): hashlib.sha256(
+                open(os.path.join(d, f), "rb").read()
+            ).hexdigest()
+            for d, _, fs in os.walk(path)
+            for f in fs
+        }
+
+    before = snapshot()
+    batch = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match=match):
+        ivf.upsert_index(spark, path, batch, C)
+    assert snapshot() == before

@@ -19,7 +19,11 @@ NC, NPROBE, NQ, K = 16, 4, 20, 10
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return tables.load(spark, SF_ORACLE, "embeddings").cache()
+    df = tables.load(spark, SF_ORACLE, "embeddings").cache()
+    yield df
+    # a cached scan of the shared parquet would hide later modules'
+    # PushedFilters behind an InMemoryRelation
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -30,7 +34,9 @@ def centroids(spark, emb):
 
 @pytest.fixture(scope="module")
 def assigned(spark, emb, centroids):
-    return ivf.assign_clusters(emb, centroids).cache()
+    df = ivf.assign_clusters(emb, centroids).cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -40,7 +46,9 @@ def queries(spark, emb):
 
 @pytest.fixture(scope="module")
 def exact(spark, queries, emb):
-    return knn.brute_force_knn(queries, emb, k=K).cache()
+    df = knn.brute_force_knn(queries, emb, k=K).cache()
+    yield df
+    df.unpersist()
 
 
 def test_recall_improves_with_nprobe(spark, queries, assigned, centroids, exact):
@@ -1044,6 +1052,117 @@ def test_delete_ids_empty_list_and_dataframe_input(spark, tmp_path):
     assert acct2["n_requested"] == 2
     assert acct2["n_deleted"] == 1 and acct2["n_missing"] == 1
     assert spark.read.parquet(path).count() == 1
+
+
+def test_delete_ids_dataframe_null_id_deletes_nothing_else(spark, tmp_path):
+    """A NULL id in a deletion DataFrame is one requested, missing id:
+    it counts in n_requested and n_missing and deletes no row (a NULL
+    in the NOT IN list would drop every survivor of the touched
+    cells). A NULL id already in the index is never a hit either, so
+    it survives the rewrite of its cell."""
+    path = str(tmp_path / "del_null_index")
+    spark.createDataFrame(
+        [(1, 0, [0.1, 0.1]), (2, 0, [0.2, 0.2]), (None, 0, [0.3, 0.3]),
+         (3, 1, [10.1, 10.1])],
+        "vec_id long, cluster_id int, embedding array<double>",
+    ).write.partitionBy("cluster_id").parquet(path)
+    dels = spark.createDataFrame([(1,), (None,), (None,), (9,)], "vec_id long")
+    acct = ivf.delete_ids(spark, path, dels)
+    assert acct == {
+        "n_requested": 3,
+        "n_deleted": 1,
+        "n_missing": 2,
+        "touched_cells": [0],
+        "drained_cells": [],
+    }
+    assert sorted(
+        (r.vec_id or -1, r.cluster_id)
+        for r in spark.read.parquet(path).collect()
+    ) == [(-1, 0), (2, 0), (3, 1)]
+
+
+def _maintained_index(spark, emb, centroids, path):
+    """A persisted IVF index over ``emb`` and an 8-row upsert batch in
+    8 partitions: 4 live ids with vec_id 40..43's vectors (they may
+    change cell) and 4 new ids."""
+    ivf.write_index(ivf.assign_clusters(emb, centroids), path)
+    vecs = [
+        list(r.embedding)
+        for r in emb.filter(F.col("vec_id").between(40, 43))
+        .orderBy("vec_id").collect()
+    ]
+    rows = zip([0, 1, 2, 3, 10_000, 10_001, 10_002, 10_003], vecs * 2)
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(list(rows), 8),
+        "vec_id long, embedding array<float>",
+    )
+
+
+def test_upsert_and_delete_run_at_most_six_jobs(
+    spark, emb, centroids, tmp_path, monkeypatch
+):
+    """upsert_index: the batch is collected and checked, assigned once
+    and collected, the index counted per cell once, then one write; a
+    per-row accumulator on the caller's batch counts two runs of its
+    plan and one on kmeans.assign's output counts one assignment scan
+    (the previous form ran them 6 and 3 times in 13 jobs).
+    delete_ids: one per-cell count, the pinned survivors, one write."""
+    path = str(tmp_path / "jobs_index")
+    batch = _maintained_index(spark, emb, centroids, path)
+    seen_batch = spark.sparkContext.accumulator(0)
+    seen_assign = spark.sparkContext.accumulator(0)
+
+    def tagger(acc):
+        def tag(v):
+            acc.add(1)
+            return v
+        return tag
+
+    tagged = batch.withColumn(
+        "embedding",
+        F.udf(tagger(seen_batch), batch.schema["embedding"].dataType)(
+            "embedding"
+        ),
+    )
+    assign = kmeans.assign
+    monkeypatch.setattr(
+        kmeans, "assign", lambda *a, **kw: assign(*a, **kw).withColumn(
+            "cluster_id", F.udf(tagger(seen_assign), "int")("cluster_id")
+        ),
+    )
+    touched, jobs = _job_count(
+        spark, lambda: ivf.upsert_index(spark, path, tagged, centroids)
+    )
+    assert touched and jobs <= 6, jobs
+    assert (seen_batch.value, seen_assign.value) == (16, 8)
+    acct, jobs = _job_count(
+        spark, lambda: ivf.delete_ids(spark, path, [4, 5, 6, 10_000, 99_999])
+    )
+    assert acct["n_deleted"] == 4 and jobs <= 6, jobs
+
+
+def test_rewritten_cells_hold_one_part_file(spark, emb, centroids, tmp_path):
+    """Every cell an upsert or a delete rewrites ends as one part-file
+    (the batch arrives in 8 partitions; the survivors in one per file),
+    so maintenance leaves compact_index nothing to merge there."""
+    import glob
+    import os
+
+    path = str(tmp_path / "files_index")
+    batch = _maintained_index(spark, emb, centroids, path)
+
+    def files(cells):
+        return {
+            c: len(glob.glob(os.path.join(path, f"cluster_id={c}", "part-*")))
+            for c in cells
+        }
+
+    touched = ivf.upsert_index(spark, path, batch, centroids)
+    assert len(touched) > 1 and set(files(touched).values()) == {1}
+    acct = ivf.delete_ids(spark, path, list(range(4, 40)))
+    assert len(acct["touched_cells"]) > 1
+    assert set(files(acct["touched_cells"]).values()) == {1}
+    assert spark.read.parquet(path).count() == emb.count() + 4 - 36
 
 
 # --- radius search (knn.range_search / ivf.ivf_range) ---------------------

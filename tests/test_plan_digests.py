@@ -19,10 +19,9 @@ import pytest
 
 from tests.conftest import SF_ORACLE
 from vector_search_spark.plans import digests
-from vector_search_spark.queries import get_catalog
 
 
-def test_catalog_plan_shapes_match_committed_artifact(spark):
+def test_catalog_plan_shapes_match_committed_artifact(spark, catalog_plans):
     if not os.path.exists(digests.ARTIFACT):
         pytest.fail(
             "PLAN_DIGESTS.json missing — generate it: "
@@ -58,17 +57,16 @@ def test_catalog_plan_shapes_match_committed_artifact(spark):
     # embeddings fixture); Spark's cache manager then substitutes
     # InMemoryTableScan into ANY later plan over the same parquet,
     # which is cache-state noise, not catalog plan shape. The artifact
-    # is generated in a fresh cache-free process — align conditions.
-    spark.catalog.clearCache()
-    catalog = get_catalog()
-    assert set(committed) == set(catalog), (
+    # is generated in a fresh cache-free process, and so are the
+    # session's catalog_plans (digests.catalog_plans clears the cache).
+    assert set(committed) == set(catalog_plans), (
         "catalog/artifact entry sets differ — regenerate the artifact: "
-        f"only-artifact={sorted(set(committed) - set(catalog))} "
-        f"only-catalog={sorted(set(catalog) - set(committed))}"
+        f"only-artifact={sorted(set(committed) - set(catalog_plans))} "
+        f"only-catalog={sorted(set(catalog_plans) - set(committed))}"
     )
     drifted: dict[str, dict] = {}
-    for name, spec in catalog.items():
-        ops = digests.plan_signature(spec.fn(spark, SF_ORACLE))
+    for name, plan in catalog_plans.items():
+        ops = digests.plan_signature(plan)
         got = digests.signature_digest(ops)
         want = committed[name]["digest"]
         if got != want:

@@ -118,19 +118,16 @@ def test_sql_surface_equals_dataframe_surface(spark):
     ]
 
 
-def test_no_row_at_a_time_python_udf_anywhere(spark):
+def test_no_row_at_a_time_python_udf_anywhere(catalog_plans):
     """Repo-wide invariant: no catalog query's physical plan contains
     BatchEvalPython (row-at-a-time Python UDF). Python only ever enters
     through Arrow-batched exchanges (ArrowEvalPython / MapInPandas /
-    FlatMapGroupsInPandas)."""
-    from vector_search_spark.queries import get_catalog
-
-    offenders = []
-    for name, spec in get_catalog().items():
-        df = spec.fn(spark, SF_ORACLE)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        if "BatchEvalPython" in plan:
-            offenders.append(name)
+    FlatMapGroupsInPandas). Reads the session's one catalog build,
+    which the digest gate shares."""
+    offenders = [
+        name for name, plan in catalog_plans.items()
+        if "BatchEvalPython" in plan
+    ]
     assert not offenders, offenders
 
 

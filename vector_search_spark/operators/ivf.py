@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_search_spark.functions.distance import as_double_array, distance
+from vector_search_spark.functions.fanout import coalesce_small
 from vector_search_spark.operators import kmeans
 from vector_search_spark.operators import pq as _pq
 from vector_search_spark.operators.knn import (
@@ -1299,57 +1300,58 @@ def upsert_index(
 
     Semantics: upsert by ``id_col`` — a vector already present (in a
     touched OR untouched cell) is replaced by its new row; new ids are
-    appended. Cells the batch doesn't route to are untouched on disk
-    (no read, no rewrite), so the write cost scales with the batch's
-    cell footprint, not the index size. An id MOVING between cells is
-    handled by rewriting its old cell too (membership probe below).
+    appended. Cells the batch doesn't route to and that hold none of
+    its ids are not rewritten, so the write cost scales with the
+    batch's cell footprint, not the index size. An id MOVING between
+    cells rewrites its old cell too; a touched cell whose rows all move
+    out and that receives none is DRAINED — its directory is removed
+    (:func:`_rewrite_cells`), or its stale copies of the moved ids
+    would survive.
 
-    DRAINED cells: dynamic partition overwrite only replaces partitions
-    PRESENT in the written DataFrame, so a touched cell whose rows all
-    move elsewhere (and receives no new rows) would never be rewritten —
-    its stale copies of the moved ids would survive, duplicating ids
-    across cells and breaking upsert idempotence. Those cells are
-    explicitly deleted after the write (touched − cells present in the
-    merged output; directory removal below, the storage twin of
-    compact_index's listing).
+    A bad batch raises a ValueError naming the row before anything is
+    written: a NULL or duplicate id, a NULL vector, a NaN or infinite
+    component, a dimension other than the centroids'
+    (``knn._collect_batch``'s checks).
+
+    Job shape, whatever the batch and index size: the batch is
+    collected and checked (one run of the caller's plan), assigned
+    once by ``kmeans.assign`` over the caller's frame and collected
+    (the second and last run), the index is counted per cell once
+    (:func:`_cell_hits`, one row per cell), then one write. The
+    batch's ids and vectors are held on the driver like any
+    caller-bounded batch; a bulk reload belongs in :func:`write_index`.
 
     Returns the sorted list of rewritten-or-drained cluster_ids.
     """
+    dim = np.shape(centroids)[1]
+    qids, _ = _collect_batch(
+        new_vectors, id_col, vec_col, dim=dim, dim_of="the centroids'",
+        empty_ok=True, what="upsert row",
+    )
+    if not len(qids):
+        return []
     assigned = assign_clusters(
         new_vectors, centroids, id_col=id_col, vec_col=vec_col
     )
+    rows = assigned.collect()
     existing = spark.read.parquet(path)
-    # cells to rewrite = cells the new rows land in + cells currently
-    # holding an id that is being upserted (it may be moving out)
-    landing = assigned.select("cluster_id")
-    holding = existing.join(
-        assigned.select(id_col), id_col
-    ).select("cluster_id")
-    touched = [
-        int(r.cluster_id)
-        for r in landing.union(holding).distinct().collect()
-    ]
-    if not touched:
-        return []
-    survivors = (
-        existing.filter(F.col("cluster_id").isin(touched))
-        .join(assigned.select(id_col), id_col, "left_anti")
+    hit, counts = _cell_hits(existing, id_col, [r[0] for r in rows])
+    # cells to rewrite = cells the new rows land in + cells holding an
+    # id being upserted (it may be moving out); kept = cells with rows
+    landing = {r.cluster_id for r in rows}
+    touched = landing | {c for c, (_, h) in counts.items() if h}
+    kept = landing | {c for c, (n, h) in counts.items() if n > h}
+    merged = (
+        existing.filter(F.col("cluster_id").isin(sorted(touched)) & ~hit)
         .select(id_col, "cluster_id", vec_col)
+        .unionByName(spark.createDataFrame(rows, assigned.schema))
     )
-    merged = survivors.unionByName(
-        assigned.select(id_col, "cluster_id", vec_col)
-    )
-    # cell footprint of the output — computed BEFORE the write (merged's
-    # lineage reads `path`); batch-cell-count sized, never row-sized
-    merged_cells = {
-        int(r.cluster_id)
-        for r in merged.select("cluster_id").distinct().collect()
-    }
-    with _dynamic_overwrite(spark):
-        merged.write.mode("overwrite").partitionBy("cluster_id").parquet(
-            path
-        )
-    _remove_drained_cells(spark, path, sorted(set(touched) - merged_cells))
+    # size of the rewrite from the counts (the driver-built batch side
+    # has no optimizer estimate): survivors + batch rows x row bytes
+    n_out = len(rows) + sum(counts[c][0] - counts[c][1] for c in touched
+                            if c in counts)
+    est = n_out * 8 * (dim + 2)
+    _rewrite_cells(spark, path, merged, touched, kept, est=est)
     return sorted(touched)
 
 
@@ -1376,54 +1378,45 @@ def delete_ids(
     ints; it is de-duplicated either way. Ids absent from the index
     (already purged by an earlier batch, stale) are counted, not
     errors — deletion lists are append-only logs replayed against a
-    moving index (same contract as ``dedup.purge_missing``).
+    moving index (same contract as ``dedup.purge_missing``). A NULL id
+    in a DataFrame list is one requested, missing id; it deletes
+    nothing.
 
     Returns conservation accounting the caller can attest:
     ``{"n_requested", "n_deleted", "n_missing", "touched_cells",
     "drained_cells"}`` with ``n_requested == n_deleted + n_missing``
     (ids are unique in the index — ``upsert_index`` maintains that
-    invariant — so deleted ROWS == deleted IDS). Driver state is
-    deletion-list- and cell-count-sized only: per-cell hit counts via
-    one model-sized collect, never vector rows.
+    invariant — so deleted ROWS == deleted IDS).
+
+    Job shape: a DataFrame list is collected distinct (an iterable
+    needs no job), the index is counted per cell once
+    (:func:`_cell_hits`: touched, deleted and drained cells from one
+    collect of one row per cell), the touched cells' survivors are
+    pinned, then one write. Driver state is the deletion list plus
+    one row per cell, never vector rows.
     """
     if isinstance(ids, DataFrame):
-        dels = ids.select(F.col(id_col)).distinct()
+        dels = [r[0] for r in ids.select(id_col).distinct().collect()]
     else:
-        uniq = sorted({int(i) for i in ids})
-        dels = spark.createDataFrame(
-            [(i,) for i in uniq], f"{id_col} long"
-        )
-    n_requested = dels.count()
-    if n_requested == 0:
-        return {
-            "n_requested": 0,
-            "n_deleted": 0,
-            "n_missing": 0,
-            "touched_cells": [],
-            "drained_cells": [],
-        }
+        dels = sorted({int(i) for i in ids})
+    acct = {
+        "n_requested": len(dels),
+        "n_deleted": 0,
+        "n_missing": len(dels),
+        "touched_cells": [],
+        "drained_cells": [],
+    }
+    if not dels:
+        return acct
     existing = spark.read.parquet(path)
-    # one cell-count-sized collect: which cells hold a deleted id, and
-    # how many rows each loses (sum = n_deleted)
-    per_cell = (
-        existing.join(dels, id_col)
-        .groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
+    hit, counts = _cell_hits(
+        existing, id_col, [i for i in dels if i is not None]
     )
-    touched = sorted(int(r.cluster_id) for r in per_cell)
-    n_deleted = int(sum(r._n for r in per_cell))
+    touched = sorted(c for c, (_, h) in counts.items() if h)
     if not touched:
-        return {
-            "n_requested": int(n_requested),
-            "n_deleted": 0,
-            "n_missing": int(n_requested),
-            "touched_cells": [],
-            "drained_cells": [],
-        }
+        return acct
     survivors = (
-        existing.filter(F.col("cluster_id").isin(touched))
-        .join(dels, id_col, "left_anti")
+        existing.filter(F.col("cluster_id").isin(touched) & ~hit)
         # sever lineage from the files being replaced — the
         # compact_index/rebalance_index discipline. Without it the
         # overwrite's tasks re-read `path` mid-write, safe only
@@ -1434,32 +1427,54 @@ def delete_ids(
         # deletion list's cell spread, never the index.
         .localCheckpoint()
     )
-    # cells still present after the purge — computed BEFORE the write
-    # (belt over the checkpoint's braces, and keeps the accounting
-    # collect off the write's critical path)
-    merged_cells = {
-        int(r.cluster_id)
-        for r in survivors.select("cluster_id").distinct().collect()
-    }
-    with _dynamic_overwrite(spark):
-        survivors.write.mode("overwrite").partitionBy(
-            "cluster_id"
-        ).parquet(path)
-    drained = sorted(set(touched) - merged_cells)
-    _remove_drained_cells(spark, path, drained)
-    return {
-        "n_requested": int(n_requested),
+    kept = [c for c in touched if counts[c][0] > counts[c][1]]
+    drained = _rewrite_cells(spark, path, survivors, touched, kept)
+    n_deleted = sum(h for _, h in counts.values())
+    return acct | {
         "n_deleted": n_deleted,
-        "n_missing": int(n_requested) - n_deleted,
+        "n_missing": len(dels) - n_deleted,
         "touched_cells": touched,
         "drained_cells": drained,
     }
 
 
+def _cell_hits(existing: DataFrame, id_col: str, ids: list) -> tuple:
+    """The one per-cell count the maintenance writes plan from:
+    ``(hit, counts)``, ``hit`` the row predicate "id in ``ids``" (a
+    NULL id in the index is never a hit, so it survives as under the
+    anti join it replaces) and ``counts`` {cell: (rows, hit rows)} —
+    one aggregate, one collected row per cell."""
+    hit = F.coalesce(F.col(id_col).isin(ids), F.lit(False))
+    agg = existing.groupBy("cluster_id").agg(
+        F.count(F.lit(1)), F.sum(hit.cast("long"))
+    )
+    return hit, {int(c): (int(n), int(h)) for c, n, h in agg.collect()}
+
+
+def _rewrite_cells(
+    spark, path: str, rows: DataFrame, touched, kept, est=None
+) -> list[int]:
+    """Replace the ``touched`` cells of the index at ``path`` by
+    ``rows`` and return the drained ones: one dynamic partition
+    overwrite replaces the cells present in ``rows`` (the ``kept``
+    ones), then the touched cells not kept lose their directories
+    (:func:`_remove_drained_cells`). :func:`coalesce_small` (size
+    estimate ``est``, default the plan's) writes one part-file per cell
+    while the rows fit one partition."""
+    with _dynamic_overwrite(spark):
+        coalesce_small(rows, est=est).write.mode("overwrite").partitionBy(
+            "cluster_id"
+        ).parquet(path)
+    drained = sorted(set(touched) - set(kept))
+    _remove_drained_cells(spark, path, drained)
+    return drained
+
+
 def _remove_drained_cells(spark, path: str, drained: list[int]) -> None:
     """Delete cell partition directories that dynamic overwrite never
-    saw (touched cells whose rows all moved elsewhere) so the moved
-    ids don't survive in their old cells. Hadoop FileSystem API
+    saw (touched cells left without rows) so their stale rows don't
+    survive beside the rewritten ones — duplicated ids after a move, a
+    purged vector after a delete. Hadoop FileSystem API
     (sources/fsutil.py), so the same call works on file:/hdfs:/s3a: —
     one metadata RPC per drained cell, batch-footprint-sized."""
     from vector_search_spark.sources import fsutil
@@ -1526,10 +1541,7 @@ def compact_index(
         .repartition("cluster_id")
         .localCheckpoint()  # sever lineage from the files being replaced
     )
-    with _dynamic_overwrite(spark):
-        rows.write.mode("overwrite").partitionBy("cluster_id").parquet(
-            path
-        )
+    _rewrite_cells(spark, path, rows, fragged, fragged)
     return sorted(fragged)
 
 
@@ -1684,9 +1696,5 @@ def rebalance_index(
         int(r.cluster_id)
         for r in moved.select("cluster_id").distinct().collect()
     }
-    with _dynamic_overwrite(spark):
-        moved.write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-    _remove_drained_cells(
-        spark, path, sorted(set(int(c) for c in fat) - moved_cells)
-    )
+    _rewrite_cells(spark, path, moved, fat, moved_cells)
     return C, fat

@@ -146,6 +146,7 @@ def _collect_batch(
     dim: int | None = None,
     dim_of: str = "the first row's",
     empty_ok: bool = False,
+    what: str = "query",
 ):
     """THE driver collect of a caller-bounded ``(query id, vector)``
     batch — ivf routing, pq ADC tables, the graph walk and the gemm
@@ -176,7 +177,7 @@ def _collect_batch(
             if not np.isfinite(v).all() else None
         )
         if bad:
-            raise ValueError(f"query {qid}: {bad}")
+            raise ValueError(f"{what} {qid}: {bad}")
     Q = np.asarray(list(vecs), dtype=np.float64).reshape(-1, dim)
     return qpdf["query_id"].to_numpy(), Q
 

@@ -5,7 +5,7 @@ judge diffed 148 queries' job counts to catch one fused stage. This
 module makes the physical-plan SHAPE of every catalog entry a committed,
 diffable artifact:
 
-- :func:`plan_signature` normalizes a DataFrame's initial physical plan
+- :func:`plan_signature` normalizes an entry's initial physical plan
   to its operator-tree token sequence — scans/joins/exchanges/windows/
   aggregates in tree order, with expression ids, literals, paths,
   codegen-stage numbers, and plan ids stripped. What survives is
@@ -33,7 +33,6 @@ import json
 import os
 import re
 
-from pyspark.sql import DataFrame
 
 ARTIFACT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -46,13 +45,13 @@ ARTIFACT = os.path.join(
 _OP_RE = re.compile(r"^[\s:+\-]*(?:\*\(\d+\)\s*)?([A-Za-z][A-Za-z0-9_]*)")
 
 
-def plan_signature(df: DataFrame) -> list[str]:
-    """Normalized operator-token sequence of the INITIAL physical plan
-    (pre-execution, pre-AQE-finalization — the deterministic
-    compile-time shape). Scan nodes keep their source kind ("FileScan
-    parquet" vs "Scan ExistingRDD") because swapping one for the other
-    IS a shape change (e.g. a lost localCheckpoint)."""
-    txt = df._jdf.queryExecution().executedPlan().toString()
+def plan_signature(txt: str) -> list[str]:
+    """Normalized operator-token sequence of an INITIAL physical plan's
+    text (pre-execution, pre-AQE-finalization — the deterministic
+    compile-time shape, as :func:`catalog_plans` takes it). Scan nodes
+    keep their source kind ("FileScan parquet" vs "Scan ExistingRDD")
+    because swapping one for the other IS a shape change (e.g. a lost
+    localCheckpoint)."""
     ops: list[str] = []
     for line in txt.splitlines():
         m = _OP_RE.match(line)
@@ -74,22 +73,33 @@ def signature_digest(ops: list[str]) -> str:
     return hashlib.sha256("\n".join(ops).encode()).hexdigest()[:12]
 
 
-def compute_catalog_digests(spark, sf_dir: str) -> dict[str, dict]:
-    """Build every catalog entry's DataFrame (no collect beyond the
-    entries' own eager checkpoint artifacts) and fingerprint its plan.
+def catalog_plans(spark, sf_dir: str) -> dict[str, str]:
+    """Build every catalog entry's DataFrame once (no collect beyond
+    the entries' own eager checkpoint artifacts) and return the text
+    of its initial physical plan by entry name — what the digest gate
+    and the suite's plan sweeps read.
 
     Clears the Spark cache first: a warm session's cached tables swap
     InMemoryTableScan into later plans over the same parquet (the
     failure the suite hit once) — cache state is not catalog plan
     shape, and digests must match the fresh-process artifact whether
-    computed from the CLI, the suite, or a REPL."""
+    computed from the CLI, the suite, or a REPL. Each plan is taken
+    right after its entry is built, before the next entry runs."""
     from vector_search_spark.queries import get_catalog
 
     spark.catalog.clearCache()
+    return {
+        name: spec.fn(spark, sf_dir)._jdf.queryExecution()
+        .executedPlan().toString()
+        for name, spec in get_catalog().items()
+    }
+
+
+def compute_catalog_digests(spark, sf_dir: str) -> dict[str, dict]:
+    """Fingerprint every catalog entry's plan (:func:`catalog_plans`)."""
     out: dict[str, dict] = {}
-    for name, spec in get_catalog().items():
-        df = spec.fn(spark, sf_dir)
-        ops = plan_signature(df)
+    for name, txt in catalog_plans(spark, sf_dir).items():
+        ops = plan_signature(txt)
         out[name] = {"digest": signature_digest(ops), "ops": ops}
     return out
 

@@ -128,6 +128,15 @@ def streaming_upsert(
     rewrites whole cells, so micro-batch cadence — not per-row — is
     what makes it affordable; exactly-once comes from the checkpoint
     plus the idempotence of upserting the same batch again.
+
+    Each micro-batch runs upsert_index's fixed job shape (batch check,
+    one assignment scan, one per-cell count of the index, one write)
+    and is held on the driver, ids and vectors, like any
+    caller-bounded batch: size micro-batches accordingly
+    (``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger``); a bulk
+    reload belongs in ``ivf.write_index``. A bad row (NULL or
+    duplicate id, NULL/NaN vector, wrong dimension) fails the batch
+    with a ValueError before the index is touched.
     """
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
