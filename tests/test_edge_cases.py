@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vector_search_spark.operators import knn
+from vector_search_spark.operators import ivf, knn
 
 
 def test_empty_query_set_raises(spark):
@@ -421,7 +421,7 @@ def test_ivf_serving_rejects_bad_query_batches(spark, tiny_index, rows, match):
     batch's first row when there is none."""
     import numpy as np
 
-    from vector_search_spark.operators import graph, ivf, pq
+    from vector_search_spark.operators import graph, pq
 
     path, cpath, C = tiny_index
     qs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
@@ -437,6 +437,10 @@ def test_ivf_serving_rejects_bad_query_batches(spark, tiny_index, rows, match):
         ("the centroids'", lambda: ivf.ivf_adc_topk(
             qs, base, C, model, k=2, nprobe=2)),
         ("the first row's", lambda: knn.brute_force_knn(qs, base, k=2)),
+        # the anchors are checked in the collect that carries their labels
+        ("the first row's", lambda: knn.mine_semihard_negatives(
+            qs.withColumn("label", F.lit(0)),
+            base.withColumn("label", F.lit(0)), k=2)),
         ("the model's", lambda: pq.adc_topk(qs, base, model, k=2)),
         # the batch is checked before the walk reads the graph
         ("the first row's", lambda: graph.greedy_search(None, base, qs, k=2)),
@@ -445,6 +449,16 @@ def test_ivf_serving_rejects_bad_query_batches(spark, tiny_index, rows, match):
             ValueError, match=match.replace("the centroids'", dim_of)
         ):
             call()
+
+
+def test_ivf_topk_gemm_rejects_other_metrics(spark, tiny_index):
+    """The gemm cell scan scores squared L2 only; any other metric is
+    refused before the batch is collected, not silently scored as L2."""
+    path, _, C = tiny_index
+    base = spark.read.parquet(path)
+    for metric in ("cosine", "dot", "l2"):
+        with pytest.raises(ValueError, match=f"not '{metric}'"):
+            ivf.ivf_topk(base, base, C, k=2, metric=metric, impl="gemm")
 
 
 def test_persisted_search_empty_batch_returns_empty_frame(spark, tiny_index):

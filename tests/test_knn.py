@@ -3,6 +3,7 @@ FIXTURES.md: ascending distances, self-nearest, topK <= N, determinism)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -522,3 +523,84 @@ def test_semihard_all_anchors_unpositive_returns_empty(spark):
     assert [f.name for f in out.schema.fields] == [
         "query_id", "vec_id", "pos_margin", "dist", "rank",
     ]
+
+
+# --- exact ties at the top-k cut ------------------------------------------
+
+# 40 identical integer vectors (every gemm term exact, so all 40 tie
+# exactly) under shuffled ids 100..139, plus one far vector, id 200.
+# Every Python-side cut must keep the lowest ids among exact ties, the
+# (dist, vec_id) order the final window promises.
+_TIE_IDS = [int(i) for i in np.random.default_rng(7).permutation(40) + 100]
+_FAR = (200, [-5.0, -5.0, -5.0, -5.0], 0)
+
+
+@pytest.fixture(scope="module")
+def tie_df(spark):
+    rows = [(i, [1.0, 1.0, 1.0, 1.0], 1) for i in _TIE_IDS] + [_FAR]
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).coalesce(1)
+
+
+def _lowest_others(src, k):
+    return [i for i in sorted(_TIE_IDS) if i != src][:k]
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["l2_sqr-1", "l2_sqr-3", "cosine-1", "cosine-3",
+     "knn_graph", "knn_graph_blocked", "semihard"],
+)
+def test_exact_ties_keep_lowest_ids(spark, tie_df, case):
+    from vector_search_spark.operators import graph
+
+    if case in ("knn_graph", "knn_graph_blocked"):
+        if case == "knn_graph":
+            g = knn.knn_graph(tie_df, k=2, impl="gemm")
+        else:
+            C = np.array([[1.0] * 4, [-5.0] * 4])
+            g = graph.knn_graph_blocked(tie_df, C, k=2, nprobe=2)
+        got = {}
+        for r in g.orderBy("src", "rank").collect():
+            got.setdefault(r.src, []).append(r.dst)
+        want = {s: _lowest_others(s, 2) for s in _TIE_IDS + [200]}
+        assert got == want
+        return
+    if case == "semihard":
+        # anchor label 0: its positive is the far vector (d = 4), every
+        # one of the 40 label-1 rows is a negative at d = 100
+        anchor = spark.createDataFrame(
+            [(999, [-4.0, -4.0, -4.0, -4.0], 0)],
+            "vec_id long, embedding array<float>, label int",
+        )
+        out = knn.mine_semihard_negatives(anchor, tie_df, k=3)
+        want = sorted(_TIE_IDS)[:3]
+    else:
+        metric, k = case.split("-")
+        q = spark.createDataFrame(
+            [(0, [2.0, 2.0, 2.0, 2.0])], "vec_id long, embedding array<float>"
+        )
+        out = knn.brute_force_knn(q, tie_df, k=int(k), metric=metric)
+        want = sorted(_TIE_IDS)[: int(k)]
+    assert [r.vec_id for r in out.orderBy("rank").collect()] == want
+
+
+def test_topk_rows_hand_tiles():
+    """``knn._topk_rows`` on hand-built tiles: (row, col) pairs sorted
+    by row, distance, then id; only finite entries survive."""
+    inf, nan = np.inf, np.nan
+    vids = np.array([5, 3, 9, 1])
+    # ties at the k-th slot: the lowest id among the tied wins
+    D = np.array([[1.0, 2.0, 2.0, 2.0], [2.0, 2.0, 0.5, 2.0]])
+    qi, vj = knn._topk_rows(vids, D, 2)
+    assert list(zip(qi, vj)) == [(0, 0), (0, 3), (1, 2), (1, 3)]
+    # inf and NaN never survive; fewer finite entries than k
+    D = np.array([[nan, inf, 3.0, 1.0], [nan, nan, nan, nan]])
+    qi, vj = knn._topk_rows(vids, D, 3)
+    assert list(zip(qi, vj)) == [(0, 3), (0, 2)]
+    # k >= the tile width: every finite entry, in (dist, id) order
+    D = np.array([[4.0, 4.0, 1.0, inf]])
+    for k in (4, 9):
+        qi, vj = knn._topk_rows(vids, D, k)
+        assert list(zip(qi, vj)) == [(0, 2), (0, 1), (0, 0)]

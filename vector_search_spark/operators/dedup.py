@@ -36,7 +36,6 @@ __all__ = [
     "shingle_table",
     "minhash_signatures",
     "minhash_signatures_wide",
-    "lsh_buckets",
     "lsh_buckets_wide",
     "lsh_candidate_pairs",
     "pair_jaccard",
@@ -175,7 +174,7 @@ def minhash_signatures_wide(
     sh: DataFrame, num_perms: int, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, h0..h{P-1}) one row per doc — the columnar signature form
-    shared by minhash_signatures and lsh_buckets."""
+    shared by minhash_signatures and lsh_buckets_wide."""
     return sh.groupBy(id_col).agg(
         *[
             F.min(
@@ -186,28 +185,14 @@ def minhash_signatures_wide(
     )
 
 
-def lsh_buckets(
-    sigs: DataFrame, rows_per_band: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Band the signature: bucket key = md5 of the band's minhashes in
-    perm order. Returns (id, band, key)."""
-    banded = sigs.withColumn("band", (F.col("perm") / rows_per_band).cast("int"))
-    ordered = F.transform(
-        F.array_sort(F.collect_list(F.struct("perm", "minh"))),
-        lambda s: s["minh"],
-    )
-    return banded.groupBy(id_col, "band").agg(
-        F.md5(F.array_join(ordered, "|")).alias("key")
-    )
-
-
 def lsh_buckets_wide(
     wide: DataFrame,
     rows_per_band: int,
     num_perms: int,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """lsh_buckets from the wide signature form: band keys are row-local
+    """LSH banding of the wide signature form: (id, band, key), band
+    keys md5 of the band's minhashes in perm order, built as row-local
     concat+md5 expressions — zero additional shuffle."""
     n_bands = num_perms // rows_per_band
     keys = F.array(
@@ -775,6 +760,8 @@ def embedding_near_dup(
     import pandas as pd
 
     from vector_search_spark.functions.distance import as_double_array
+    from vector_search_spark.operators.kmeans import _batch_vectors
+    from vector_search_spark.operators.knn import _unit_rows
 
     if centroids is not None:
         from vector_search_spark.operators.graph import route_to_cells
@@ -794,14 +781,7 @@ def embedding_near_dup(
             B = np.vstack(home["v"].to_numpy())
             sid = pdf["vec_id"].to_numpy(dtype=np.int64)
             bid = home["vec_id"].to_numpy(dtype=np.int64)
-
-            def normalize(M):
-                n = np.linalg.norm(M, axis=1)
-                return np.divide(
-                    M, n[:, None], out=np.zeros_like(M), where=n[:, None] != 0
-                )
-
-            C = normalize(S) @ normalize(B).T
+            C = _unit_rows(S) @ _unit_rows(B).T
             ii, jj = np.nonzero(
                 (C >= threshold) & (sid[:, None] != bid[None, :])
             )
@@ -828,9 +808,7 @@ def embedding_near_dup(
         F.col(id_col).alias("_id"), as_double_array(vec_col).alias("_v")
     ).toPandas()
     ids = pdf["_id"].to_numpy(dtype=np.int64)
-    M = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-    nrm = np.linalg.norm(M, axis=1)
-    Mn = np.divide(M, nrm[:, None], out=np.zeros_like(M), where=nrm[:, None] != 0)
+    Mn = _unit_rows(np.vstack(pdf["_v"].to_numpy()).astype(np.float64))
     bc = emb.sparkSession.sparkContext.broadcast((ids, Mn))
 
     src = emb.select(
@@ -839,14 +817,9 @@ def embedding_near_dup(
 
     def fn(batches):
         b_ids, b_Mn = bc.value
-        for pdf_ in batches:
-            if not len(pdf_):
-                continue
+        for pdf_, A in _batch_vectors(batches):
             aid = pdf_["a"].to_numpy(dtype=np.int64)
-            A = np.vstack(pdf_["_v"].to_numpy()).astype(np.float64)
-            an = np.linalg.norm(A, axis=1)
-            An = np.divide(A, an[:, None], out=np.zeros_like(A), where=an[:, None] != 0)
-            S = An @ b_Mn.T
+            S = _unit_rows(A) @ b_Mn.T
             ii, jj = np.nonzero((S >= threshold) & (aid[:, None] < b_ids[None, :]))
             yield pd.DataFrame(
                 {"a": aid[ii], "b": b_ids[jj], "cos_sim": S[ii, jj]}
@@ -1031,6 +1004,7 @@ def semantic_dedup(
     import pandas as pd
 
     from vector_search_spark.operators import kmeans
+    from vector_search_spark.operators.knn import _unit_rows
 
     assigned = kmeans.assign(
         emb, centroids, id_col=id_col, vec_col=vec_col, with_vec=True
@@ -1041,9 +1015,7 @@ def semantic_dedup(
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         order = np.argsort(ids)
         ids = ids[order]
-        M = np.vstack(pdf["_v"].to_numpy()[order]).astype(np.float64)
-        n = np.linalg.norm(M, axis=1)
-        Mn = np.divide(M, n[:, None], out=np.zeros_like(M), where=n[:, None] != 0)
+        Mn = _unit_rows(np.vstack(pdf["_v"].to_numpy()[order]).astype(np.float64))
         C = Mn @ Mn.T
         # dropped iff similar to any strictly-lower-id row (upper
         # triangle, column-wise any)

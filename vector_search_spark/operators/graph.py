@@ -46,7 +46,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from functools import reduce
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
@@ -179,6 +179,51 @@ def route_to_cells(
     )
 
 
+_CELL_COLS = {"layer": np.int32, "src": np.int64, "dst": np.int64,
+              "dist": np.float64}
+
+
+def _cell_candidates(pdf: pd.DataFrame, kk: int) -> pd.DataFrame:
+    """THE per-cell kernel of the blocked graph builds, one
+    ``route_to_cells`` cell in: ``(layer, src, dst, dist)``, per layer
+    each routed row's ``kk`` nearest home rows (self excluded, lowest
+    ``dst`` among exact ties). Layer-l node sets are nested (level >=
+    l), so one gemm serves every layer and each layer cuts the
+    submatrix of members with ``level >= l``; a cell without a
+    ``level`` column is one layer, 0 (:func:`knn_graph_blocked`)."""
+    home = pdf[pdf["probe_rank"] == 0]
+    if not len(home):
+        return pd.DataFrame({c: [] for c in _CELL_COLS}).astype(_CELL_COLS)
+    sid = pdf["vec_id"].to_numpy(dtype=np.int64)
+    bid = home["vec_id"].to_numpy(dtype=np.int64)
+    D = knn._gemm_batch_dists(
+        "l2_sqr", np.vstack(pdf["v"].to_numpy()), np.vstack(home["v"].to_numpy())
+    )
+    D[sid[:, None] == bid[None, :]] = np.inf
+    lev = "level" in pdf
+    slev = pdf["level"].to_numpy(dtype=np.int64) if lev else np.zeros(len(sid))
+    blev = home["level"].to_numpy(dtype=np.int64) if lev else np.zeros(len(bid))
+    frames = []
+    for layer in range(int(max(slev.max(), blev.max())) + 1):
+        rs = np.nonzero(slev >= layer)[0]
+        cs = np.nonzero(blev >= layer)[0]
+        if not len(rs) or not len(cs):
+            continue
+        Dl = D[np.ix_(rs, cs)]
+        qi, vj = knn._topk_rows(bid[cs], Dl, kk)
+        frames.append(
+            pd.DataFrame(
+                {
+                    "layer": np.full(len(qi), layer, dtype=np.int32),
+                    "src": sid[rs[qi]],
+                    "dst": bid[cs[vj]],
+                    "dist": Dl[qi, vj],
+                }
+            )
+        )
+    return pd.concat(frames, ignore_index=True)
+
+
 def knn_graph_blocked(
     points: DataFrame,
     centroids: np.ndarray,
@@ -195,45 +240,7 @@ def knn_graph_blocked(
     kk = k + 4  # per-cell pad absorbs cross-cell dedup
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(
-                {"src": [], "dst": [], "dist": []}
-            ).astype({"src": np.int64, "dst": np.int64, "dist": np.float64})
-        home = pdf[pdf["probe_rank"] == 0]
-        if not len(home):
-            return pd.DataFrame(
-                {"src": [], "dst": [], "dist": []}
-            ).astype({"src": np.int64, "dst": np.int64, "dist": np.float64})
-        S = np.vstack(pdf["v"].to_numpy())
-        B = np.vstack(home["v"].to_numpy())
-        sid = pdf["vec_id"].to_numpy(dtype=np.int64)
-        bid = home["vec_id"].to_numpy(dtype=np.int64)
-        D = (
-            (S * S).sum(axis=1)[:, None]
-            + (B * B).sum(axis=1)[None, :]
-            - 2.0 * (S @ B.T)
-        )
-        np.maximum(D, 0.0, out=D)  # gemm cancellation can dip below 0
-        D[sid[:, None] == bid[None, :]] = np.inf
-        m = min(kk, D.shape[1])
-        cand = np.argpartition(D, m - 1, axis=1)[:, :m] if m < D.shape[1] else (
-            np.broadcast_to(np.arange(D.shape[1]), D.shape)
-        )
-        out_s, out_d, out_x = [], [], []
-        for i in range(len(sid)):
-            cj = cand[i]
-            dj = D[i, cj]
-            fin = np.isfinite(dj)
-            out_s.append(np.full(fin.sum(), sid[i]))
-            out_d.append(bid[cj][fin])
-            out_x.append(dj[fin])
-        return pd.DataFrame(
-            {
-                "src": np.concatenate(out_s),
-                "dst": np.concatenate(out_d),
-                "dist": np.concatenate(out_x),
-            }
-        )
+        return _cell_candidates(pdf, kk).drop(columns="layer")
 
     scored = routed.groupBy("cell").applyInPandas(
         per_cell, "src long, dst long, dist double"
@@ -601,13 +608,10 @@ def hnsw_build(
     if m_l is None:
         m_l = 1.0 / np.log(m)
 
-    # Single-pass layered candidate generation. Layer-l node sets are
-    # NESTED (level >= l), so one gemm per cell serves every layer: the
-    # full routed×home distance matrix is computed once, then each layer
-    # reads the submatrix of members with level >= l. Equivalent to
-    # running knn_graph_blocked per layer (routing is per-point, so
-    # filtering routed rows == routing the filtered subset) but with one
-    # shuffle pipeline instead of one per layer.
+    # Single-pass layered candidate generation: knn_graph_blocked's
+    # per-cell kernel (_cell_candidates) over every layer at once.
+    # Routing is per-point, so filtering routed rows == routing the
+    # filtered subset: one shuffle pipeline instead of one per layer.
     #
     # The level draw rides through the routing pass (carry_cols) and the
     # routed relation is checkpointed ONCE: the level probe, the edge
@@ -638,66 +642,9 @@ def hnsw_build(
     bound = _size_bound(seen.get["nl"] or 0, seen.get["n"], m, centroids.shape[1])
     kk = ef_construction + 4  # per-cell pad absorbs cross-cell dedup
 
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"layer": [], "src": [], "dst": [], "dist": []}
-        ).astype(
-            {"layer": np.int32, "src": np.int64, "dst": np.int64,
-             "dist": np.float64}
-        )
-        if not len(pdf):
-            return empty
-        home = pdf[pdf["probe_rank"] == 0]
-        if not len(home):
-            return empty
-        S = np.vstack(pdf["v"].to_numpy())
-        B = np.vstack(home["v"].to_numpy())
-        sid = pdf["vec_id"].to_numpy(dtype=np.int64)
-        bid = home["vec_id"].to_numpy(dtype=np.int64)
-        slev = pdf["level"].to_numpy(dtype=np.int64)
-        blev = home["level"].to_numpy(dtype=np.int64)
-        D = (
-            (S * S).sum(axis=1)[:, None]
-            + (B * B).sum(axis=1)[None, :]
-            - 2.0 * (S @ B.T)
-        )
-        np.maximum(D, 0.0, out=D)  # gemm cancellation can dip below 0
-        D[sid[:, None] == bid[None, :]] = np.inf
-        frames = []
-        for layer in range(int(max(slev.max(), blev.max())) + 1):
-            rs = np.nonzero(slev >= layer)[0]
-            cs = np.nonzero(blev >= layer)[0]
-            if not len(rs) or not len(cs):
-                continue
-            Dl = D[np.ix_(rs, cs)]
-            m_ = min(kk, Dl.shape[1])
-            cand = (
-                np.argpartition(Dl, m_ - 1, axis=1)[:, :m_]
-                if m_ < Dl.shape[1]
-                else np.broadcast_to(
-                    np.arange(Dl.shape[1]), (Dl.shape[0], Dl.shape[1])
-                )
-            )
-            dj = np.take_along_axis(Dl, cand, axis=1)
-            fin = np.isfinite(dj)
-            if not fin.any():
-                continue
-            src_f = np.repeat(sid[rs], cand.shape[1]).reshape(cand.shape)
-            dst_f = bid[cs[cand]]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "layer": np.full(int(fin.sum()), layer, dtype=np.int32),
-                        "src": src_f[fin],
-                        "dst": dst_f[fin],
-                        "dist": dj[fin],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True) if frames else empty
-
     scored = routed.groupBy("cell").applyInPandas(
-        per_cell, "layer int, src long, dst long, dist double"
+        partial(_cell_candidates, kk=kk),
+        "layer int, src long, dst long, dist double",
     )
     # cross-cell dedup + top-ef_construction + diversity pruning fused
     # into one salted-bucket pass (see select_neighbors_heuristic)

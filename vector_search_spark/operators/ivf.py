@@ -26,7 +26,7 @@ Every serving function here is one pipeline, written once:
    join (:func:`_routed_scores`) or by BLAS gemm; PQ codes by ADC
    lookup-table gathers (``pq._adc_lut``). Both gemm and ADC run in
    the one per-cell ``mapInPandas`` scan, :func:`_cell_scan`.
-3. **cut** — top-k (per-tile partial top-k, ``pq._topk_rows``, then
+3. **cut** — top-k (per-tile partial top-k, ``knn._topk_rows``, then
    the exact ``topk_per_query`` window) or radius (a row-local
    ``dist <= radius`` filter that streams out with no shuffle).
 4. **re-score** (optional) — the ``*_refined`` forms join the ADC
@@ -62,6 +62,7 @@ from vector_search_spark.operators.knn import (
     _contract_join,
     _gemm_batch_dists,
     _query_side,
+    _topk_rows,
     topk_per_query,
 )
 
@@ -274,7 +275,7 @@ def _cell_scan(
     per-cell query state. Each Arrow batch is grouped by cell;
     ``score(state, payload_series)`` returns the dense (nq_cell x
     rows) distance tile and ``cut(vids, D)`` the (row, col) pairs to
-    emit — ``pq._topk_rows`` for top-k, a radius mask for range.
+    emit — ``knn._topk_rows`` for top-k, a radius mask for range.
 
     EXECUTOR MEMORY BOUND: one tile per (cell, Arrow batch) —
     ``nq_cell`` x ``cell_rows_in_batch`` float64, with ``nq_cell`` the
@@ -319,12 +320,12 @@ def _cell_scan(
     return src.mapInPandas(fn, "query_id long, vec_id long, dist double")
 
 
-def _flat_scores(state, vecs) -> np.ndarray:
+def _flat_scores(Q, vecs) -> np.ndarray:
     """gemm scorer for :func:`_cell_scan`: squared L2 of the cell's
-    queries (``state = (Q, ||Q||^2)``) against its raw vectors."""
-    Q, qn2 = state
-    B = np.vstack(vecs.to_numpy()).astype(np.float64)
-    return _gemm_batch_dists("l2_sqr", Q, qn2, B)
+    query matrix ``Q`` against its raw vectors."""
+    return _gemm_batch_dists(
+        "l2_sqr", Q, np.vstack(vecs.to_numpy()).astype(np.float64)
+    )
 
 
 def _radius_rows(vids, D, radius: float):
@@ -364,7 +365,8 @@ def ivf_topk(
     surviving partitions (:func:`_cell_scan`): each Arrow batch is
     grouped by cell and scored against just that cell's queries,
     emitting per-batch partial top-k. Use when (routed candidates x
-    queries) is compute-bound. It always scores ``l2_sqr``.
+    queries) is compute-bound. It scores ``l2_sqr`` only; any other
+    ``metric`` raises a ValueError.
     """
     if impl == "expr":
         return topk_per_query(
@@ -377,15 +379,15 @@ def ivf_topk(
         )
     if impl != "gemm":
         raise ValueError(f"unknown impl {impl!r}")
+    if metric != "l2_sqr":
+        raise ValueError(f"impl='gemm' scores l2_sqr only, not {metric!r}")
     qids, Q, cells = _route_batch(
         queries, centroids, nprobe, query_id_col, query_vec_col
     )
-    qn2 = (Q * Q).sum(axis=1)
-    cell_to_q = {c: (qi, (Q[qi], qn2[qi])) for c, qi in cells.items()}
     scored = _cell_scan(
         assigned_base, base_id_col, as_double_array(base_vec_col),
-        cluster_col, qids, cell_to_q, _flat_scores,
-        partial(_pq._topk_rows, k=k),
+        cluster_col, qids, {c: (qi, Q[qi]) for c, qi in cells.items()},
+        _flat_scores, partial(_topk_rows, k=k),
     )
     return topk_per_query(scored, k)
 
@@ -540,7 +542,7 @@ def ivf_adc_topk(
     """
     scored = _adc_scan(
         queries, codes, centroids, model, nprobe, residual,
-        partial(_pq._topk_rows, k=k), query_id_col, query_vec_col,
+        partial(_topk_rows, k=k), query_id_col, query_vec_col,
         id_col, code_col, cluster_col,
     )
     return topk_per_query(scored, k)

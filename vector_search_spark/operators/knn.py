@@ -42,13 +42,16 @@ from vector_search_spark.functions.distance import (
     dot,
     norm,
 )
+from vector_search_spark.operators import kmeans as _kmeans
 
 
-def _query_side(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """``(query_id, _qv)``: the query batch as every path reads it, its
-    vectors widened to array<double>."""
+def _query_side(queries: DataFrame, id_col: str, vec_col: str, *carry) -> DataFrame:
+    """``(query_id, _qv, *carry)``: the query batch as every path reads
+    it, its vectors widened to array<double>."""
     return queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("_qv")
+        F.col(id_col).alias("query_id"),
+        as_double_array(vec_col).alias("_qv"),
+        *carry,
     )
 
 
@@ -151,7 +154,23 @@ def _collect_batch(
     """THE driver collect of a caller-bounded ``(query id, vector)``
     batch — ivf routing, pq ADC tables, the graph walk and the gemm
     scan all collect through here. Returns ``(qids, Q)``, ``Q`` the
-    (nq, D) float64 query matrix.
+    (nq, D) float64 query matrix; the rows are checked by
+    :func:`_checked_batch`."""
+    return _checked_batch(
+        _query_side(queries, id_col, vec_col).toPandas(),
+        dim, dim_of, empty_ok, what,
+    )
+
+
+def _checked_batch(
+    qpdf: pd.DataFrame,
+    dim: int | None = None,
+    dim_of: str = "the first row's",
+    empty_ok: bool = False,
+    what: str = "query",
+):
+    """``(qids, Q)`` of a collected :func:`_query_side` frame (extra
+    columns, such as mining labels, may ride along in the same collect).
 
     A bad batch raises a ValueError naming the query: a NULL id, an id
     seen earlier in the batch, a NULL vector, a dimension other than
@@ -161,7 +180,6 @@ def _collect_batch(
     truncate (``zip``) or misorder (NaN sort keys) them and the gemm
     emits NaN. An empty batch raises ``"empty query set"`` unless
     ``empty_ok``."""
-    qpdf = _query_side(queries, id_col, vec_col).toPandas()
     vecs = qpdf["_qv"]
     if not len(qpdf) and not empty_ok:
         raise ValueError("empty query set")
@@ -217,29 +235,72 @@ def _contract_join(
     )
 
 
-def _gemm_batch_dists(metric: str, Qm, qn2, B):
-    """(nq x nb) distance matrix for one Arrow batch — THE shared gemm
-    kernel (score_topk_gemm + mine_semihard_negatives use this one
-    definition; a numerical fix lands once).
+def _unit_rows(M: np.ndarray) -> np.ndarray:
+    """``M`` with each row scaled to unit L2 norm; an all-zero row
+    stays zero (the cosine convention: similarity 0, never NaN)."""
+    n = np.linalg.norm(M, axis=1)[:, None]
+    return np.divide(M, n, out=np.zeros_like(M), where=n != 0)
 
-    ``Qm`` is the query matrix (L2-normalized rows for cosine), ``qn2``
-    the precomputed ||q||^2 (l2 metrics only). L2 uses the
-    ||a||^2+||b||^2-2ab expansion, which cancels catastrophically near
-    0 and can go slightly negative — clamped so self-distance is 0;
-    callers needing exact near-zero values re-derive survivors with the
-    cancellation-free (a-b)^2 form.
-    """
+
+def _gemm_batch_dists(metric: str, Q: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(nq x nb) distance tile of the raw query matrix ``Q`` against
+    one batch matrix ``B`` — THE Python-side BLAS kernel: every gemm
+    scorer (the exact scan, semi-hard mining, the IVF cell scan, the
+    blocked graph builds, the streaming scorer) calls this one.
+
+    L2 is :func:`kmeans._sq_dists` clamped at 0: the expansion cancels
+    catastrophically near 0 and can dip below it, and the clamp makes
+    a self-distance 0. Callers needing exact near-zero values re-derive
+    the survivors with :func:`_sq_diff`. Cosine is ``1 - cos`` of the
+    :func:`_unit_rows` rows; dot is negated (smaller == closer).
+
+    Kept apart on purpose: the exact (a-b)^2 replays
+    (``graph._DriverWalk.scored``, ``graph._broadcast_query_scorer``,
+    ``hnsw_sharded.LocalHNSW._d``, the pruning matrix of
+    ``graph.select_neighbors_heuristic``) score a few candidates with
+    the cancellation-free kernel of the walk or fold they reproduce, so
+    no gemm expansion may enter them; ``kmeans._nearest`` takes an
+    unclamped argmin (a clamp would merge near-zero distances into
+    ties); and the cosine thresholds (``dedup.embedding_near_dup``, ``dedup.semantic_dedup``,
+    ``ranking.mmr_rerank``) compare similarities, not ``1 - cos``
+    distances — 1 - (1 - x) != x in floats — so they share only
+    :func:`_unit_rows`."""
     if metric in ("l2_sqr", "l2"):
-        D = qn2[:, None] + (B * B).sum(axis=1)[None, :] - 2.0 * (Qm @ B.T)
-        D = np.maximum(D, 0.0)
-        if metric == "l2":
-            D = np.sqrt(D)
-        return D
+        D = np.maximum(_kmeans._sq_dists(Q, B), 0.0)
+        return np.sqrt(D) if metric == "l2" else D
     if metric == "cosine":
-        bn = np.linalg.norm(B, axis=1)
-        Bn = np.divide(B, bn[:, None], out=np.zeros_like(B), where=bn[:, None] != 0)
-        return 1.0 - (Qm @ Bn.T)
-    return -(Qm @ B.T)  # dot (negated: smaller == closer)
+        return 1.0 - (_unit_rows(Q) @ _unit_rows(B).T)
+    return -(Q @ B.T)
+
+
+def _sq_diff(Q: np.ndarray, B: np.ndarray, qi, vj) -> np.ndarray:
+    """Cancellation-free ``(a-b)^2`` of the (row ``qi``, column ``vj``)
+    pairs of a :func:`_gemm_batch_dists` tile — the exact kernel a cut's
+    survivors are re-scored with (identical vectors -> exactly 0, as
+    the reference (py/test_hnsw.py:395-407) and the SQL oracle demand)."""
+    diff = B[vj] - Q[qi]
+    return (diff * diff).sum(axis=1)
+
+
+def _topk_rows(vids: np.ndarray, D: np.ndarray, k: int):
+    """THE per-row top-``k`` cut of a distance tile: ``(row, col)``
+    index pairs of each row's ``k`` smallest finite distances, sorted
+    by row, then distance, ties broken by ascending ``vids`` — the order
+    :func:`topk_per_query` promises. Every candidate tied with the
+    k-th distance survives the partition step, so an exact tie at the
+    cut can never drop the lowest id; a per-batch cut is then exact
+    under the global order and the final window's merge is exact."""
+    kth = (
+        np.partition(D, k - 1, axis=1)[:, k - 1 : k]
+        if k < D.shape[1]
+        else np.inf
+    )
+    qi, vj = np.nonzero(~(D > kth))
+    d = D[qi, vj]
+    order = np.lexsort((vids[vj], d, qi))
+    qi, vj, d = qi[order], vj[order], d[order]
+    keep = (np.arange(len(qi)) - np.searchsorted(qi, qi) < k) & np.isfinite(d)
+    return qi[keep], vj[keep]
 
 
 def score_topk_gemm(
@@ -264,13 +325,14 @@ def score_topk_gemm(
        side of a join, but as a dense float64 ndarray;
     2. one ``mapInPandas`` pass over base: per Arrow batch, a single
        float64 gemm scores the whole batch against all queries
-       (||q||^2 + ||b||^2 - 2 Q.B^T for L2; normalized rows for cosine);
-    3. emits only the per-batch top-(k+pad) rows per query, so the
-       shuffle input is ~batches x Q x k rows, never N x Q.
+       (:func:`_gemm_batch_dists`);
+    3. emits only the per-batch top-k rows per query
+       (:func:`_topk_rows`), so the shuffle input is ~batches x Q x k
+       rows, never N x Q.
 
     The exact global top-k window afterwards (topk_per_query) makes the
-    per-batch cut a safe partial reduction. ``pad`` absorbs distance
-    ties at the cut boundary (only exact-duplicate vectors can tie).
+    per-batch cut a safe partial reduction: the cut keeps the lowest
+    ids among exact ties, so it is exact under the window's order.
 
     Scale: one streaming pass over base, zero shuffle of score rows,
     compute in BLAS — this is the shape that survives a 1000-executor
@@ -281,80 +343,39 @@ def score_topk_gemm(
 
     Returns ``(query_id, vec_id, dist)`` (partial — feed topk_per_query).
     """
-    qids, Q = _collect_batch(queries, query_id_col, query_vec_col)
-    if metric == "cosine":
-        qn = np.linalg.norm(Q, axis=1)
-        Qn = np.divide(Q, qn[:, None], out=np.zeros_like(Q), where=qn[:, None] != 0)
-        payload = (qids, Qn, None)
-    elif metric in ("l2_sqr", "l2"):
-        payload = (qids, Q, (Q * Q).sum(axis=1))
-    elif metric == "dot":
-        payload = (qids, Q, None)
-    else:
+    if metric not in ("l2_sqr", "l2", "cosine", "dot"):
         raise ValueError(f"unknown metric {metric!r}")
-
-    bc = queries.sparkSession.sparkContext.broadcast(payload)
+    qids, Q = _collect_batch(queries, query_id_col, query_vec_col)
+    bc = queries.sparkSession.sparkContext.broadcast((qids, Q))
     b = base.select(
         F.col(base_id_col).alias("vec_id"),
         as_double_array(base_vec_col).alias("bv"),
     )
     pad = 8
-    kk = k + pad
 
     def fn(batches):
-        b_qids, b_Q, b_qn2 = bc.value
-        nq = len(b_qids)
-        for pdf in batches:
-            if not len(pdf):
-                continue
+        b_qids, b_Q = bc.value
+        for pdf, B in _kmeans._batch_vectors(batches, "bv"):
             vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            B = np.vstack(pdf["bv"].to_numpy()).astype(np.float64)
-            D = _gemm_batch_dists(metric, b_Q, b_qn2, B)
+            D = _gemm_batch_dists(metric, b_Q, B)
             if exclude_self:
                 D[b_qids[:, None] == vids[None, :]] = np.inf
-            # NOTE: the k+pad candidate CUT ranks by the gemm distances
-            # while the reported values use the exact (a-b)^2 recompute;
-            # a near-tie exactly at the cut boundary is resolved by the
-            # approximate values (relative error ~1e-15). The pad hides,
-            # not eliminates, that boundary — only exact-duplicate
-            # vectors can tie closely enough for it to matter.
-            m = min(kk, D.shape[1])
-            if m < D.shape[1]:
-                cand = np.argpartition(D, m - 1, axis=1)[:, :m]
-            else:
-                cand = np.broadcast_to(np.arange(D.shape[1]), (nq, D.shape[1]))
             if metric in ("l2_sqr", "l2"):
-                # re-derive the kept distances with the cancellation-free
-                # (a-b)^2 form: the gemm expansion is off by ~1e-16 near
-                # zero, and the reference invariant (identical vectors ->
-                # distance exactly 0, py/test_hnsw.py:395-407) plus the
-                # element-wise SQL oracle both demand the exact kernel.
-                # Cost: nq x kk x d on just the survivors.
-                diff = B[cand] - b_Q[:, None, :]
-                Dk = (diff * diff).sum(axis=2)
-                if metric == "l2":
-                    Dk = np.sqrt(Dk)
-                if exclude_self:
-                    Dk[b_qids[:, None] == vids[cand]] = np.inf
-            else:
-                Dk = None
-            rows_q, rows_v, rows_d = [], [], []
-            for i in range(nq):
-                cj = cand[i]
-                dj = D[i, cj] if Dk is None else Dk[i]
-                order = np.lexsort((vids[cj], dj))[:k]
-                keep = cj[order]
-                dk = dj[order]
-                fin = np.isfinite(dk)
-                rows_q.append(np.full(fin.sum(), b_qids[i]))
-                rows_v.append(vids[keep][fin])
-                rows_d.append(dk[fin])
+                # cut k+pad by the gemm values, then re-score the
+                # survivors with the exact (a-b)^2 kernel and cut k:
+                # the gemm expansion is off by ~1e-16 near zero, and the
+                # reference invariant (identical vectors -> distance
+                # exactly 0) plus the element-wise SQL oracle both
+                # demand the exact kernel. A near-tie within ~1e-15 of
+                # the k+pad boundary is still resolved by the gemm
+                # values; the pad hides, not removes, that boundary.
+                qi, vj = _topk_rows(vids, D, k + pad)
+                X = np.full(D.shape, np.inf)
+                X[qi, vj] = _sq_diff(b_Q, B, qi, vj)
+                D = np.sqrt(X) if metric == "l2" else X
+            qi, vj = _topk_rows(vids, D, k)
             yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(rows_q),
-                    "vec_id": np.concatenate(rows_v),
-                    "dist": np.concatenate(rows_d),
-                }
+                {"query_id": b_qids[qi], "vec_id": vids[vj], "dist": D[qi, vj]}
             )
 
     return b.mapInPandas(fn, "query_id long, vec_id long, dist double")
@@ -729,25 +750,14 @@ def mine_semihard_negatives(
     """
     if metric not in ("l2_sqr", "cosine"):
         raise ValueError(f"unsupported metric {metric!r}")
-    qpdf = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double_array(query_vec_col).alias("qv"),
-        F.col(label_col).alias("qlab"),
+    qpdf = _query_side(
+        queries, query_id_col, query_vec_col, F.col(label_col).alias("qlab")
     ).toPandas()
-    if not len(qpdf):
-        raise ValueError("empty query set")
-    qids = qpdf["query_id"].to_numpy(dtype=np.int64)
+    qids, Q = _checked_batch(qpdf)
     qlabs = qpdf["qlab"].to_numpy()
-    Q = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-    if metric == "cosine":
-        qn = np.linalg.norm(Q, axis=1)
-        Qm = np.divide(Q, qn[:, None], out=np.zeros_like(Q), where=qn[:, None] != 0)
-        qn2 = None
-    else:
-        Qm, qn2 = Q, (Q * Q).sum(axis=1)
 
     sc = queries.sparkSession.sparkContext
-    bc_q = sc.broadcast((qids, qlabs, Qm, qn2))
+    bc_q = sc.broadcast((qids, qlabs, Q))
     b = base.select(
         F.col(base_id_col).alias("vec_id"),
         as_double_array(base_vec_col).alias("bv"),
@@ -755,43 +765,32 @@ def mine_semihard_negatives(
     )
     scale = float(10 ** round_digits)
 
-    def _exact_l2(Qm_w, B, cand):
-        """Cancellation-free (a-b)^2 for the (nq x m) candidate gather
-        — vectorized across all anchors (the score_topk_gemm shape).
-        Returns None for cosine (the gemm IS the definition there)."""
-        if metric == "cosine":
-            return None
-        diff = B[cand] - Qm_w[:, None, :]
-        return (diff * diff).sum(axis=2)
+    def cut(Q_w, B, vids, Dm, kk):
+        """The ``kk`` best (anchor, row) pairs of a masked tile by the
+        gemm values, and their distances: exact (a-b)^2 re-scores for
+        l2, the gemm value itself for cosine."""
+        qi, vj = _topk_rows(vids, Dm, kk)
+        ex = Dm[qi, vj] if metric == "cosine" else _sq_diff(Q_w, B, qi, vj)
+        return qi, vj, ex
 
     # Pass A: per-batch partial closest-positive min per anchor (RAW —
     # the single authoritative F.round happens in the aggregate below).
     def margins_fn(batches):
-        b_qids, b_qlabs, Qm_w, qn2_w = bc_q.value
-        nq = len(b_qids)
-        for pdf in batches:
-            if not len(pdf):
-                continue
+        b_qids, b_qlabs, Q_w = bc_q.value
+        for pdf, B in _kmeans._batch_vectors(batches, "bv"):
             vids = pdf["vec_id"].to_numpy(dtype=np.int64)
             blabs = pdf["blab"].to_numpy()
-            B = np.vstack(pdf["bv"].to_numpy()).astype(np.float64)
-            D = _gemm_batch_dists(metric, Qm_w, qn2_w, B)
+            D = _gemm_batch_dists(metric, Q_w, B)
             mask = (b_qlabs[:, None] == blabs[None, :]) & (
                 b_qids[:, None] != vids[None, :]
             )
-            Dm = np.where(mask, D, np.inf)
             # top few by gemm, exact-recomputed, so the emitted partial
             # min is the exact kernel's value (boundary-tie safe)
-            m = min(4, Dm.shape[1])
-            cand = np.argpartition(Dm, m - 1, axis=1)[:, :m]
-            Dmg = np.take_along_axis(Dm, cand, axis=1)
-            ex = _exact_l2(Qm_w, B, cand)
-            vals = np.where(np.isfinite(Dmg), Dmg if ex is None else ex, np.inf)
-            mins = vals.min(axis=1)
+            qi, _, ex = cut(Q_w, B, vids, np.where(mask, D, np.inf), 4)
+            mins = np.full(len(b_qids), np.inf)
+            np.minimum.at(mins, qi, ex)
             fin = np.isfinite(mins)
-            yield pd.DataFrame(
-                {"query_id": b_qids[fin], "m": mins[fin]}
-            )
+            yield pd.DataFrame({"query_id": b_qids[fin], "m": mins[fin]})
 
     mpdf = (
         b.mapInPandas(margins_fn, "query_id long, m double")
@@ -815,16 +814,12 @@ def mine_semihard_negatives(
 
     # Pass B: strict margin-cut different-label top-(k+pad) per batch.
     def neg_fn(batches):
-        b_qids, b_qlabs, Qm_w, qn2_w = bc_q.value
+        b_qids, b_qlabs, Q_w = bc_q.value
         b_marr = bc_m.value
-        nq = len(b_qids)
-        for pdf in batches:
-            if not len(pdf):
-                continue
+        for pdf, B in _kmeans._batch_vectors(batches, "bv"):
             vids = pdf["vec_id"].to_numpy(dtype=np.int64)
             blabs = pdf["blab"].to_numpy()
-            B = np.vstack(pdf["bv"].to_numpy()).astype(np.float64)
-            D = _gemm_batch_dists(metric, Qm_w, qn2_w, B)
+            D = _gemm_batch_dists(metric, Q_w, B)
             # strict in-batch cut on surrogate-rounded gemm values: at-
             # margin junk is EXCLUDED here, so it cannot starve the kk
             # candidate slots of valid beyond-margin rows
@@ -833,35 +828,12 @@ def mine_semihard_negatives(
                 mask = (b_qlabs[:, None] != blabs[None, :]) & (
                     Dr > b_marr[:, None]
                 )
-            Dm = np.where(mask, D, np.inf)
-            m = min(kk, Dm.shape[1])
-            cand = np.argpartition(Dm, m - 1, axis=1)[:, :m]
-            Dmg = np.take_along_axis(Dm, cand, axis=1)
-            ex = _exact_l2(Qm_w, B, cand)
-            vals = np.where(np.isfinite(Dmg), Dmg if ex is None else ex, np.inf)
-            # order candidates per anchor by (surrogate-rounded exact
-            # value, vec_id) and emit ALL kk survivors — the pad rides
-            # to the exact plan-side re-round + re-filter + window
-            vr = np.floor(vals * scale + 0.5) / scale
-            rows_q, rows_v, rows_d = [], [], []
-            for i in range(nq):
-                fin = np.isfinite(vr[i])
-                if not fin.any():
-                    continue
-                cj = cand[i][fin]
-                dj = vals[i][fin]
-                rj = vr[i][fin]
-                order = np.lexsort((vids[cj], rj))
-                rows_q.append(np.full(len(order), b_qids[i]))
-                rows_v.append(vids[cj[order]])
-                rows_d.append(dj[order])
-            if rows_q:
+            # emit ALL kk survivors with their RAW distances — the pad
+            # rides to the exact plan-side re-round + re-filter + window
+            qi, vj, ex = cut(Q_w, B, vids, np.where(mask, D, np.inf), kk)
+            if len(qi):
                 yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(rows_q),
-                        "vec_id": np.concatenate(rows_v),
-                        "dist": np.concatenate(rows_d),
-                    }
+                    {"query_id": b_qids[qi], "vec_id": vids[vj], "dist": ex}
                 )
 
     scored = b.mapInPandas(

@@ -36,7 +36,11 @@ from vector_search_spark.functions.distance import as_double_array
 from vector_search_spark.operators import bq as _bq
 from vector_search_spark.operators import kmeans as _kmeans
 from vector_search_spark.operators.bq import random_rotation  # noqa: F401
-from vector_search_spark.operators.knn import _collect_batch, topk_per_query
+from vector_search_spark.operators.knn import (
+    _collect_batch,
+    _topk_rows,
+    topk_per_query,
+)
 
 
 @dataclass
@@ -255,25 +259,6 @@ def _adc_scores(lut: np.ndarray, codes) -> np.ndarray:
     for mi in range(lut.shape[1]):
         D += lut[:, mi, cm[:, mi]]
     return D
-
-
-def _topk_rows(vids: np.ndarray, D: np.ndarray, k: int):
-    """Per-row top-``k`` cut of a distance tile: ``(row, col)`` index
-    pairs of each row's ``k`` smallest finite distances, ties broken by
-    ascending ``vids`` — the order :func:`knn.topk_per_query` promises.
-    Every candidate tied with the k-th distance survives the partition
-    step, so an exact tie at the cut can never drop the lowest id."""
-    kth = (
-        np.partition(D, k - 1, axis=1)[:, k - 1 : k]
-        if k < D.shape[1]
-        else np.inf
-    )
-    qi, vj = np.nonzero(~(D > kth))
-    d = D[qi, vj]
-    order = np.lexsort((vids[vj], d, qi))
-    qi, vj, d = qi[order], vj[order], d[order]
-    keep = (np.arange(len(qi)) - np.searchsorted(qi, qi) < k) & np.isfinite(d)
-    return qi[keep], vj[keep]
 
 
 def _lut_topk(

@@ -220,6 +220,7 @@ def mmr_rerank(
     import pandas as pd
 
     from vector_search_spark.functions.distance import as_double_array
+    from vector_search_spark.operators.knn import _unit_rows
 
     cand = candidates.join(
         vectors.select(
@@ -231,11 +232,7 @@ def mmr_rerank(
     def per_query(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf[item_id].to_numpy(dtype=np.int64)
         rel = pdf[rel_col].to_numpy(dtype=np.float64)
-        M = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-        n = np.linalg.norm(M, axis=1)
-        Mn = np.divide(
-            M, n[:, None], out=np.zeros_like(M), where=n[:, None] != 0
-        )
+        Mn = _unit_rows(np.vstack(pdf["_v"].to_numpy()).astype(np.float64))
         S = Mn @ Mn.T
         n_pick = min(k, len(ids))
         max_sim = None  # true max over picked — may be negative, no floor

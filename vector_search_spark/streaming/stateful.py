@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from vector_search_spark.functions.distance import as_double_array
+from vector_search_spark.operators import kmeans, knn
 
 __all__ = [
     "score_stream",
@@ -55,23 +56,15 @@ def score_stream(
 
     def fn(batches):
         qids, QM = bc.value
-        qn2 = (QM * QM).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+        for pdf, X in kmeans._batch_vectors(batches, "v"):
             vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            D = (
-                qn2[:, None]
-                + (X * X).sum(axis=1)[None, :]
-                - 2.0 * (QM @ X.T)
-            )
+            D = knn._gemm_batch_dists("l2_sqr", QM, X)
             nq, nb = D.shape
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(qids, nb),
                     "vec_id": np.tile(vids, nq),
-                    "dist": np.maximum(D.reshape(-1), 0.0),
+                    "dist": D.reshape(-1),
                 }
             )
 
